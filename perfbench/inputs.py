@@ -20,17 +20,28 @@ import pandas as pd
 FILE_EVENTS = 10_000
 WORDS_PER_DOC = 80
 
-# incremental_ingest: documents / embeddings shaped like the registry's
-# sf0.1 tables (short texts over a ~30-word vocabulary, unit 64-d vectors)
+# incremental_ingest: documents / embeddings drawn from the distributions
+# measured on the registry's sf0.1 tables. sf0.1 `documents`: 5000 rows,
+# each text 10..99 words (uniform, mean 54) drawn uniformly from the
+# 30-word vocabulary below; 5% of the rows (250) are a copy of another row
+# with the token "dup" inserted at one position. sf0.1 `embeddings`: 2000
+# unit-norm float32 64-d vectors, statistically i.i.d. normal (median
+# nearest-neighbour cosine 0.41). The row counts here are a fifth of sf0.1
+# and the batch sizes scale with them: at full sf0.1 one run took 139 s on a
+# 4-core x86 box (base ingest 44 s, two 500-document rounds of 23 s, DuckDB
+# oracle check 28 s), too long for ten-run sweeps of every workload.
 N_DOCS = 1_000
 N_VECS = 400
+WORDS_MIN, WORDS_MAX = 10, 99
 _VOCAB = (
     "key agg row scan slow fast table value part hash spark window merge "
     "column data line sort batch order join query group customer filter "
     "small big stream vector a the"
 ).split()
-#: share of documents planted as a one-word edit of an earlier document
-NEAR_DUP_SHARE = 0.04
+#: share of documents planted as a near duplicate of another document
+NEAR_DUP_SHARE = 0.05
+DUP_TOKEN = "dup"
+VEC_DIM = 64
 
 
 def cache_root(checkout: str) -> str:
@@ -76,29 +87,38 @@ def incremental_tables(checkout: str, seed: int) -> tuple[str, float]:
     """``documents.parquet`` (doc_id, text) and ``embeddings.parquet``
     (vec_id, embedding). Ids are dense and ascending, as the ingest's
     monotone-id contract requires."""
-    path = os.path.join(cache_root(checkout), f"incremental-{seed}-{N_DOCS}-{N_VECS}")
+    path = os.path.join(cache_root(checkout), f"incremental-v2-{seed}-{N_DOCS}-{N_VECS}")
 
     def build(tmp: str) -> None:
         rng = np.random.default_rng(seed)
-        vocab = np.asarray(_VOCAB)
-        texts: list[str] = []
-        for i in range(N_DOCS):
-            if i > 10 and rng.random() < NEAR_DUP_SHARE:
-                words = texts[int(rng.integers(0, i))].split()
-                words[int(rng.integers(0, len(words)))] = str(rng.choice(vocab))
-                texts.append(" ".join(words))
-            else:
-                texts.append(" ".join(rng.choice(vocab, size=int(rng.integers(10, 100)))))
         pd.DataFrame(
-            {"doc_id": np.arange(N_DOCS, dtype=np.int64), "text": texts}
+            {"doc_id": np.arange(N_DOCS, dtype=np.int64), "text": doc_texts(rng, N_DOCS)}
         ).to_parquet(os.path.join(tmp, "documents.parquet"), index=False)
-        x = rng.standard_normal((N_VECS, 64)).astype(np.float32)
+        x = rng.standard_normal((N_VECS, VEC_DIM)).astype(np.float32)
         x /= np.linalg.norm(x, axis=1, keepdims=True)
         pd.DataFrame(
             {"vec_id": np.arange(N_VECS, dtype=np.int64), "embedding": list(x)}
         ).to_parquet(os.path.join(tmp, "embeddings.parquet"), index=False)
 
     return path, _cached(path, build)
+
+
+def doc_texts(rng, n: int) -> list[str]:
+    """``n`` texts: uniform-length word draws from the vocabulary, then
+    ``NEAR_DUP_SHARE`` of the positions overwritten by a copy of another
+    (original) text with ``DUP_TOKEN`` inserted at one position."""
+    vocab = np.asarray(_VOCAB)
+    words = [
+        list(rng.choice(vocab, size=int(rng.integers(WORDS_MIN, WORDS_MAX + 1))))
+        for _ in range(n)
+    ]
+    dups = set(rng.choice(n, size=int(n * NEAR_DUP_SHARE), replace=False).tolist())
+    originals = np.asarray([i for i in range(n) if i not in dups])
+    for i in sorted(dups):
+        src = list(words[int(rng.choice(originals))])
+        src.insert(int(rng.integers(0, len(src) + 1)), DUP_TOKEN)
+        words[i] = src
+    return [" ".join(w) for w in words]
 
 
 def bulk_stream(checkout: str, seed: int, n_events: int) -> tuple[str, float]:

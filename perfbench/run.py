@@ -22,17 +22,15 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 import time
 
 CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOADS = ("tail_live", "incremental_ingest")
-#: starting-state builds per run; setup_s reports their median
-SETUP_REPEATS = 3
 #: reduced shapes of the traced run (per-layer numbers only)
-TRACED_WARMUP_FILES = 3
-TRACED_TAIL_FILES = 3
+TRACED_TAIL_FILES = 2
 TRACED_BATCHES = 1
 
 
@@ -113,22 +111,23 @@ def run_tail_live(spark, work, seed, seconds, session_s) -> tuple[dict, dict]:
     from perfbench.stats import median
 
     src, gen_s = inputs.tail_files(CHECKOUT, seed, w.tail_files_needed(seconds))
-    builds = []
-    for r in range(SETUP_REPEATS):
-        t0 = time.monotonic()
-        pipe = w.build_tail_table(spark, os.path.join(work, f"pages{r}"))
-        builds.append(time.monotonic() - t0)
+    t0 = time.monotonic()
+    pipe = w.build_tail_table(spark, os.path.join(work, "pages"))
+    build_s = time.monotonic() - t0
     res = w.run_tail(spark, pipe, os.path.join(work, "tail"), src, w.measured_files(seconds))
     chk = w.check_tail_table(spark, pipe.table_path, src, res["n_lsn"])
     if not res["freshness_s"]:
         raise RuntimeError("no measured file committed")
     failed = res["attempted"] - res["committed"] if chk["ok"] else res["attempted"]
     metrics = {
-        "setup_s": session_s + median(builds),
+        # the starting state of the measured window: the table after the
+        # warm-up files, built by the engine's own stream
+        "setup_s": session_s + build_s + res["warmup_s"],
         "op_p50_ms": median(res["freshness_s"]) * 1000.0,
     }
     detail = {
-        "gen_s": gen_s, "session_s": session_s, "builds_s": builds,
+        "gen_s": gen_s, "session_s": session_s, "build_s": build_s,
+        "warmup_s": res["warmup_s"],
         "freshness_ms": [round(x * 1000, 1) for x in res["freshness_s"]],
         "freshness_tail": tail_percentile(res["freshness_s"]),
         "events_per_apply_s": res["events_applied"] / sum(res["apply_walls_s"]),
@@ -145,11 +144,9 @@ def run_incremental_ingest(spark, work, seed, seconds, session_s) -> tuple[dict,
     from perfbench.stats import median
 
     src, gen_s = inputs.incremental_tables(CHECKOUT, seed)
-    builds = []
-    for r in range(SETUP_REPEATS):
-        t0 = time.monotonic()
-        indexes = w.build_indexes(spark, os.path.join(work, f"indexes{r}"))
-        builds.append(time.monotonic() - t0)
+    t0 = time.monotonic()
+    indexes = w.build_indexes(spark, os.path.join(work, "indexes"))
+    build_s = time.monotonic() - t0
     k = w.batches_for(seconds)
     res = w.run_incremental(spark, indexes, src, k)
     t0 = time.monotonic()
@@ -157,14 +154,16 @@ def run_incremental_ingest(spark, work, seed, seconds, session_s) -> tuple[dict,
     check_s = time.monotonic() - t0
     failed = k * sum(1 for v in ok.values() if not v)
     metrics = {
-        "setup_s": session_s + median(builds),
+        # the starting state: empty index pairs, then each family's base batch
+        "setup_s": session_s + build_s + res["setup_s"],
         "op_p50_ms": median(res["rounds"]) * 1000.0,
     }
     detail = {
-        "gen_s": gen_s, "session_s": session_s, "builds_s": builds,
+        "gen_s": gen_s, "session_s": session_s, "build_s": build_s,
         "base_s": res["base_s"], "rounds_s": res["rounds"],
         "items_per_ingest_s": res["items"] / sum(res["rounds"]),
         "batch_s": res["walls"], "check": ok, "check_s": check_s,
+        "dedup_bridges": sum(len(r["bridges"]) for r in res["results"]["dedup"]),
     }
     return {"attempted": k * len(w.FAMILIES), "failed": failed, "metrics": metrics}, detail
 
@@ -182,16 +181,15 @@ def run_traced(spark, work, workload, seed, seconds) -> tuple[dict, dict]:
     from perfbench.stats import median
     from perfbench.trace import Tracer
 
-    t_run = time.monotonic()
     tracer = Tracer(spark, f"pb{seed}")
     tracer.install()
     m: dict = {}
     try:
-        # -- tail_live, reduced: TRACED_WARMUP_FILES + TRACED_TAIL_FILES files
+        # -- tail_live, reduced: WARMUP_FILES + TRACED_TAIL_FILES files
         tail_src, _ = inputs.tail_files(CHECKOUT, seed, w.tail_files_needed(seconds))
         pipe = w.build_tail_table(spark, os.path.join(work, "pages"))
         tail = w.run_tail(spark, pipe, os.path.join(work, "tail"), tail_src,
-                          TRACED_TAIL_FILES, warmup=TRACED_WARMUP_FILES)
+                          TRACED_TAIL_FILES)
         chk = w.check_tail_table(spark, pipe.table_path, tail_src, tail["n_lsn"])
         if not chk["ok"]:
             raise RuntimeError(f"tail check failed: {chk}")
@@ -210,7 +208,7 @@ def run_traced(spark, work, workload, seed, seconds) -> tuple[dict, dict]:
     tracer.harvest()
 
     # -- cdc: the measured (post-warm-up) micro-batches
-    W = TRACED_WARMUP_FILES
+    W = w.WARMUP_FILES
     applies = tracer.by_name("cdc.apply")[W:]
     lineages = [out for _a, _b, out in pipe.applies[W:]]
     writes = tracer.by_name("lakehouse.append_delta_buckets")[W:]
@@ -239,23 +237,26 @@ def run_traced(spark, work, workload, seed, seconds) -> tuple[dict, dict]:
         m[k] = probes[k]
 
     # -- lakehouse
+    def walls(name):
+        return [s["end"] - s["start"] for s in tracer.by_name(name)]
+
     m["lakehouse.append_delta_s"] = median([s["end"] - s["start"] for s in writes])
-    m["lakehouse.append_buckets_s"] = median(
-        [s["end"] - s["start"] for s in tracer.by_name("lakehouse.append_buckets")]
-    )
-    m["lakehouse.compact_s"] = median(
-        [s["end"] - s["start"] for s in tracer.by_name("lakehouse.compact")]
-    )
-    m["lakehouse.files_written"] = reads["files"]
+    m["lakehouse.append_buckets_s"] = median(walls("lakehouse.append_buckets"))
+    # replace_buckets runs in every compaction and in the index writes
+    m["lakehouse.replace_buckets_s"] = median(walls("lakehouse.replace_buckets"))
+    m["lakehouse.compact_s"] = median(walls("lakehouse.compact"))
+    m["lakehouse.compactions"] = len(walls("lakehouse.compact"))
+    # delta files one measured micro-batch added
+    m["lakehouse.files_written"] = median([s["files_added"] for s in writes])
     m["lakehouse.files_per_bucket_max"] = reads["files_per_bucket_max"]
     lookups = tracer.by_name("lakehouse.lookup")[1:]
     lk = [tracer.tree_stats(s) for s in lookups]
     m["lakehouse.lookup.p50_ms"] = median(reads["lookup_walls_s"]) * 1000
-    m["lakehouse.lookup.files_scanned"] = reads["files_per_bucket_mean"]
+    m["lakehouse.lookup.files_scanned"] = median(reads["lookup_files"])
     m["lakehouse.lookup.jobs"] = median([t["jobs"] for t in lk])
     m["lakehouse.lookup.driver_only_ms"] = median([t["driver_only_s"] for t in lk]) * 1000
     scan = tracer.tree_stats(tracer.by_name("lakehouse.read")[-1])
-    m["lakehouse.read.files"] = reads["files"]
+    m["lakehouse.read.files"] = reads["scan_files"]
     m["lakehouse.read.shuffle_bytes"] = scan["shuffle_bytes"]
     m["lakehouse.read.rows_per_s"] = reads["scan_rows"] / reads["scan_s"]
 
@@ -299,13 +300,20 @@ def run_traced(spark, work, workload, seed, seconds) -> tuple[dict, dict]:
 
     m["tail.generator_late_ms_max"] = max(tail["late_s"], default=0.0) * 1000
     m["tail.backlog_max_files"] = max(tail["backlog"], default=0)
-    m["trace.overhead_ratio"] = tracer.overhead_s / (time.monotonic() - t_run)
+    # the same lookups inside a span and its job group ÷ outside
+    m["trace.overhead_ratio"] = (
+        median(reads["lookup_traced_walls_s"]) / median(reads["lookup_walls_s"])
+    )
 
-    attempted = tail["attempted"] + TRACED_BATCHES * len(w.FAMILIES)
+    attempted = tail["attempted"] + reads["lookups"] + TRACED_BATCHES * len(w.FAMILIES)
     failed = (tail["attempted"] - tail["committed"]) + reads["wrong"]
     failed += TRACED_BATCHES * sum(1 for v in inc_ok.values() if not v)
     detail = {"tail_check": chk, "incremental_check": inc_ok,
               "freshness_ms": [round(x * 1000, 1) for x in tail["freshness_s"]],
+              # compare with the untraced tail_live op_p50_ms of the same seed
+              "freshness_p50_ms_traced": median(tail["freshness_s"]) * 1000.0,
+              "lookup_ms": [round(x * 1000, 1) for x in reads["lookup_walls_s"]],
+              "lookup_traced_ms": [round(x * 1000, 1) for x in reads["lookup_traced_walls_s"]],
               "lookup_tail": tail_percentile(reads["lookup_walls_s"])}
     write_spans(tracer, workload, seed, detail)
     return {"attempted": attempted, "failed": min(failed, attempted), "metrics": m}, detail
@@ -342,8 +350,14 @@ def main(argv=None) -> int:
     work = os.path.join(CHECKOUT, ".perfbench", f"run-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     prepare_env(work)
-    from perfbench.box import calibrate
+    from perfbench.box import calibrate, cpu_ticks, steal_share
+    from perfbench.procs import become_subreaper, reap_all
 
+    become_subreaper()
+    # a termination request unwinds through the finally blocks below, which
+    # stop the JVM and end every child
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    ticks = cpu_ticks()
     try:
         cal_pre = calibrate(cpus())
         t0 = time.monotonic()
@@ -361,12 +375,16 @@ def main(argv=None) -> int:
             stop_spark(spark)
         cal_post = calibrate(cpus())
     finally:
+        procs_left = reap_all()
         shutil.rmtree(work, ignore_errors=True)
     cal = {"pre_s": cal_pre, "post_s": cal_post,
-           "cal_ratio": max(cal_pre, cal_post) / min(cal_pre, cal_post)}
+           "cal_ratio": max(cal_pre, cal_post) / min(cal_pre, cal_post),
+           "steal_share": steal_share(ticks, cpu_ticks())}
     detail["box"] = cal
+    detail["procs_left"] = procs_left
     if args.trace:
         result["metrics"]["box.cal_ratio"] = cal["cal_ratio"]
+        result["metrics"]["box.steal_share"] = cal["steal_share"]
     print(json.dumps({"workload": args.workload, "seed": args.seed, "detail": detail},
                       default=float))
     units = _units(bool(args.trace))

@@ -81,3 +81,21 @@ def test_amdahl_fit():
     # T(k) = s + p / k through (1, 10) and (4, 4): p = 8, s = 2
     assert serial == pytest.approx(2.0)
     assert eff == pytest.approx(10.0 / 16.0)
+
+
+def test_doc_texts_follow_the_measured_sf01_shape():
+    import numpy as np
+
+    from perfbench import inputs
+
+    texts = inputs.doc_texts(np.random.default_rng(5), 2000)
+    originals = {t for t in texts if inputs.DUP_TOKEN not in t.split()}
+    dups = [t.split() for t in texts if inputs.DUP_TOKEN in t.split()]
+    assert len(dups) == 2000 * inputs.NEAR_DUP_SHARE
+    for words in dups:  # an original text with the token inserted once
+        words.remove(inputs.DUP_TOKEN)
+        assert " ".join(words) in originals
+    lengths = [len(t.split()) for t in originals]
+    assert min(lengths) >= inputs.WORDS_MIN and max(lengths) <= inputs.WORDS_MAX
+    assert {w for t in originals for w in t.split()} <= set(inputs._VOCAB)
+    assert texts == inputs.doc_texts(np.random.default_rng(5), 2000)

@@ -27,7 +27,6 @@ class Tracer:
         self.sc = spark.sparkContext
         self.run_id = run_id
         self.spans: list[dict] = []
-        self.overhead_s = 0.0
         self._ids = itertools.count()
         self._local = threading.local()
         self._undo: list = []
@@ -42,15 +41,18 @@ class Tracer:
     def span(self, name: str):
         return _Span(self, name)
 
-    def wrap(self, owner, attr: str, name: str) -> None:
+    def wrap(self, owner, attr: str, name: str, note=None) -> None:
         """Replace ``owner.attr`` with a spanned version (undone by
-        ``uninstall``)."""
+        ``uninstall``). ``note(result)`` returns fields to add to the span."""
         orig = getattr(owner, attr)
         tracer = self
 
         def wrapped(*args, **kwargs):
-            with tracer.span(name):
-                return orig(*args, **kwargs)
+            with tracer.span(name) as rec:
+                out = orig(*args, **kwargs)
+                if note is not None:
+                    rec.update(note(out))
+                return out
 
         wrapped.__wrapped__ = orig
         setattr(owner, attr, wrapped)
@@ -62,8 +64,11 @@ class Tracer:
         from migration_pair_spark.operators import incremental as inc
 
         self.wrap(runner, "apply_cdc_batch", "cdc.apply")
-        for meth in ("replace_buckets", "append_delta_buckets", "append_buckets", "compact"):
+        for meth in ("replace_buckets", "append_buckets", "compact"):
             self.wrap(LakeTable, meth, f"lakehouse.{meth}")
+        # append_delta_buckets returns (version, relpaths of the added files)
+        self.wrap(LakeTable, "append_delta_buckets", "lakehouse.append_delta_buckets",
+                  note=lambda out: {"files_added": len(out[1])})
         self.wrap(inc.IncrementalDeduper, "ingest", "operators.incremental.dedup")
         self.wrap(inc.IncrementalChunkIndex, "ingest", "operators.incremental.chunk")
         self.wrap(inc.IncrementalEmbeddingIndex, "ingest", "operators.incremental.embedding")
@@ -77,7 +82,6 @@ class Tracer:
 
     def harvest(self) -> None:
         """Attach Spark job/stage metrics and self times to every span."""
-        t0 = time.monotonic()
         time.sleep(0.5)  # let the listener bus deliver the last stage events
         tracker = self.sc.statusTracker()
         store = self.sc._jsc.sc().statusStore()
@@ -109,7 +113,6 @@ class Tracer:
                 s["stage_intervals"] + children.get(s["id"], []), s["start"], s["end"]
             )
             s["driver_only_s"] = (s["end"] - s["start"]) - union_length(busy)
-        self.overhead_s += time.monotonic() - t0
 
     def by_name(self, name: str) -> list[dict]:
         return [s for s in self.spans if s["name"] == name]
@@ -146,7 +149,6 @@ class _Span:
 
     def __enter__(self):
         t = self.t
-        b0 = time.monotonic()
         stack = t._stack()
         sid = next(t._ids)
         self.rec = {
@@ -159,7 +161,6 @@ class _Span:
         self.prev_group = t.sc.getLocalProperty(_GROUP_PROP)
         t.sc.setLocalProperty(_GROUP_PROP, self.rec["group"])
         stack.append(self.rec)
-        t.overhead_s += time.monotonic() - b0
         # wall-clock epoch seconds: comparable with Spark's stage timestamps
         self.rec["start"] = time.time()
         return self.rec
@@ -167,11 +168,9 @@ class _Span:
     def __exit__(self, *exc):
         t = self.t
         self.rec["end"] = time.time()
-        b0 = time.monotonic()
         t._stack().pop()
         t.sc.setLocalProperty(_GROUP_PROP, self.prev_group)
         t.spans.append(self.rec)
-        t.overhead_s += time.monotonic() - b0
         return False
 
 
