@@ -798,8 +798,10 @@ class LakeTable:
                 op = "rescale"
             elif "schema_evolution" in lin:
                 op = "evolve"
-            elif "dedup_ingest" in lin or "emb_ingest" in lin:
+            elif lin.keys() & {"dedup_ingest", "emb_ingest", "chunk_ingest"}:
                 op = "dedup-ingest"
+            elif lin.keys() & {"dedup_heal", "emb_heal", "chunk_heal"}:
+                op = "dedup-heal"
             elif "batch_id" in lin:
                 op = "cdc-apply"
             else:

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MINHASH_SEEDS = [f"s{i}" for i in range(8)]
 # Default banding: 2 bands x 4 rows. P(candidate) = 1-(1-j^4)^2 — steep
@@ -310,15 +311,22 @@ def jaccard_verify(
     return out
 
 
-def _union_find_labels(rows, cap: int) -> "dict[int, int] | None":
+def union_find(
+    edges, seen_max: "int | None" = None
+) -> "tuple[dict[int, int], list[tuple[int, int]]]":
     """Driver-side connected components over collected (a, b) edge rows:
-    {node: component minimum} with path compression and min-root unions.
-    Returns None when ``rows`` overflowed the cap (caller falls back to the
-    distributed loop). Iterative find — chain-shaped clusters build parent
-    chains deeper than Python's recursion limit well inside the cap."""
-    if len(rows) > cap:
-        return None
+    ({node: component minimum}, bridges), with path compression and
+    min-root unions (labels match dedup_clusters'). Iterative find —
+    chain-shaped clusters build parent chains deeper than Python's
+    recursion limit well inside DRIVER_CC_MAX_EDGES.
+
+    Bridge tracking is on only when ``seen_max`` is given: a union joining
+    two components that each already hold a SEEN node (id <= seen_max)
+    records the pair of their minimum seen nodes; ``bridges`` is sorted
+    and empty otherwise."""
     parent: dict[int, int] = {}
+    seen: dict[int, int] = {}  # root -> min seen node of its component
+    bridges: set[tuple[int, int]] = set()
 
     def find(x: int) -> int:
         root = x
@@ -328,14 +336,47 @@ def _union_find_labels(rows, cap: int) -> "dict[int, int] | None":
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        ra, rb = find(int(r[0])), find(int(r[1]))
+    for a, b in edges:
+        a, b = int(a), int(b)
+        ra, rb = find(a), find(b)
+        if seen_max is not None:
+            for x, r in ((a, ra), (b, rb)):
+                if x <= seen_max:
+                    seen[r] = min(seen.get(r, x), x)
         if ra == rb:
             continue
         if rb < ra:
             ra, rb = rb, ra
         parent[rb] = ra
-    return {x: find(x) for x in list(parent)}
+        sb = seen.pop(rb, None)
+        if sb is not None:
+            sa = seen.setdefault(ra, sb)
+            if sa != sb:
+                bridges.add((min(sa, sb), max(sa, sb)))
+                seen[ra] = min(sa, sb)
+    return {x: find(x) for x in list(parent)}, sorted(bridges)
+
+
+def attach_labels(
+    docs: DataFrame, id_col: str, labels: "dict[int, int]"
+) -> DataFrame:
+    """(id_col, keeper_doc_id) for every row of ``docs`` from a driver-side
+    {id: label} map (ids missing from it keep themselves): one broadcast
+    join against the non-identity entries, none when there are none."""
+    mapping = [(int(d), int(k)) for d, k in labels.items() if k != d]
+    if not mapping:
+        return docs.select(id_col, F.col(id_col).alias("keeper_doc_id"))
+    map_df = docs.sparkSession.createDataFrame(
+        mapping, f"{id_col} long, _cc_label long"
+    )
+    return (
+        docs.select(id_col)
+        .join(F.broadcast(map_df), id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(F.col("_cc_label"), F.col(id_col)).alias("keeper_doc_id"),
+        )
+    )
 
 
 #: duplicate-edge sets at or below this size resolve components with ONE
@@ -344,8 +385,8 @@ def _union_find_labels(rows, cap: int) -> "dict[int, int] | None":
 #: minima). The loop costs O(log diameter) ROUNDS, each an eager
 #: localCheckpoint job + joins + a driver count (~12-15 jobs for typical
 #: graphs) — pure fixed overhead when the edge set fits on the driver.
-#: Same policy and default as IncrementalDeduper.driver_cc_max_edges;
-#: <= 0 forces the distributed path (tests pin both paths identical).
+#: Also IncrementalDeduper.driver_cc_max_edges' default; <= 0 forces the
+#: distributed path (tests pin both paths identical).
 DRIVER_CC_MAX_EDGES = 500_000
 
 
@@ -363,12 +404,12 @@ def dedup_clusters(
     document (singletons keep themselves); rows with keeper != self are the
     drop set.
 
-    Execution: below ``driver_cc_max_edges`` the edge set is collected
-    (bounded by limit cap+1 — overflow falls through) and resolved with a
-    driver union-find: ONE job over the pair pipeline instead of the
-    round-based loop, and the upstream candidates/verify lineage runs
-    exactly once (the loop's seed checkpoint ran it twice via the
-    edge-direction union). Above the cap: iterative min-label propagation
+    Execution: below ``driver_cc_max_edges`` (and for integral pair
+    columns) the edge set is collected (bounded by limit cap+1 — overflow
+    falls through) and resolved with a driver union-find: ONE job over the
+    pair pipeline instead of the round-based loop, and the upstream
+    candidates/verify lineage runs exactly once (the loop's seed checkpoint
+    ran it twice via the edge-direction union). Above the cap: iterative min-label propagation
     with joins + aggregates only (no GraphX / no RDDs). Per round every
     node takes the min of its own label, its neighbors' labels, AND its
     label's label (POINTER DOUBLING — the label-of-label shortcut halves
@@ -381,38 +422,22 @@ def dedup_clusters(
     per round (bounded, like the CDC gate stats). ``stats``, when given,
     records {"rounds": n} (0 = driver path). Both paths produce identical
     keepers (pinned in tests/test_operators.py)."""
-    if driver_cc_max_edges and driver_cc_max_edges > 0:
+    # the driver map holds longs: other id types (strings, fractions) would
+    # fail the cast or truncate, so they keep the type-generic loop
+    integral = all(
+        isinstance(f.dataType, T.IntegralType)
+        for f in pairs.select("doc_a", "doc_b").schema
+    )
+    if integral and driver_cc_max_edges and driver_cc_max_edges > 0:
         head = (
-            pairs.select(
-                F.col("doc_a").cast("long"), F.col("doc_b").cast("long")
-            )
+            pairs.select("doc_a", "doc_b")
             .limit(driver_cc_max_edges + 1)
             .collect()
         )
-        labels_map = _union_find_labels(head, driver_cc_max_edges)
-        if labels_map is not None:
+        if len(head) <= driver_cc_max_edges:
             if stats is not None:
                 stats["rounds"] = 0
-            mapping = [
-                (int(d), int(k)) for d, k in labels_map.items() if k != d
-            ]
-            if not mapping:
-                return docs.select(
-                    id_col, F.col(id_col).alias("keeper_doc_id")
-                )
-            map_df = docs.sparkSession.createDataFrame(
-                mapping, f"{id_col} long, _cc_label long"
-            )
-            return (
-                docs.select(id_col)
-                .join(F.broadcast(map_df), id_col, "left")
-                .select(
-                    id_col,
-                    F.coalesce(F.col("_cc_label"), F.col(id_col)).alias(
-                        "keeper_doc_id"
-                    ),
-                )
-            )
+            return attach_labels(docs, id_col, union_find(head)[0])
     # localCheckpoint (eager) per round: iterative algorithms MUST truncate
     # lineage, or round k replays rounds 1..k-1 and the plan grows without
     # bound; checkpointed blocks are reclaimed by the context cleaner.

@@ -1,86 +1,99 @@
-"""Incremental near-duplicate detection against a PERSISTED signature index.
+"""Incremental deduplication against PERSISTED indexes: one gated index-pair
+core and the three index families built on it.
 
-Batch dedup (operators/dedup.py) recomputes shingles and MinHash signatures
-for the whole corpus every run — fine for one-shot curation, wrong for the
-operational loop at 100 TB: "1 TB of new documents arrives daily into an
-already-deduped corpus". This module persists the LSH band rows as a
-LakeTable and signs/probes ONLY the new batch:
+Batch dedup (operators/dedup.py) recomputes every signature of the whole
+corpus per run — fine for one-shot curation, wrong for the operational loop
+at 100 TB: "1 TB of new documents arrives daily into an already-deduped
+corpus". Each family here persists a (data, index) pair of LakeTables and
+signs/probes ONLY the new batch.
 
-    new docs -> shingle -> sign -> band        O(batch): narrow + 1 shuffle
-    band rows JOIN index on bucket_key         new x index, bucket-pruned —
-                                               NEVER index x index
-    candidates -> fetch candidate text         bucket-pruned corpus read
-               -> exact Jaccard verify         candidate pairs only
-    all new docs + band rows appended          gated, idempotent commits
+Class map:
 
-Scale shape: the index table is keyed by the LSH bucket string, so a probe
-touches only the lake buckets the new batch's band rows hash into — the
-index-side SCAN opens those buckets' files and nothing else (file-level
-pin in tests/test_incremental_dedup.py). Driver state stays O(n_buckets):
-the only collects are two bounded bucket-id sets, one batch-stats row, the
-replay gate, and (below the configurable cap) the verified duplicate-edge
-set of the batch.
+    _IndexPair                   the core. Loads/creates the table pair;
+                                 runs the exactly-once gate, the ingest
+                                 skeleton (sizing, AQE off, scoped shuffle
+                                 width, persisted intermediates), the data
+                                 commit, the index append (shared by ingest
+                                 and heal), the bucket-pruned index probe and
+                                 data fetch, auto-compaction, and the
+                                 purge-time "index lags" refusal.
+    IncrementalDeduper           text near-dups: MinHash LSH band rows, exact
+                                 Jaccard verify, frozen-label keepers.
+    IncrementalEmbeddingIndex    embedding near-dups: SRP bucket rows, exact
+                                 quantized cosine verify.
+    IncrementalChunkIndex        exact span dedup: newly seen chunk keys,
+                                 docs rewritten to corpus-wide first
+                                 occurrences.
 
-HOT-BUCKET GUARD: a web-scale boilerplate cluster of m near-identical docs
-collapses into a single LSH band bucket, and an uncapped probe join emits
-O(m^2) candidates before any verify. Index-side buckets holding more than
-``dedup.max_bucket`` rows therefore contribute only ONE exemplar row (the
-minimum seen doc id) to the probe join — new docs still meet the cluster
-(via its exemplar) and are still collapsed into it by the keeper
-substitution, but candidate volume stays linear in the batch. Recall
-contract: within an over-cap bucket, pairwise candidate enumeration is
-reduced to exemplar edges; a bucket that hot IS a near-identical cluster
-(every member agreed on a full MinHash band), so cluster membership —
-the thing dedup consumes — is preserved whenever the exemplar verifies.
-The batch-side new x new join applies the same policy via
-``dedup.lsh_candidate_pairs(max_bucket=...)``. Pinned on a planted
-mega-cluster fixture in tests/test_hot_bucket.py.
+A family supplies only its schemas, properties and bloom columns,
+``index_rows(df)`` (what a batch of its data adds to the index, used by
+heal) and ``_process`` (its probe/verify/resolve body). One ingest is:
 
-Semantic contract (pinned by the two-sequential-runs == one-batch-run test):
+    new rows -> gate                        one bounded stats job
+             -> sign / chunk the batch      O(batch): narrow + 1 shuffle
+             -> probe the index             new x index, bucket-pruned —
+                                            NEVER index x index
+             -> fetch candidate data        bucket-pruned data read
+             -> verify / resolve            candidate pairs only
+             -> data commit, index append   gated, idempotent commits
 
-- The index and corpus keep EVERY seen doc, accepted or rejected, because
-  duplicate transitivity flows through rejected docs: if a~b rejected b,
-  a later c~b (with c!~a) must still be rejected — exactly what one batch
-  run over the union decides. An accepted-only index would silently accept
-  c. Rejected rows are marked (keeper_doc_id != doc_id), not dropped; their
-  text is retained because IT is what future candidates verify against.
-- Doc ids must be MONOTONE across batches (each batch's min id > every seen
-  id — the same LSN discipline as the CDC core; enforced via the applied
-  doc-id intervals). Ids must also be UNIQUE within a batch: a duplicate
-  id would multiply rows through the keeper join and permanently commit
-  duplicate corpus rows under the exactly-once gate, so ingest gates on
-  count == countDistinct (review-caught, round 4).
+Driver state stays O(n_buckets): the only collects are bounded bucket-id
+sets, one batch-stats row, the replay gate, and (below configurable caps)
+the verified duplicate-edge set or the batch's chunk keys.
+
+HOT-BUCKET GUARD (LSH and SRP): a web-scale boilerplate cluster of m
+near-identical docs collapses into a single band bucket, and an uncapped
+probe join emits O(m^2) candidates before any verify. Index-side buckets
+holding more than ``max_bucket`` rows therefore contribute only ONE
+exemplar row (the minimum seen id) to the probe join — new rows still meet
+the cluster (via its exemplar) and are still collapsed into it, but
+candidate volume stays linear in the batch. Recall contract: within an
+over-cap bucket, pairwise candidate enumeration is reduced to exemplar
+edges; a bucket that hot IS a near-identical cluster (every member agreed
+on a full band), so cluster membership is preserved whenever the exemplar
+verifies. The batch-side new x new join applies the same policy. Pinned on
+a planted mega-cluster fixture in tests/test_hot_bucket.py.
+
+Semantic contract (pinned by the two-sequential-runs == one-batch-run
+tests):
+
+- The index and data table keep EVERY seen row, accepted or rejected,
+  because duplicate transitivity flows through rejected docs: if a~b
+  rejected b, a later c~b (with c!~a) must still be rejected — exactly what
+  one batch run over the union decides. Rejected rows are marked
+  (keeper_doc_id != doc_id), not dropped; their text is retained because
+  IT is what future candidates verify against.
+- Ids must be MONOTONE across batches (each batch's min id > every seen id
+  — the same LSN discipline as the CDC core) and UNIQUE within a batch: a
+  duplicate id would multiply rows through the keeper join and permanently
+  commit duplicate rows under the exactly-once gate.
 - Keeper semantics are GREEDY FROZEN-LABEL: once a doc's keeper is
   committed it never changes. Under monotone ids this equals the batch
   connected-component minima EXCEPT when a new doc BRIDGES two
-  previously-committed components (doc x ~ old cluster A and ~ old cluster
-  B): a batch run over the union would relabel one old cluster onto the
-  other, which no incremental system can honor retroactively. Bridges are
-  therefore DETECTED (a resolved component containing >= 2 distinct seen
-  keepers) and handled per the ``dedup.on_bridge`` policy: ``error``
-  (default) fails the batch loudly before any commit, like the monotone
-  gate; ``greedy`` proceeds — the batch's docs join the oldest bridged
-  cluster, old clusters keep their labels, and keepers() is documented to
-  diverge from a from-scratch batch run for exactly those docs. Pinned in
+  previously-committed components: a batch run over the union would
+  relabel one old cluster onto the other, which no incremental system can
+  honor retroactively. Bridges are DETECTED and handled per the
+  ``dedup.on_bridge`` policy: ``error`` (default) fails the batch before
+  any commit; ``greedy`` proceeds — the batch joins the oldest bridged
+  cluster and old clusters keep their labels. Pinned in
   tests/test_incremental_dedup.py::test_bridge_*.
-- Exactly-once ingest: each table carries a ``dedup.applied`` doc-id
-  INTERVAL SET in its manifest properties (the same compacted-interval
-  algebra as the CDC gate's ``engine.applied_lsn_ranges`` —
-  cdc/apply.py:merge_ranges/subtract_ranges, property-tested in
-  tests/test_properties.py), updated atomically WITH the data commit.
-  Monotone contiguous ingest keeps the property at ONE interval forever —
-  O(active-pending) manifest state, not O(batch history) (pinned by the
-  60-micro-batch long-run test in tests/test_dedup_stream.py). A crash between the
-  corpus append and the index append leaves the two interval sets
-  differing; the difference IS the pending work, and any later ingest (or
-  a retry of the same batch) heals it by re-signing exactly those id
-  ranges from the corpus. Signing is deterministic, so the healed index is
-  byte-equal. ``batch_id`` is retained for lineage/logging only — replay
-  identity is the id range itself.
+- Exactly-once ingest: each table carries a ``dedup.applied`` id INTERVAL
+  SET in its manifest properties (the same compacted-interval algebra as
+  the CDC gate's ``engine.applied_lsn_ranges``), updated atomically WITH
+  the data commit. Monotone contiguous ingest keeps the property at ONE
+  interval forever (pinned by the 60-micro-batch test in
+  tests/test_dedup_stream.py). A crash between the data commit and the
+  index append leaves the two interval sets differing; the difference IS
+  the pending work, and any later ingest (or a retry of the same batch)
+  heals it by recomputing exactly those ranges' index rows from the data
+  table. Signing and chunking are deterministic, so the healed index is
+  byte-equal. ``batch_id`` labels lineage only — replay identity is the id
+  range itself.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -88,37 +101,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-import contextlib
-
 from migration_pair_spark.cdc.apply import (
     _aqe_disabled,
     covered_expr,
     merge_ranges,
     subtract_ranges,
 )
-
-
-@contextlib.contextmanager
-def _scoped_shuffle_partitions(spark, n: int):
-    """Temporarily size spark.sql.shuffle.partitions DOWN to ``n`` for one
-    ingest's jobs (saved/restored; never raises the value). The ingest
-    pipelines shuffle O(batch) rows — at the session default (cluster
-    width) a small batch pays a full wave of near-empty reduce tasks per
-    shuffle stage, pure scheduler overhead across the ~10 stages of an
-    ingest. ``n`` derives from the batch's ROW COUNT (the same
-    rows_per_task sizing as the signing repartition), so a cluster-scale
-    batch keeps the session value — this is data-adaptive, not a local
-    tuning constant."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    if int(prev) <= n:
-        yield
-        return
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 from migration_pair_spark.lakehouse.table import LakeTable
 from migration_pair_spark.operators import dedup as dd
 
@@ -128,8 +116,8 @@ APPLIED_PROP = "dedup.applied"
 #: (operators/cdc_dedup.py advances it atomically with each sweep's corpus
 #: commit). Stamped "0" at chunk-index CREATE so the watermark is always
 #: property-backed on new indexes — deriving it from applied doc-id
-#: intervals conflates seed ids with LSNs (review-caught); only indexes
-#: predating the property fall back to the derived value.
+#: intervals conflates seed ids with LSNs; only indexes predating the
+#: property fall back to the derived value.
 SWEEP_PROP = "sweep.lsn"
 DEFAULT_MAX_BUCKET = 1000
 
@@ -140,12 +128,34 @@ _CORPUS_SCHEMA = T.StructType(
         T.StructField("keeper_doc_id", T.LongType(), True),
     ]
 )
+#: LSH and SRP index rows: doc_id names the id column in both families
 _INDEX_SCHEMA = T.StructType(
     [
         T.StructField("bucket_key", T.StringType(), False),
         T.StructField("doc_id", T.LongType(), False),
     ]
 )
+
+
+@contextlib.contextmanager
+def _scoped_shuffle_partitions(spark, n: int):
+    """Temporarily size spark.sql.shuffle.partitions DOWN to ``n`` for one
+    ingest's jobs (saved/restored; never raises the value). The ingest
+    pipelines shuffle O(batch) rows — at the session default (cluster
+    width) a small batch pays a full wave of near-empty reduce tasks per
+    shuffle stage, pure scheduler overhead across the ~10 stages of an
+    ingest. ``n`` derives from the batch's ROW COUNT, so a cluster-scale
+    batch keeps the session value — data-adaptive, not a tuning constant."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    if int(prev) <= n:
+        yield
+        return
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _with_system(df: DataFrame, bucket: F.Column) -> DataFrame:
@@ -156,233 +166,427 @@ def _with_system(df: DataFrame, bucket: F.Column) -> DataFrame:
     )
 
 
-def applied_ranges(
-    table: LakeTable, range_source: "LakeTable | None" = None
-) -> list[tuple[int, int]]:
-    """The committed applied doc-id intervals of a dedup table.
+def _live(table: LakeTable, buckets: list[int]) -> DataFrame:
+    """The rows of ``table``'s given lake buckets, tombstones dropped."""
+    return table.read_buckets(buckets).filter(
+        ~F.coalesce(F.col("_deleted"), F.lit(False))
+    )
 
-    LEGACY FALLBACK (review-caught): tables written by the round-4 gate
-    carry a ``dedup.batches`` id list plus per-batch ``dedup.batch.{id}``
-    = [lo, hi] properties instead of the interval set — and the INDEX
-    table's ranges live on its corpus/vectors sibling (``range_source``).
-    Loading such a table with an empty applied set would silently disable
-    the exactly-once and monotone gates (a replayed batch would re-commit
-    duplicate rows forever), so the legacy layout is reconstructed — or
-    refused loudly when its range properties are gone."""
+
+def _lake_buckets(table: LakeTable, rows: DataFrame, col: str) -> list[int]:
+    """The lake buckets of ``table`` that ``rows[col]`` hashes into: one
+    bounded driver collect (<= table.n_buckets values) — the same shape as
+    the CDC gate's touched-bucket set."""
+    got = rows.select(table.bucket_expr(col).alias("b")).distinct().collect()
+    return sorted(int(r["b"]) for r in got)
+
+
+def applied_ranges(table: LakeTable) -> list[tuple[int, int]]:
+    """The committed applied id intervals of a dedup table.
+
+    Tables written by the retired per-batch gate carry ``dedup.batches``
+    instead of the interval set. Loading one as "nothing applied" would
+    silently disable the exactly-once and monotone gates (a replayed batch
+    would re-commit duplicate rows forever), so such a table is refused."""
     p = table.properties
     if APPLIED_PROP in p:
-        return [
-            (int(lo), int(hi)) for lo, hi in json.loads(p[APPLIED_PROP])
-        ]
-    legacy = p.get("dedup.batches")
-    if legacy is None:
-        return []
-    src = (range_source or table).properties
-    ranges = []
-    for bid in json.loads(legacy):
-        r = src.get(f"dedup.batch.{bid}")
-        if r is None:
-            raise ValueError(
-                f"table {table.path} uses the legacy dedup batch gate but "
-                f"range property dedup.batch.{bid} is missing — cannot "
-                "reconstruct the applied intervals; re-create the deduper "
-                "or restore the sibling table's properties"
+        return [(int(lo), int(hi)) for lo, hi in json.loads(p[APPLIED_PROP])]
+    if "dedup.batches" in p:
+        raise ValueError(
+            f"table {table.path} uses the legacy dedup batch gate "
+            "(dedup.batches without dedup.applied) — its applied intervals "
+            "are unknown; re-create the index from its source data"
+        )
+    return []
+
+
+class _IndexPair:
+    """A persisted (data, index) LakeTable pair with exactly-once batch
+    ingest — the core every incremental index family shares.
+
+    A family declares:
+
+    - ``_data_name``: the data table's directory, also the name of the
+      family's attribute for it (``corpus`` / ``vectors``);
+    - ``_data_schema`` / ``_index_schema``: the first field of each is the
+      table's key (the data id column / the index routing key); the data
+      table's first two fields (id, text or embedding) are what
+      ``index_rows`` reads;
+    - ``_tag``: lineage key prefix (``{_tag}_ingest`` / ``{_tag}_heal``);
+    - ``_nothing``: the family's result keys of an empty batch — None
+      values are the DataFrames, also None on a replay;
+    - ``rows_per_task`` and ``_fanout`` (index rows per item): the sizing
+      of the signing repartition and of the scoped shuffle width;
+
+    and implements ``index_rows`` and ``_process``."""
+
+    _data_name: str
+    _data_schema: T.StructType
+    _index_schema: T.StructType
+    _tag: str
+    _nothing: dict
+    _fanout: int
+    rows_per_task: int
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        self.data = LakeTable.load(spark, os.path.join(root, self._data_name))
+        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+
+    @classmethod
+    def _create(
+        cls,
+        spark: SparkSession,
+        root: str,
+        data_buckets: int,
+        index_buckets: int,
+        properties: dict,
+        data_blooms: tuple[str, ...] = (),
+        index_blooms: tuple[str, ...] = (),
+    ):
+        for name, schema, n, props, blooms in (
+            (cls._data_name, cls._data_schema, data_buckets, properties, data_blooms),
+            ("index", cls._index_schema, index_buckets, {}, index_blooms),
+        ):
+            LakeTable.create(
+                spark,
+                os.path.join(root, name),
+                schema,
+                key_col=schema.names[0],
+                n_buckets=n,
+                properties={**props, APPLIED_PROP: "[]"},
+                bloom_filter_cols=blooms,
             )
-        lo, hi = json.loads(r)
-        ranges.append((int(lo), int(hi)))
-    return merge_ranges(ranges)
+        return cls(spark, root)
 
+    @property
+    def _id(self) -> str:
+        return self._data_schema.names[0]
 
-def _covered(lo: int, hi: int, ranges: list[tuple[int, int]]) -> bool:
-    return not subtract_ranges([(lo, hi)], ranges)
+    def _lineage(self, kind: str, value: str, n: int) -> dict:
+        """``{"dedup_ingest": batch_id, "n_docs": n}``-shaped commit lineage
+        (``{_tag}_{kind}``, and ``n_docs`` / ``n_vecs`` from the id column)."""
+        return {f"{self._tag}_{kind}": value, "n_" + self._id.replace("_id", "s"): n}
 
+    def index_rows(self, df: DataFrame) -> DataFrame:
+        """The index rows a batch of data rows adds (heal's recompute)."""
+        raise NotImplementedError
 
-def _ingest_gate(
-    data_table: LakeTable,
-    index_table: LakeTable,
-    new_rows: DataFrame,
-    batch_id: str,
-    id_col: str,
-    noun: str,
-    heal_fn,
-) -> dict:
-    """The exactly-once batch gate shared by ALL THREE incremental indexes
-    (LSH text, SRP embedding, chunk-key span): one bounded stats job (id
-    range + count + uniqueness), the replay/heal decision from the two
-    applied-interval sets, the monotone check, pre-probe healing of any
-    pending interval (an index missing committed entries would accept
-    what it should reject — never retractable), and the gap-absorbed
-    committed range. Factored in round 5 when the third near-verbatim
-    copy landed (review-caught): a gate fix applied to one copy and not
-    the others is exactly how the round-4 unique-id hole happened.
+    def _process(self, rows: DataFrame, gate: dict, keep, batch_id: str):
+        """The family body of one ingest: probe, verify and resolve the
+        batch. Returns (result fields, data rows to commit, index rows)."""
+        raise NotImplementedError
 
-    Returns one of
-      {"status": "empty"}
-      {"status": "replayed", "healed": bool}   (fully-covered batch)
-      {"status": "ok", "lo", "hi", "n_new", "rng", "applied"}
-    and raises ValueError on duplicate or non-monotone ids."""
-    stats = new_rows.agg(
-        F.min(id_col).alias("lo"),
-        F.max(id_col).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(id_col).alias("nd"),
-    ).collect()[0]
-    if stats["lo"] is None:
-        return {"status": "empty"}
-    lo, hi, n_new = int(stats["lo"]), int(stats["hi"]), int(stats["n"])
-    if int(stats["nd"]) != n_new:
-        raise ValueError(
-            f"batch {batch_id}: {noun} must be unique within a batch "
-            f"({n_new - int(stats['nd'])} duplicated) — a duplicate id "
-            "would commit duplicate rows under the exactly-once gate"
+    # ------------------------------------------------------------------ gate
+
+    def pending_ranges(self) -> list[tuple[int, int]]:
+        """Id intervals committed to the data table but not the index — the
+        exact recovery work a crash between the two commits leaves behind."""
+        return subtract_ranges(
+            applied_ranges(self.data), applied_ranges(self.index)
         )
-    applied = applied_ranges(data_table)
-    idx_applied = applied_ranges(index_table, data_table)
-    if _covered(lo, hi, applied):
-        if _covered(lo, hi, idx_applied):
-            return {"status": "replayed", "healed": False}
-        # heal the FULL data-vs-index difference (not just this batch's
-        # literal range): committed intervals are gap-absorbed, so the
-        # pending span may start below the batch's min id
-        heal_fn(subtract_ranges(applied, idx_applied))
-        return {"status": "replayed", "healed": True}
-    # None, not -1, as the nothing-applied sentinel: ids are arbitrary
-    # longs (snapshot seeds deliberately use NEGATIVE ids to stay below
-    # the LSN space) and a -1 sentinel rejected any negative first batch
-    # (review-caught by the seeding tests)
-    seen_max = applied[-1][1] if applied else None
-    if seen_max is not None and lo <= seen_max:
-        raise ValueError(
-            f"batch {batch_id}: {noun} must be monotone across batches "
-            f"(batch min {lo} <= seen max {seen_max})"
+
+    def _gate(self, new_rows: DataFrame, batch_id: str) -> dict:
+        """The exactly-once batch gate: one bounded stats job (id range +
+        count + uniqueness), the replay/heal decision from the two
+        applied-interval sets, the monotone check, pre-probe healing of any
+        pending interval (an index missing committed entries would accept
+        what it should reject — never retractable), and the gap-absorbed
+        committed range.
+
+        Returns one of
+          {"status": "empty"}
+          {"status": "replayed", "healed": bool}   (fully-covered batch)
+          {"status": "ok", "lo", "hi", "n_new", "rng", "applied"}
+        and raises ValueError on duplicate or non-monotone ids."""
+        id_col = self._id
+        noun = id_col.replace("_id", " ids")
+        stats = new_rows.agg(
+            F.min(id_col).alias("lo"),
+            F.max(id_col).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct(id_col).alias("nd"),
+        ).collect()[0]
+        if stats["lo"] is None:
+            return {"status": "empty"}
+        lo, hi, n_new = int(stats["lo"]), int(stats["hi"]), int(stats["n"])
+        if int(stats["nd"]) != n_new:
+            raise ValueError(
+                f"batch {batch_id}: {noun} must be unique within a batch "
+                f"({n_new - int(stats['nd'])} duplicated) — a duplicate id "
+                "would commit duplicate rows under the exactly-once gate"
+            )
+        applied = applied_ranges(self.data)
+        idx_applied = applied_ranges(self.index)
+        pending = subtract_ranges(applied, idx_applied)
+        if not subtract_ranges([(lo, hi)], applied):
+            # a fully covered batch: a redelivery (or never-committed gap
+            # ids — under the monotone contract already a violation). If
+            # the index lacks part of it, heal the FULL data-vs-index
+            # difference: committed intervals are gap-absorbed, so the
+            # pending span may start below the batch's min id
+            healed = bool(subtract_ranges([(lo, hi)], idx_applied))
+            if healed:
+                self._heal_index(pending)
+            return {"status": "replayed", "healed": healed}
+        # None, not -1, as the nothing-applied sentinel: ids are arbitrary
+        # longs (snapshot seeds deliberately use NEGATIVE ids to stay below
+        # the LSN space)
+        seen_max = applied[-1][1] if applied else None
+        if seen_max is not None and lo <= seen_max:
+            raise ValueError(
+                f"batch {batch_id}: {noun} must be monotone across batches "
+                f"(batch min {lo} <= seen max {seen_max})"
+            )
+        if pending:
+            self._heal_index(pending)
+        # the committed interval extends DOWN to the watermark: the monotone
+        # gate guarantees ids in (seen_max, lo) can never legitimately arrive
+        # later, so absorbing the gap keeps the applied set at exactly ONE
+        # interval forever — O(1) manifest state, not O(batch history)
+        return {
+            "status": "ok",
+            "lo": lo,
+            "hi": hi,
+            "n_new": n_new,
+            "rng": (seen_max + 1 if seen_max is not None else lo, hi),
+            "applied": applied,
+        }
+
+    # ---------------------------------------------------------------- ingest
+
+    def _ingest(self, rows: DataFrame, batch_id: str, data_props=None) -> dict:
+        """The ingest skeleton around the family's ``_process``: gate,
+        session toggles, sizing, persisted intermediates, then the two
+        gated commits. ``data_props`` (a dict, or ``(lo, hi) -> dict`` of
+        the batch's id range) ride the data commit."""
+        g = self._gate(rows, batch_id)
+        if g["status"] == "empty":
+            # quiet-day case: nothing arrived — clean no-op, no commits
+            return {"replayed": False, "empty": True, "n_new": 0, **self._nothing}
+        if g["status"] == "replayed":
+            out = {"replayed": True}
+            out.update((k, v) for k, v in self._nothing.items() if v is None)
+            if g["healed"]:
+                out["healed"] = "index"
+            return out
+        n_new, rng = g["n_new"], g["rng"]
+        # every toggle and cache below is entered on ONE stack, so any
+        # exception leaves the session config as it found it
+        with contextlib.ExitStack() as stack:
+            # AQE off for the ingest's own jobs (the same refcounted
+            # per-session toggle as the CDC apply): the pipelines are
+            # fixed-shape — explicit broadcasts, known partition counts and
+            # the exemplar-star cap for skew — so AQE's per-stage
+            # materialization barrier is pure overhead (~20% of ingest wall
+            # at sf0.1, and one extra job per shuffle stage)
+            stack.enter_context(_aqe_disabled(self.spark))
+            # Parallelize the narrow signing chain: a small batch often
+            # arrives as ONE file -> one input partition, and the heavy map
+            # then runs single-threaded. The partition count is sized by
+            # the batch's ROW count (known from the gate's stats job) — a
+            # tiny batch must not fan out to full cluster width and pay
+            # scheduler overhead per near-empty task; a large multi-file
+            # batch keeps its natural partitioning and pays no shuffle. The
+            # SHUFFLE width is sized by the derived index-row volume
+            # (``_fanout`` rows per item), not the raw count, so a small
+            # batch never collapses the verify stages to one task.
+            cap = self.spark.sparkContext.defaultParallelism
+            par = min(cap, max(1, n_new // self.rows_per_task))
+            width = min(cap, max(1, (n_new * self._fanout) // self.rows_per_task))
+            stack.enter_context(_scoped_shuffle_partitions(self.spark, width))
+
+            # reused intermediates are persist()ed (lazy, materialized inside
+            # their first consumer job) rather than localCheckpoint()ed
+            # (eager: one extra job each)
+            def keep(df: DataFrame) -> DataFrame:
+                stack.callback(df.unpersist)
+                return df.persist()
+
+            if 1 < par and rows.rdd.getNumPartitions() < par:
+                rows = keep(rows.repartition(par, self._id))
+            out, data_rows, index_rows = self._process(rows, g, keep, batch_id)
+            # commit 1: the data rows, with the applied interval riding the
+            # same manifest
+            props = {APPLIED_PROP: json.dumps(merge_ranges(g["applied"] + [rng]))}
+            if data_props:
+                props.update(
+                    data_props(*rng) if callable(data_props) else dict(data_props)
+                )
+            lineage = self._lineage("ingest", batch_id, n_new)
+            self.data.append_buckets(
+                _with_system(data_rows, self.data.bucket_expr()),
+                properties=props,
+                lineage=dict(lineage),
+            )
+            # commit 2: the index rows of ALL new rows (rejected ones carry
+            # transitivity). A crash here is healed by the next gate.
+            self._append_index(index_rows, [rng], lineage)
+        return {
+            "replayed": False,
+            "n_new": n_new,
+            **out,
+            f"{self._data_name}_version": self.data.version,
+            "index_version": self.index.version,
+        }
+
+    def _append_index(
+        self, rows: DataFrame, ranges: list[tuple[int, int]], lineage: dict
+    ) -> None:
+        """Append index rows and mark ``ranges`` applied on the index in the
+        same commit — the one index write of both ingest and heal."""
+        self.index.append_buckets(
+            _with_system(
+                rows.select(*self._index_schema.names), self.index.bucket_expr()
+            ),
+            properties={
+                APPLIED_PROP: json.dumps(
+                    merge_ranges(applied_ranges(self.index) + list(ranges))
+                )
+            },
+            lineage=lineage,
         )
-    pending = subtract_ranges(applied, idx_applied)
-    if pending:
-        heal_fn(pending)
-    # the committed interval extends DOWN to the watermark: the monotone
-    # gate guarantees ids in (seen_max, lo) can never legitimately arrive
-    # later, so absorbing the gap keeps the applied set at exactly ONE
-    # interval forever — O(1) manifest state, not O(batch history)
-    return {
-        "status": "ok",
-        "lo": lo,
-        "hi": hi,
-        "n_new": n_new,
-        "rng": (seen_max + 1 if seen_max is not None else lo, hi),
-        "applied": applied,
-    }
 
-
-def _auto_compact_tables(
-    tables: "list[tuple[str, LakeTable]]", files_per_bucket: int
-) -> dict:
-    """Shared maintenance policy for the incremental index pairs: fold any
-    lake bucket holding more than ``files_per_bucket`` data files back to
-    one file (LakeTable.compact on exactly those buckets). A months-long
-    streaming ingest or sweep loop otherwise accumulates one file per
-    (batch x touched bucket) without bound — probe cost then grows with
-    BATCH HISTORY (per-file open/footer overhead), not data volume. The
-    CDC follow loop has had this policy since round 4
-    (auto_compact_files_per_bucket); this is the same metric and the same
-    trigger for the dedup family's tables. Returns {table name: {"buckets":
-    [...], "version": v}} for the tables actually compacted."""
-    done: dict = {}
-    for name, table in tables:
-        over = sorted(
-            b
-            for b, n in table.files_per_bucket().items()
-            if n > files_per_bucket
+    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
+        """Crash-retry path: the data table committed id ranges the index
+        lacks. Recompute exactly those ranges' index rows and complete the
+        index append. A full data scan filtered by the ranges — the rare
+        recovery path pays one scan (persisted: the lineage count and the
+        index rows both read it); the hot path never does."""
+        rows = (
+            self.data.read()
+            .filter(covered_expr(F.col(self._id), ranges))
+            .select(*self._data_schema.names[:2])
+            .persist()
         )
-        if over:
-            version = table.compact(bucket_ids=over)
-            done[name] = {"buckets": over, "version": version}
-    return done
+        try:
+            lineage = self._lineage("heal", json.dumps(list(ranges)), rows.count())
+            self._append_index(self.index_rows(rows), ranges, lineage)
+        finally:
+            rows.unpersist()
+
+    # ----------------------------------------------------------------- probe
+
+    def probe_lake_buckets(self, rows: DataFrame) -> list[int]:
+        """The index lake buckets a probe with ``rows`` must open: distinct
+        pmod(xxhash64(key), n_buckets) over the NEW batch's index keys."""
+        return _lake_buckets(self.index, rows, self._index_schema.names[0])
+
+    def _probe_index(
+        self, rows: DataFrame, keep=lambda df: df
+    ) -> tuple[DataFrame, list[int]]:
+        """The LSH and SRP probe (index rows (bucket_key, doc_id), hot
+        buckets capped at ``max_bucket``): a bucket-pruned index scan joined
+        to the new batch's index rows, giving candidate ({p}_a, {p}_b,
+        seen_id) pairs, p the id prefix (doc / vec). The
+        index side reads ONLY the probe buckets' files (new x index — the
+        index never self-joins), and over-cap buckets contribute only their
+        exemplar (module docstring). ``keep`` persists the pruned scan: the
+        hot-bucket cap consumes it twice (per-bucket aggregate + join back),
+        and without the cache each consumer would re-read the files."""
+        prefix = self._id.split("_")[0]
+        lake_buckets = self.probe_lake_buckets(rows)
+        idx = _live(self.index, lake_buckets).select(
+            "bucket_key", F.col("doc_id").alias("seen_id")
+        )
+        if self.max_bucket:
+            idx = keep(idx)
+        idx = dd.cap_exemplar_star(idx, ["bucket_key"], "seen_id", self.max_bucket)
+        cand = (
+            rows.select("bucket_key", F.col("doc_id").alias("new_id"))
+            .join(idx, "bucket_key")
+            .filter(F.col("seen_id") != F.col("new_id"))
+            .select(
+                F.least("seen_id", "new_id").alias(f"{prefix}_a"),
+                F.greatest("seen_id", "new_id").alias(f"{prefix}_b"),
+                "seen_id",
+            )
+            .distinct()
+        )
+        return cand, lake_buckets
+
+    def _fetch_data(self, ids: DataFrame, *cols: str) -> DataFrame:
+        """``cols`` of the candidate SEEN rows only, via a bucket-pruned
+        data read: collect the bounded set of lake buckets the candidate
+        ids hash into, open only those, semi-join down to the candidates."""
+        buckets = _lake_buckets(self.data, ids, self._id)
+        return (
+            _live(self.data, buckets)
+            .select(*cols)
+            .join(F.broadcast(ids), self._id, "left_semi")
+        )
+
+    # ----------------------------------------------------------- maintenance
+
+    def _require_index_current(self, op: str) -> None:
+        """Purges refuse while the index lags the data table: heal
+        recomputes pending ranges FROM the data rows, and a purge hole there
+        would heal an index missing committed entries."""
+        self.data.refresh()
+        self.index.refresh()
+        pending = self.pending_ranges()
+        if pending:
+            raise ValueError(
+                f"{op}: index lags the {self._data_name} (pending id ranges "
+                f"{pending}) — run any ingest first (it heals "
+                f"automatically), then purge"
+            )
+
+    def auto_compact(self, files_per_bucket: int) -> dict:
+        """Fold any lake bucket of either table holding more than
+        ``files_per_bucket`` data files back to one file (LakeTable.compact
+        on exactly those buckets). A months-long streaming ingest or sweep
+        loop otherwise accumulates one file per (batch x touched bucket)
+        without bound — probe cost then grows with BATCH HISTORY, not data
+        volume. Same metric and trigger as the CDC follow loop's
+        auto_compact_files_per_bucket. Returns {table name: {"buckets":
+        [...], "version": v}} for the tables actually compacted."""
+        done: dict = {}
+        for name, table in ((self._data_name, self.data), ("index", self.index)):
+            over = sorted(
+                b
+                for b, n in table.files_per_bucket().items()
+                if n > files_per_bucket
+            )
+            if over:
+                done[name] = {"buckets": over, "version": table.compact(bucket_ids=over)}
+        return done
 
 
-def _cap_hot_buckets(
-    rows: DataFrame, key_col: str, id_col: str, max_bucket: int | None
-) -> DataFrame:
-    """Index-side hot-bucket guard: buckets with more than ``max_bucket``
-    rows keep only their exemplar (minimum id). Delegates to the shared
-    tiny-agg + broadcast form (dedup.cap_exemplar_star) — the earlier
-    window form shuffled and sorted every index row read by the probe."""
-    return dd.cap_exemplar_star(rows, [key_col], id_col, max_bucket)
+class IncrementalDeduper(_IndexPair):
+    """Text near-dups: a (corpus, LSH signature index) pair. ``corpus`` is
+    keyed by doc_id (bucket-pruned candidate text fetch); ``index`` holds
+    (bucket_key = "band|bucket", doc_id) band rows keyed by bucket_key
+    (bucket-pruned probe)."""
 
-
-class _UnionFind:
-    """Driver-side connected components for batch duplicate-edge sets below
-    the collect cap — with path compression, union-by-root-min (labels are
-    component minima, matching dedup_clusters), and bridge tracking: a
-    union joining two components that each already contain a SEEN keeper
-    (node id <= seen_max) records the bridge."""
-
-    def __init__(self, seen_max: int):
-        self.parent: dict[int, int] = {}
-        self.seen_of: dict[int, int] = {}  # root -> min seen-keeper in comp
-        self.bridges: list[tuple[int, int]] = []
-        self.seen_max = seen_max
-
-    def find(self, x: int) -> int:
-        # iterative root-chase + path compression: chain-shaped duplicate
-        # clusters (sliding/templated text) build parent chains as deep as
-        # the cluster, and a recursive find blows Python's ~1000-frame
-        # recursion limit well inside the 500k-edge driver-path cap
-        # (review-caught with a 3000-doc chain repro)
-        root = x
-        while self.parent.setdefault(root, root) != root:
-            root = self.parent[root]
-        p = x
-        while p != root:
-            self.parent[p], p = root, self.parent[p]
-        if x <= self.seen_max:
-            s = self.seen_of.get(root)
-            if s is None or x < s:
-                self.seen_of[root] = x
-        return root
-
-    def union(self, a: int, b: int) -> None:
-        ra, rb = self.find(a), self.find(b)
-        if ra == rb:
-            return
-        # keep the smaller id as root so root == component minimum
-        if rb < ra:
-            ra, rb = rb, ra
-        sa, sb = self.seen_of.get(ra), self.seen_of.get(rb)
-        if sa is not None and sb is not None and sa != sb:
-            self.bridges.append((min(sa, sb), max(sa, sb)))
-        if sb is not None:
-            self.seen_of[ra] = min(sa, sb) if sa is not None else sb
-        self.parent[rb] = ra
-        self.seen_of.pop(rb, None)
-
-
-class IncrementalDeduper:
-    """A persisted (corpus, signature-index) pair with exactly-once batch
-    ingest. ``corpus`` is keyed by doc_id (bucket-pruned candidate text
-    fetch); ``index`` is keyed by the LSH bucket string (bucket-pruned
-    probe)."""
+    _data_name = "corpus"
+    _data_schema = _CORPUS_SCHEMA
+    _index_schema = _INDEX_SCHEMA
+    _tag = "dedup"
+    _nothing = {"pairs": None, "keepers": None, "n_accepted": 0, "n_rejected": 0}
 
     #: duplicate-edge sets at or below this size resolve components with a
     #: driver union-find (one bounded collect) instead of the distributed
     #: label-propagation loop — pure execution tuning, identical results
     #: (equivalence pinned in tests); the fallback keeps the path unbounded.
-    driver_cc_max_edges = 500_000
+    driver_cc_max_edges = dd.DRIVER_CC_MAX_EDGES
 
-    #: repartition sizing for the narrow signing chain: spread the batch to
-    #: ~this many docs per task, capped at cluster width. Shingling is the
-    #: heavy map (k-gram explode per doc), so the per-task quantum is small.
+    #: shingling is the heavy map (k-gram explode per doc), so the per-task
+    #: quantum of the signing repartition is small
     rows_per_task = 256
 
+    corpus = property(lambda self: self.data)
+
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        self.corpus = LakeTable.load(spark, os.path.join(root, "corpus"))
-        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+        super().__init__(spark, root)
         p = self.corpus.properties
         self.threshold = float(p["dedup.threshold"])
         self.bands = tuple(tuple(b) for b in json.loads(p["dedup.bands"]))
         self.max_bucket = int(p.get("dedup.max_bucket", "0")) or None
         self.on_bridge = p.get("dedup.on_bridge", "error")
+        # band rows per doc; the verify stage's shingle explodes are bigger
+        self._fanout = max(len(self.bands), 2)
 
     @classmethod
     def create(
@@ -403,43 +607,19 @@ class IncrementalDeduper:
             "dedup.bands": json.dumps([list(b) for b in bands]),
             "dedup.max_bucket": str(max_bucket or 0),
             "dedup.on_bridge": on_bridge,
-            APPLIED_PROP: "[]",
         }
-        LakeTable.create(
-            spark,
-            os.path.join(root, "corpus"),
-            _CORPUS_SCHEMA,
-            key_col="doc_id",
-            n_buckets=corpus_buckets,
-            properties=props,
+        # purge_docs removes signature rows by doc_id — a NON-key column of
+        # the index; the bloom keeps that rewrite to ~the files actually
+        # holding the purged ids instead of O(index)
+        return cls._create(
+            spark, root, corpus_buckets, index_buckets, props,
+            index_blooms=("doc_id",),
         )
-        LakeTable.create(
-            spark,
-            os.path.join(root, "index"),
-            _INDEX_SCHEMA,
-            key_col="bucket_key",
-            n_buckets=index_buckets,
-            properties={APPLIED_PROP: "[]"},
-            # purge_docs removes signature rows by doc_id — a NON-key
-            # column here; the bloom keeps that rewrite to ~the files
-            # actually holding the purged ids instead of O(index)
-            bloom_filter_cols=("doc_id",),
-        )
-        return cls(spark, root)
-
-    # ------------------------------------------------------------- internals
 
     def seen_max(self) -> int:
         """Highest committed doc id (-1 on an empty corpus)."""
         ranges = applied_ranges(self.corpus)
         return ranges[-1][1] if ranges else -1
-
-    def pending_ranges(self) -> list[tuple[int, int]]:
-        """Doc-id intervals committed to the corpus but not the index — the
-        exact recovery work a crash between the two commits leaves behind."""
-        return subtract_ranges(
-            applied_ranges(self.corpus), applied_ranges(self.index, self.corpus)
-        )
 
     def purge_docs(self, doc_ids, conflict_retries: int = 3) -> dict:
         """Right-to-be-forgotten erasure from the LSH dedup state: the
@@ -463,18 +643,9 @@ class IncrementalDeduper:
         is recorded (``record_suppression=False``): the monotone gate
         already makes re-submission under an old id impossible.
 
-        Refuses while the index lags the corpus for the same reason as
-        IncrementalChunkIndex.purge_source: heal re-signs pending ranges
-        FROM corpus text a purge would have holed."""
-        self.corpus.refresh()
-        self.index.refresh()
-        pending = self.pending_ranges()
-        if pending:
-            raise ValueError(
-                f"purge_docs: index lags the corpus (pending id ranges "
-                f"{pending}) — run any ingest first (it heals "
-                f"automatically), then purge"
-            )
+        Refuses while the index lags the corpus (see
+        ``_require_index_current``)."""
+        self._require_index_current("purge_docs")
         cv = self.corpus.purge_keys(
             doc_ids, conflict_retries=conflict_retries,
             record_suppression=False,
@@ -492,72 +663,8 @@ class IncrementalDeduper:
             "bucket_key", F.concat_ws("|", F.col("band"), F.col("bucket"))
         )
 
-    def probe_lake_buckets(self, bands_new: DataFrame) -> list[int]:
-        """The index lake buckets the probe must open: distinct
-        pmod(xxhash64(bucket_key), n_buckets) over the NEW batch's band rows.
-        Bounded driver collect (<= index.n_buckets values) — the same shape
-        as the CDC gate's touched-bucket set."""
-        rows = (
-            bands_new.select(
-                self.index.bucket_expr("bucket_key").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r["b"]) for r in rows)
-
-    def _probe_index(
-        self, bands_new: DataFrame, keep=lambda df: df
-    ) -> tuple[DataFrame, list[int]]:
-        """Bucket-pruned index scan joined to the new band rows: candidate
-        (seen_doc, new_doc) id pairs. The index side reads ONLY the probe
-        buckets' files (new x index — the index never self-joins), and
-        over-cap buckets contribute only their exemplar (module docstring).
-        ``keep`` persists the pruned scan: the hot-bucket cap consumes it
-        twice (per-bucket aggregate + join back), and without the cache
-        each consumer would re-read the probe buckets' files
-        (review-caught)."""
-        lake_buckets = self.probe_lake_buckets(bands_new)
-        idx = (
-            self.index.read_buckets(lake_buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("bucket_key", F.col("doc_id").alias("seen_doc_id"))
-        )
-        if self.max_bucket:
-            idx = keep(idx)
-        idx = _cap_hot_buckets(idx, "bucket_key", "seen_doc_id", self.max_bucket)
-        cand = (
-            bands_new.select("bucket_key", F.col("doc_id").alias("new_doc_id"))
-            .join(idx, "bucket_key")
-            .filter(F.col("seen_doc_id") != F.col("new_doc_id"))
-            .select(
-                F.least("seen_doc_id", "new_doc_id").alias("doc_a"),
-                F.greatest("seen_doc_id", "new_doc_id").alias("doc_b"),
-                "seen_doc_id",
-            )
-            .distinct()
-        )
-        return cand, lake_buckets
-
-    def _candidate_corpus_rows(self, seen_ids: DataFrame) -> DataFrame:
-        """Text + keeper for candidate SEEN docs only, via a bucket-pruned
-        corpus read: collect the bounded set of corpus lake buckets the
-        candidate ids hash into, open only those, semi-join down to the
-        candidates."""
-        bucket_rows = (
-            seen_ids.select(self.corpus.bucket_expr("doc_id").alias("b"))
-            .distinct()
-            .collect()
-        )
-        buckets = sorted(int(r["b"]) for r in bucket_rows)
-        rows = (
-            self.corpus.read_buckets(buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("doc_id", "text", "keeper_doc_id")
-        )
-        return rows.join(F.broadcast(seen_ids), "doc_id", "left_semi")
-
-    # ------------------------------------------------------ keeper resolution
+    def index_rows(self, df: DataFrame) -> DataFrame:
+        return self._band_rows(dd.minhash_signatures(df))
 
     def _resolve_keepers(
         self, new_docs: DataFrame, edges: DataFrame, seen_max: int
@@ -567,8 +674,7 @@ class IncrementalDeduper:
 
         At or below ``driver_cc_max_edges`` the edge set is collected (ONE
         bounded job — ``limit(cap+1)`` both fetches the edges and detects
-        overflow, replacing the separate count job the round-5 shape paid
-        per ingest) and resolved with a driver union-find instead of the
+        overflow) and resolved with the driver union-find instead of the
         O(log n) distributed label-propagation rounds (each of which costs
         eager checkpoints); on overflow, the distributed path runs with a
         label-group bridge check. Both paths produce identical keepers
@@ -580,33 +686,12 @@ class IncrementalDeduper:
             if len(head) > cap:
                 head = None
         if head is not None:
-            uf = _UnionFind(seen_max)
-            for r in head:
-                uf.union(int(r["doc_a"]), int(r["doc_b"]))
-            mapping = {
-                x: uf.find(x) for x in list(uf.parent) if x > seen_max
-            }
-            n_rejected = sum(1 for d, k in mapping.items() if k != d)
-            if mapping:
-                map_df = self.spark.createDataFrame(
-                    [(int(d), int(k)) for d, k in mapping.items()],
-                    "doc_id long, _k long",
-                )
-                keepers = (
-                    new_docs.select("doc_id")
-                    .join(F.broadcast(map_df), "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        F.coalesce("_k", F.col("doc_id")).alias("keeper_doc_id"),
-                    )
-                )
-            else:
-                keepers = new_docs.select(
-                    "doc_id", F.col("doc_id").alias("keeper_doc_id")
-                )
+            labels, bridges = dd.union_find(head, seen_max=seen_max)
+            new = {x: k for x, k in labels.items() if x > seen_max}
+            n_rejected = sum(1 for x, k in new.items() if k != x)
             # no checkpoint: unlike the pairs DF, this plan depends only on
             # the caller's input and a tiny local map — safe to return lazy
-            return keepers, n_rejected, sorted(set(uf.bridges))
+            return dd.attach_labels(new_docs, "doc_id", new), n_rejected, bridges
         # distributed fallback: label every edge node AND every batch doc,
         # then read bridges off the labels (a component holding >= 2 distinct
         # seen keepers) and keepers off the > seen_max slice
@@ -640,8 +725,6 @@ class IncrementalDeduper:
         ).count()
         return keepers, n_rejected, bridges
 
-    # --------------------------------------------------------------- ingest
-
     def ingest(self, new_docs: DataFrame, batch_id: str) -> dict:
         """Process one batch of (doc_id, text) rows: find near-dup pairs vs
         the index and within the batch, decide keepers, and append docs +
@@ -652,251 +735,92 @@ class IncrementalDeduper:
         candidate pair touching the batch, "keepers": DataFrame(doc_id,
         keeper_doc_id) for the batch, plus counters}. On a replayed batch
         the DataFrames are None (already persisted in the corpus)."""
-        # shared gate: stats + uniqueness + replay/heal + monotone + rng
-        # (a batch of never-committed gap ids is indistinguishable from a
-        # redelivery and no-ops; under the monotone allocator contract such
-        # a batch is already a violation)
-        g = _ingest_gate(
-            self.corpus, self.index, new_docs, batch_id, "doc_id", "doc ids",
-            self._heal_index,
+        return self._ingest(new_docs, batch_id)
+
+    def _process(self, new_docs: DataFrame, gate: dict, keep, batch_id: str):
+        applied = gate["applied"]
+        seen_max = applied[-1][1] if applied else -1
+        # shingle ARRAYS, not exploded rows: signatures derive narrowly
+        # (zero shuffles — see dd.minhash_signatures) and the verify stage
+        # explodes only candidate docs' arrays
+        arr_new = keep(dd.shingle_arrays(new_docs))
+        sig_new = dd.minhash_signatures(new_docs, arrays_df=arr_new)
+        bands_new = keep(self._band_rows(sig_new))
+
+        # candidates: new x index (bucket-pruned) + new x new (batch LSH,
+        # hot-bucket capped, reusing the PERSISTED band rows — re-banding
+        # from sig_new would recompute the minhash agg). COLD-START FAST
+        # PATH: an empty index has no probe targets, no candidate seen
+        # docs, no keeper map.
+        cand_new = dd.lsh_candidate_pairs(
+            sig_new, bands=self.bands, max_bucket=self.max_bucket, banded=bands_new
         )
-        if g["status"] == "empty":
-            # quiet-day case: no documents arrived — clean no-op, no commits
-            return {
-                "replayed": False,
-                "empty": True,
-                "pairs": None,
-                "keepers": None,
-                "n_new": 0,
-                "n_accepted": 0,
-                "n_rejected": 0,
-            }
-        if g["status"] == "replayed":
-            out = {"replayed": True, "pairs": None, "keepers": None}
-            if g["healed"]:
-                out["healed"] = "index"
-            return out
-        n_new, rng, corpus_applied = g["n_new"], g["rng"], g["applied"]
-        seen_max = corpus_applied[-1][1] if corpus_applied else -1
+        if any(self.index.manifest["buckets"].values()):
+            cand_idx, probe_buckets = self._probe_index(bands_new, keep)
+            cand_idx = keep(cand_idx)
+            candidates = keep(
+                cand_idx.select("doc_a", "doc_b")
+                .union(cand_new.select("doc_a", "doc_b"))
+                .distinct()
+            )
+            # candidate-only verification: shingle the candidate SEEN docs
+            # (bucket-pruned text fetch) and the new batch only
+            seen_rows = keep(
+                self._fetch_data(
+                    cand_idx.select(F.col("seen_id").alias("doc_id")).distinct(),
+                    "doc_id", "text", "keeper_doc_id",
+                )
+            )
+            arr_all = keep(
+                arr_new.union(dd.shingle_arrays(seen_rows.select("doc_id", "text")))
+            )
+            keeper_map = seen_rows.select(
+                F.col("doc_id").alias("_sid"), F.col("keeper_doc_id").alias("_sk")
+            )
+        else:
+            probe_buckets = []
+            candidates = keep(cand_new.select("doc_a", "doc_b").distinct())
+            arr_all = arr_new
+            keeper_map = None
+        # localCheckpoint (not persist): `pairs` is returned to the caller
+        # and must survive the deduper's tables being deleted
+        verified = dd.jaccard_verify(
+            new_docs, candidates, arrays_df=arr_all
+        ).localCheckpoint()
 
-        # -- sign ONLY the new batch. Reused intermediates are persist()ed
-        # (lazy, materialized inside their first consumer job, reused after)
-        # rather than localCheckpoint()ed (eager: one extra job each) — the
-        # round-4 ingest spent ~7 jobs on eager checkpoints of DataFrames
-        # that only needed recompute protection, not lineage truncation.
-        cached: list[DataFrame] = []
-
-        def keep(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
-        # AQE off for the ingest's own jobs (same refcounted per-session
-        # toggle as the CDC apply): the pipeline is fixed-shape — explicit
-        # broadcasts, known partition counts, and the exemplar-star cap for
-        # skew — so AQE's per-stage materialization barrier is pure
-        # overhead here (~20% of ingest wall at sf0.1, re-measured round 5
-        # after the narrow-signature rewrite; round 4's shuffle-heavy
-        # pipeline had the opposite trade).
-        aqe_off = _aqe_disabled(self.spark)
-        aqe_off.__enter__()
-        # Parallelize the narrow signing chain: a small batch often
-        # arrives as ONE file -> one input partition, and the
-        # explode-heavy shingle map then runs single-threaded (profiled
-        # ~2 s of a ~10 s ingest at sf0.1). Target partition count is
-        # sized by the batch's ROW count (known from the stats job) —
-        # a tiny batch must not fan out to full cluster width and pay
-        # scheduler overhead per near-empty task; a large multi-file
-        # batch keeps its natural partitioning and pays no shuffle.
-        # A related width bounds the ingest's SHUFFLE stages (scoped conf):
-        # reduce waves sized to the batch, not the cluster — but sized by
-        # the DERIVED row volume (band rows = len(bands) x docs; candidate
-        # shingle explodes are bigger still), not the raw doc count, so a
-        # small batch never collapses the verify stages to one task.
-        par = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, n_new // self.rows_per_task),
+        # keepers: connected components over duplicate edges, with every
+        # SEEN endpoint replaced by its frozen keeper (greedy contract —
+        # module docstring); bridges detected per policy
+        edges = verified.filter(F.col("jaccard") >= self.threshold)
+        if keeper_map is not None:
+            edges = (
+                edges
+                .join(keeper_map, F.col("doc_a") == F.col("_sid"), "left")
+                .select(F.coalesce("_sk", "doc_a").alias("doc_a"), "doc_b")
+                .join(keeper_map, F.col("doc_b") == F.col("_sid"), "left")
+                .select("doc_a", F.coalesce("_sk", "doc_b").alias("doc_b"))
+            )
+        keepers, n_rejected, bridges = self._resolve_keepers(
+            new_docs, edges, seen_max
         )
-        width = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, (n_new * max(len(self.bands), 2)) // self.rows_per_task),
-        )
-        spp = _scoped_shuffle_partitions(self.spark, width)
-        spp.__enter__()
-        try:
-            if 1 < par and new_docs.rdd.getNumPartitions() < par:
-                new_docs = keep(new_docs.repartition(par, "doc_id"))
-            # shingle ARRAYS, not exploded rows: signatures derive narrowly
-            # (zero shuffles — see dedup.minhash_signatures) and the verify
-            # stage explodes only candidate docs' arrays
-            arr_new = keep(dd.shingle_arrays(new_docs))
-            sig_new = dd.minhash_signatures(new_docs, arrays_df=arr_new)
-            bands_new = keep(self._band_rows(sig_new))
-
-            # -- candidates: new x index (bucket-pruned) + new x new (batch
-            # LSH, hot-bucket capped, reusing the PERSISTED band rows —
-            # re-banding from sig_new would recompute the minhash agg).
-            # COLD-START FAST PATH: an empty index has no probe targets,
-            # no candidate seen docs, no keeper map.
-            cand_new = dd.lsh_candidate_pairs(
-                sig_new,
-                bands=self.bands,
-                max_bucket=self.max_bucket,
-                banded=bands_new,
+        if bridges and self.on_bridge == "error":
+            raise ValueError(
+                f"batch {batch_id} bridges previously-committed duplicate "
+                f"clusters {bridges[:5]}: a from-scratch batch run would "
+                "relabel committed keepers, which incremental ingest "
+                "cannot honor retroactively. Re-create the deduper with "
+                "on_bridge='greedy' to accept frozen-label semantics."
             )
-            index_has_rows = any(self.index.manifest["buckets"].values())
-            if index_has_rows:
-                cand_idx, probe_buckets = self._probe_index(bands_new, keep)
-                cand_idx = keep(cand_idx)
-                candidates = keep(
-                    cand_idx.select("doc_a", "doc_b")
-                    .union(cand_new.select("doc_a", "doc_b"))
-                    .distinct()
-                )
-                # candidate-only verification: shingle the candidate SEEN
-                # docs (bucket-pruned text fetch) and the new batch only
-                seen_ids = cand_idx.select(
-                    F.col("seen_doc_id").alias("doc_id")
-                ).distinct()
-                seen_rows = keep(self._candidate_corpus_rows(seen_ids))
-                arr_all = keep(
-                    arr_new.union(
-                        dd.shingle_arrays(seen_rows.select("doc_id", "text"))
-                    )
-                )
-                keeper_map = seen_rows.select(
-                    F.col("doc_id").alias("_sid"),
-                    F.col("keeper_doc_id").alias("_sk"),
-                )
-            else:
-                probe_buckets = []
-                candidates = keep(cand_new.select("doc_a", "doc_b").distinct())
-                arr_all = arr_new
-                keeper_map = None
-            # localCheckpoint (not persist): `pairs` is returned to the
-            # caller and must survive the deduper's tables being deleted
-            verified = dd.jaccard_verify(
-                new_docs, candidates, arrays_df=arr_all
-            ).localCheckpoint()
-
-            # -- keepers: connected components over duplicate edges, with
-            # every SEEN endpoint replaced by its frozen keeper (greedy
-            # contract — module docstring); bridges detected per policy.
-            edges = verified.filter(F.col("jaccard") >= self.threshold)
-            if keeper_map is not None:
-                edges = (
-                    edges
-                    .join(keeper_map, F.col("doc_a") == F.col("_sid"), "left")
-                    .select(F.coalesce("_sk", "doc_a").alias("doc_a"), "doc_b")
-                    .join(keeper_map, F.col("doc_b") == F.col("_sid"), "left")
-                    .select("doc_a", F.coalesce("_sk", "doc_b").alias("doc_b"))
-                )
-            keepers, n_rejected, bridges = self._resolve_keepers(
-                new_docs, edges, seen_max
-            )
-            if bridges and self.on_bridge == "error":
-                raise ValueError(
-                    f"batch {batch_id} bridges previously-committed duplicate "
-                    f"clusters {bridges[:5]}: a from-scratch batch run would "
-                    "relabel committed keepers, which incremental ingest "
-                    "cannot honor retroactively. Re-create the deduper with "
-                    "on_bridge='greedy' to accept frozen-label semantics."
-                )
-
-            # -- commit 1: corpus rows (docs + keepers) with the applied
-            # interval riding the same manifest
-            corpus_rows = _with_system(
-                new_docs.select("doc_id", "text").join(keepers, "doc_id"),
-                self.corpus.bucket_expr("doc_id"),
-            )
-            self.corpus.append_buckets(
-                corpus_rows,
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(corpus_applied + [rng])
-                    ),
-                },
-                lineage={"dedup_ingest": batch_id, "n_docs": n_new},
-            )
-            # -- commit 2: index band rows (ALL new docs — rejected ones
-            # carry transitivity). A crash here is healed by the gate above.
-            self._append_index(bands_new, rng, batch_id, n_new)
-        finally:
-            spp.__exit__(None, None, None)
-            aqe_off.__exit__(None, None, None)
-            for df in cached:
-                df.unpersist()
-        return {
-            "replayed": False,
+        out = {
             "pairs": verified,
             "keepers": keepers,
-            "n_new": n_new,
-            "n_accepted": n_new - n_rejected,
+            "n_accepted": gate["n_new"] - n_rejected,
             "n_rejected": n_rejected,
             "bridges": bridges,
             "probe_buckets": probe_buckets,
-            "corpus_version": self.corpus.version,
-            "index_version": self.index.version,
         }
-
-    def _append_index(
-        self,
-        bands_new: DataFrame,
-        rng: tuple[int, int],
-        batch_id: str,
-        n_docs: int,
-    ) -> None:
-        rows = _with_system(
-            bands_new.select("bucket_key", "doc_id"),
-            self.index.bucket_expr("bucket_key"),
-        )
-        self.index.append_buckets(
-            rows,
-            properties={
-                APPLIED_PROP: json.dumps(
-                    merge_ranges(applied_ranges(self.index, self.corpus) + [tuple(rng)])
-                )
-            },
-            lineage={"dedup_ingest": batch_id, "n_docs": n_docs},
-        )
-
-    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
-        """Crash-retry path: the corpus committed id ranges the index lacks.
-        Re-sign exactly those ranges' rows and complete the index append.
-        Full-corpus scan filtered by the ranges — the rare recovery path
-        pays one scan; the hot path never does."""
-        batch_docs = (
-            self.corpus.read()
-            .filter(covered_expr(F.col("doc_id"), ranges))
-            .select("doc_id", "text")
-        )
-        sig = dd.minhash_signatures(batch_docs)
-        bands = self._band_rows(sig).persist()
-        try:
-            n = bands.select("doc_id").distinct().count()
-            rows = _with_system(
-                bands.select("bucket_key", "doc_id"),
-                self.index.bucket_expr("bucket_key"),
-            )
-            self.index.append_buckets(
-                rows,
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(applied_ranges(self.index, self.corpus) + list(ranges))
-                    )
-                },
-                lineage={"dedup_heal": json.dumps(list(ranges)), "n_docs": n},
-            )
-        finally:
-            bands.unpersist()
-
-    # ----------------------------------------------------------- maintenance
-
-    def auto_compact(self, files_per_bucket: int) -> dict:
-        """Compact corpus/index buckets holding more than
-        ``files_per_bucket`` files (see _auto_compact_tables)."""
-        return _auto_compact_tables(
-            [("corpus", self.corpus), ("index", self.index)], files_per_bucket
-        )
+        data_rows = new_docs.select("doc_id", "text").join(keepers, "doc_id")
+        return out, data_rows, bands_new
 
     # ---------------------------------------------------------------- reads
 
@@ -925,18 +849,17 @@ _VEC_SCHEMA = T.StructType(
 )
 
 
-class IncrementalEmbeddingIndex:
-    """Persisted SRP-LSH index over an embedding corpus with exactly-once
-    batch ingest — the embedding twin of :class:`IncrementalDeduper`:
+class IncrementalEmbeddingIndex(_IndexPair):
+    """Persisted SRP-LSH index over an embedding corpus — the embedding
+    twin of :class:`IncrementalDeduper`:
 
-    - ``index``: (bucket_key = "table|bucket", vec_id) rows, LakeTable keyed
-      by bucket_key → a probe opens only the lake buckets the NEW batch's
-      bucket rows hash into (new x index, never index x index); over-cap
-      buckets contribute only their exemplar (``emb.max_bucket`` — the same
-      hot-bucket guard and recall contract as the text deduper's module
-      docstring: at permissive thresholds SRP buckets are inherently coarse,
-      so the cap trades exhaustive pair enumeration inside a mega-bucket
-      for linear candidate volume);
+    - ``index``: (bucket_key = "table|bucket", vec_id) rows, keyed by
+      bucket_key → a probe opens only the lake buckets the NEW batch's
+      bucket rows hash into; over-cap buckets contribute only their
+      exemplar (``emb.max_bucket`` — the module docstring's hot-bucket
+      guard: at permissive thresholds SRP buckets are inherently coarse, so
+      the cap trades exhaustive pair enumeration inside a mega-bucket for
+      linear candidate volume);
     - ``vectors``: (vec_id, embedding) keyed by vec_id → candidate vectors
       for the exact integer-quantized cosine verify are fetched with a
       bucket-pruned read, never a corpus scan.
@@ -946,22 +869,24 @@ class IncrementalEmbeddingIndex:
     bit-identical to ingest-time banding. Pairs returned by ``ingest`` are
     exactly what the batch operator (similarity.neardup_pairs_lsh) returns
     over the union, restricted to pairs touching the batch (oracle-pinned
-    via the all-pairs ground truth). Same applied-interval gates / heal
-    protocol as the text deduper (module docstring); ids must be unique
-    within a batch and monotone across batches."""
+    via the all-pairs ground truth)."""
 
-    #: repartition sizing for the signing chain (see IncrementalDeduper):
-    #: the SRP matmul is one Arrow batch op per partition, so vectors take
-    #: a larger per-task quantum than shingled text.
+    _data_name = "vectors"
+    _data_schema = _VEC_SCHEMA
+    _index_schema = _INDEX_SCHEMA
+    _tag = "emb"
+    _nothing = {"pairs": None}
+
+    #: the SRP matmul is one Arrow batch op per partition, so vectors take a
+    #: larger per-task quantum than shingled text
     rows_per_task = 1024
+
+    vectors = property(lambda self: self.data)
 
     def __init__(self, spark: SparkSession, root: str):
         from migration_pair_spark.operators import similarity as sim
 
-        self.spark = spark
-        self.root = root
-        self.vectors = LakeTable.load(spark, os.path.join(root, "vectors"))
-        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+        super().__init__(spark, root)
         p = self.vectors.properties
         self.threshold = float(p["emb.threshold"])
         self.n_planes = int(p["emb.n_planes"])
@@ -969,6 +894,9 @@ class IncrementalEmbeddingIndex:
         self.dim = int(p["emb.dim"])
         self.max_bucket = int(p.get("emb.max_bucket", "0")) or None
         self._weights = sim.srp_weights(self.n_tables, self.n_planes, self.dim)
+        # bucket rows per vector: the verify stage's exact-cosine HOF is
+        # interpreted per element and must keep its parallelism
+        self._fanout = self.n_tables
 
     @classmethod
     def create(
@@ -989,34 +917,16 @@ class IncrementalEmbeddingIndex:
             d_planes, d_tables = sim.neardup_params(threshold)
             n_planes = n_planes if n_planes is not None else d_planes
             n_tables = n_tables if n_tables is not None else d_tables
-        LakeTable.create(
-            spark,
-            os.path.join(root, "vectors"),
-            _VEC_SCHEMA,
-            key_col="vec_id",
-            n_buckets=vector_buckets,
-            properties={
-                "emb.threshold": str(threshold),
-                "emb.n_planes": str(n_planes),
-                "emb.n_tables": str(n_tables),
-                "emb.dim": str(dim if dim is not None else sim.EMB_DIM),
-                "emb.max_bucket": str(max_bucket or 0),
-                APPLIED_PROP: "[]",
-            },
-        )
-        LakeTable.create(
-            spark,
-            os.path.join(root, "index"),
-            _INDEX_SCHEMA,
-            key_col="bucket_key",
-            n_buckets=index_buckets,
-            properties={APPLIED_PROP: "[]"},
-        )
-        return cls(spark, root)
+        props = {
+            "emb.threshold": str(threshold),
+            "emb.n_planes": str(n_planes),
+            "emb.n_tables": str(n_tables),
+            "emb.dim": str(dim if dim is not None else sim.EMB_DIM),
+            "emb.max_bucket": str(max_bucket or 0),
+        }
+        return cls._create(spark, root, vector_buckets, index_buckets, props)
 
-    # ------------------------------------------------------------- internals
-
-    def _bucket_rows(self, emb: DataFrame) -> DataFrame:
+    def index_rows(self, emb: DataFrame) -> DataFrame:
         """(bucket_key, doc_id) SRP bucket rows for the index — doc_id names
         the column so the two index tables share one schema."""
         from migration_pair_spark.operators import similarity as sim
@@ -1029,235 +939,59 @@ class IncrementalEmbeddingIndex:
             "doc_id",
         )
 
-    def probe_lake_buckets(self, bucket_rows: DataFrame) -> list[int]:
-        ids = (
-            bucket_rows.select(self.index.bucket_expr("bucket_key").alias("b"))
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r["b"]) for r in ids)
-
-    def _candidates(
-        self, new_emb: DataFrame, bucket_rows: DataFrame, keep=lambda df: df
-    ):
-        """(vec_a, vec_b, seen ids) candidate pairs: bucket-pruned index
-        probe (new x seen, hot-bucket capped) + SRP self-join within the
-        batch (new x new, same cap). The self-join reuses the PERSISTED
-        ``bucket_rows`` — bucket_key = "table|bucket" is injective over
-        (_t, _bucket) for fixed-width signatures, so joining on it is the
-        same banding, without re-running the Arrow matmul a second time.
-        ``keep`` persists the pruned index scan across the cap's two
-        consumers — see IncrementalDeduper._probe_index."""
-        lake_buckets = self.probe_lake_buckets(bucket_rows)
-        idx = (
-            self.index.read_buckets(lake_buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("bucket_key", F.col("doc_id").alias("seen_id"))
-        )
-        if self.max_bucket:
-            idx = keep(idx)
-        idx = _cap_hot_buckets(idx, "bucket_key", "seen_id", self.max_bucket)
-        vs_seen = (
-            bucket_rows.select("bucket_key", F.col("doc_id").alias("new_id"))
-            .join(idx, "bucket_key")
-            .filter(F.col("seen_id") != F.col("new_id"))
-            .select(
-                F.least("seen_id", "new_id").alias("vec_a"),
-                F.greatest("seen_id", "new_id").alias("vec_b"),
-                "seen_id",
-            )
-            .distinct()
-        )
-        vs_new = dd.capped_self_join(
-            bucket_rows, ["bucket_key"], "doc_id", self.max_bucket,
-            "vec_a", "vec_b",
-        )
-        return vs_seen, vs_new, lake_buckets
-
-    def _candidate_vectors(self, seen_ids: DataFrame) -> DataFrame:
-        bucket_rows = (
-            seen_ids.select(self.vectors.bucket_expr("vec_id").alias("b"))
-            .distinct()
-            .collect()
-        )
-        buckets = sorted(int(r["b"]) for r in bucket_rows)
-        rows = (
-            self.vectors.read_buckets(buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("vec_id", "embedding")
-        )
-        return rows.join(F.broadcast(seen_ids), "vec_id", "left_semi")
-
-    # --------------------------------------------------------------- ingest
-
     def ingest(self, new_emb: DataFrame, batch_id: str) -> dict:
         """Process one batch of (vec_id, embedding) rows: near-dup pairs vs
         the index and within the batch (exact verified cosine >= threshold),
         then append vectors + bucket rows. Idempotent per id range; heals a
         crashed prior batch like the text deduper."""
+        return self._ingest(new_emb, batch_id)
+
+    def _process(self, new_emb: DataFrame, gate: dict, keep, batch_id: str):
         from migration_pair_spark.operators import similarity as sim
 
-        g = _ingest_gate(
-            self.vectors, self.index, new_emb, batch_id, "vec_id", "vec ids",
-            self._heal_index,
+        bucket_rows = keep(self.index_rows(new_emb))
+        # new x new: the SRP self-join within the batch reuses the PERSISTED
+        # bucket rows — bucket_key = "table|bucket" is injective over
+        # (_t, _bucket) for fixed-width signatures, so joining on it is the
+        # same banding without re-running the Arrow matmul
+        candidates = dd.capped_self_join(
+            bucket_rows, ["bucket_key"], "doc_id", self.max_bucket,
+            "vec_a", "vec_b",
         )
-        if g["status"] == "empty":
-            return {"replayed": False, "empty": True, "pairs": None, "n_new": 0}
-        if g["status"] == "replayed":
-            out = {"replayed": True, "pairs": None}
-            if g["healed"]:
-                out["healed"] = "index"
-            return out
-        n_new, rng, vec_applied = g["n_new"], g["rng"], g["applied"]
-
-        cached: list[DataFrame] = []
-
-        def keep(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
-        # fixed-shape pipeline — AQE off for the ingest's jobs (see
-        # IncrementalDeduper.ingest)
-        aqe_off = _aqe_disabled(self.spark)
-        aqe_off.__enter__()
-        # small-batch parallelism fix, row-count sized — see
-        # IncrementalDeduper.ingest (vectors are cheaper per row than
-        # shingled docs, so the per-task quantum is larger). The SHUFFLE
-        # width is sized by the derived bucket-row volume (n_tables rows
-        # per vector) — the verify stage's exact-cosine HOF is interpreted
-        # per element and must keep its parallelism (a doc-count-sized
-        # width of 1 serialized it: measured 10 s -> 19 s at sf0.1).
-        par = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, n_new // self.rows_per_task),
-        )
-        width = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, (n_new * self.n_tables) // self.rows_per_task),
-        )
-        spp = _scoped_shuffle_partitions(self.spark, width)
-        spp.__enter__()
-        try:
-            if 1 < par and new_emb.rdd.getNumPartitions() < par:
-                new_emb = keep(new_emb.repartition(par, "vec_id"))
-            bucket_rows = keep(self._bucket_rows(new_emb))
-            # cold-start fast path mirrors the text deduper: an empty index
-            # has nothing to probe and no candidate vectors to fetch
-            if any(self.index.manifest["buckets"].values()):
-                vs_seen, vs_new, probe_buckets = self._candidates(
-                    new_emb, bucket_rows, keep
-                )
-                vs_seen = keep(vs_seen)
-                candidates = (
-                    vs_seen.select("vec_a", "vec_b").union(vs_new).distinct()
-                )
-                seen_vecs = self._candidate_vectors(
-                    vs_seen.select(F.col("seen_id").alias("vec_id")).distinct()
-                )
-                all_vecs = keep(
-                    new_emb.select("vec_id", "embedding").union(seen_vecs)
-                )
-            else:
-                probe_buckets = []
-                candidates = dd.capped_self_join(
-                    bucket_rows, ["bucket_key"], "doc_id", self.max_bucket,
-                    "vec_a", "vec_b",
-                )
-                all_vecs = keep(new_emb.select("vec_id", "embedding"))
-            qa = sim._quantized_side(all_vecs, "vec_a", "vec_id", "embedding")
-            qb = sim._quantized_side(all_vecs, "vec_b", "vec_id", "embedding")
-            cos = sim._exact_cosine(
-                sim._int_dot(F.col("_q_vec_a"), F.col("_q_vec_b")),
-                F.col("_n2_vec_a"),
-                F.col("_n2_vec_b"),
+        probe_buckets = []
+        all_vecs = new_emb.select("vec_id", "embedding")
+        # cold-start fast path: an empty index has nothing to probe and no
+        # candidate vectors to fetch
+        if any(self.index.manifest["buckets"].values()):
+            vs_seen, probe_buckets = self._probe_index(bucket_rows, keep)
+            vs_seen = keep(vs_seen)
+            candidates = (
+                vs_seen.select("vec_a", "vec_b").union(candidates).distinct()
             )
-            pairs = (
-                candidates.join(qa, "vec_a")
-                .join(qb, "vec_b")
-                .withColumn("_sim", cos)
-                .filter(F.col("_sim") >= F.lit(self.threshold))
-                .select("vec_a", "vec_b", F.round(F.col("_sim"), 4).alias("cosine"))
-                .localCheckpoint()
-            )
-
-            self.vectors.append_buckets(
-                _with_system(
-                    new_emb.select("vec_id", "embedding"),
-                    self.vectors.bucket_expr("vec_id"),
-                ),
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(vec_applied + [rng])
-                    ),
-                },
-                lineage={"emb_ingest": batch_id, "n_vecs": n_new},
-            )
-            self._append_index(bucket_rows, rng, batch_id, n_new)
-        finally:
-            spp.__exit__(None, None, None)
-            aqe_off.__exit__(None, None, None)
-            for df in cached:
-                df.unpersist()
-        return {
-            "replayed": False,
-            "pairs": pairs,
-            "n_new": n_new,
-            "probe_buckets": probe_buckets,
-            "vectors_version": self.vectors.version,
-            "index_version": self.index.version,
-        }
-
-    def _append_index(
-        self,
-        bucket_rows: DataFrame,
-        rng: tuple[int, int],
-        batch_id: str,
-        n: int,
-    ) -> None:
-        self.index.append_buckets(
-            _with_system(
-                bucket_rows.select("bucket_key", "doc_id"),
-                self.index.bucket_expr("bucket_key"),
-            ),
-            properties={
-                APPLIED_PROP: json.dumps(
-                    merge_ranges(applied_ranges(self.index, self.vectors) + [tuple(rng)])
+            all_vecs = all_vecs.union(
+                self._fetch_data(
+                    vs_seen.select(F.col("seen_id").alias("vec_id")).distinct(),
+                    "vec_id", "embedding",
                 )
-            },
-            lineage={"emb_ingest": batch_id, "n_vecs": n},
-        )
-
-    def auto_compact(self, files_per_bucket: int) -> dict:
-        """Compact vectors/index buckets holding more than
-        ``files_per_bucket`` files (see _auto_compact_tables)."""
-        return _auto_compact_tables(
-            [("vectors", self.vectors), ("index", self.index)],
-            files_per_bucket,
-        )
-
-    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
-        batch = (
-            self.vectors.read()
-            .filter(covered_expr(F.col("vec_id"), ranges))
-            .select("vec_id", "embedding")
-        )
-        rows = self._bucket_rows(batch).persist()
-        try:
-            n = rows.select("doc_id").distinct().count()
-            self.index.append_buckets(
-                _with_system(
-                    rows.select("bucket_key", "doc_id"),
-                    self.index.bucket_expr("bucket_key"),
-                ),
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(applied_ranges(self.index, self.vectors) + list(ranges))
-                    )
-                },
-                lineage={"emb_heal": json.dumps(list(ranges)), "n_vecs": n},
             )
-        finally:
-            rows.unpersist()
+        all_vecs = keep(all_vecs)
+        qa = sim._quantized_side(all_vecs, "vec_a", "vec_id", "embedding")
+        qb = sim._quantized_side(all_vecs, "vec_b", "vec_id", "embedding")
+        cos = sim._exact_cosine(
+            sim._int_dot(F.col("_q_vec_a"), F.col("_q_vec_b")),
+            F.col("_n2_vec_a"),
+            F.col("_n2_vec_b"),
+        )
+        pairs = (
+            candidates.join(qa, "vec_a")
+            .join(qb, "vec_b")
+            .withColumn("_sim", cos)
+            .filter(F.col("_sim") >= F.lit(self.threshold))
+            .select("vec_a", "vec_b", F.round(F.col("_sim"), 4).alias("cosine"))
+            .localCheckpoint()
+        )
+        out = {"pairs": pairs, "probe_buckets": probe_buckets}
+        return out, new_emb.select("vec_id", "embedding"), bucket_rows
 
 
 # --------------------------------------------------------------------------
@@ -1292,7 +1026,7 @@ _CHUNK_INDEX_SCHEMA = T.StructType(
 )
 
 
-class IncrementalChunkIndex:
+class IncrementalChunkIndex(_IndexPair):
     """A persisted (corpus, chunk-key index) pair with exactly-once batch
     ingest of CCNet-style span dedup (dedup.chunk_dedup semantics): each
     new document is rewritten to the corpus-wide first occurrences of its
@@ -1303,25 +1037,26 @@ class IncrementalChunkIndex:
     against the index, so a boilerplate chunk occurs once no matter how
     many million pages carry it, and the probe join is 1:m with no
     quadratic hot-bucket exposure at all). The probe reads only the index
-    lake buckets the batch's chunk keys hash into (bounded driver collect,
-    same shape as the CDC gate). AQE stays ON here — unlike the
-    fixed-shape LSH ingest, this pipeline's shuffles (probe join, firsts
-    agg, reassembly) have data-dependent sizes AQE can right-size.
+    lake buckets the batch's chunk keys hash into. AQE is off for the
+    ingest's jobs like the LSH/SRP ingests: the pipeline is fixed-shape
+    (the probe join is explicitly broadcast on the isin path and 1:m
+    key-joined otherwise; the firsts agg and reassembly partial-aggregate)
+    and the scoped shuffle width right-sizes the partitions AQE used to
+    coalesce.
 
-    Gate/heal contract: identical to :class:`IncrementalDeduper` — a
-    ``dedup.applied`` doc-id interval set on each table, updated
-    atomically with its data commit; monotone + unique-id gates; the
-    corpus-minus-index interval difference is the pending work and any
-    later ingest heals it FIRST (an index missing committed chunk keys
-    would let a duplicated span through — an acceptance that can never be
-    retracted). Healing re-chunks exactly the pending id ranges from the
-    corpus and appends the chunk keys not already present; chunking is
-    deterministic, so the healed index is byte-equal to a clean run's.
+    Gate/heal contract: the core's (module docstring) — an index missing
+    committed chunk keys would let a duplicated span through, an
+    acceptance that can never be retracted, so pending ranges heal FIRST.
+    Healing re-chunks exactly the pending id ranges from the corpus and
+    appends the chunk keys not already present."""
 
-    Reference parity note: the reference (Mycenae) has no dedup surface at
-    all — this extends the engine's LLM-pipeline family
-    (/root/reference/Tasks/MigrationTask.cs:125-151 is a row copier); the
-    design mirrors the repo's own IncrementalDeduper contract instead."""
+    _data_name = "corpus"
+    _data_schema = _CHUNK_CORPUS_SCHEMA
+    _index_schema = _CHUNK_INDEX_SCHEMA
+    _tag = "chunk"
+    _nothing = {"rewritten": None, "n_chunks": 0, "n_kept": 0}
+    #: chunk occurrences per doc (~words / w) sizing the shuffle width
+    _fanout = 16
 
     #: repartition sizing for the narrow chunking map (chunking is lighter
     #: than shingling — fewer output rows per doc, no k-gram explosion)
@@ -1339,15 +1074,14 @@ class IncrementalChunkIndex:
     #: 0 disables the fast path.
     probe_isin_max_keys = 1024
 
+    corpus = property(lambda self: self.data)
+
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        self.corpus = LakeTable.load(spark, os.path.join(root, "corpus"))
-        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+        super().__init__(spark, root)
         self.w = int(self.corpus.properties["chunk.w"])
         # persisted ck values embed the tokenizer: loading an index built
         # with a DIFFERENT tokenizer would silently re-admit every seen
-        # span (keys never match) — fail loudly instead (review-caught)
+        # span (keys never match) — fail loudly instead
         tok = self.corpus.properties.get("chunk.tokenizer")
         if tok != dd.CHUNK_TOKENIZER:
             raise ValueError(
@@ -1375,40 +1109,15 @@ class IncrementalChunkIndex:
             "chunk.w": str(w),
             "chunk.tokenizer": dd.CHUNK_TOKENIZER,
             SWEEP_PROP: "0",  # see SWEEP_PROP: property-backed from birth
-            APPLIED_PROP: "[]",
         }
-        LakeTable.create(
-            spark,
-            os.path.join(root, "corpus"),
-            _CHUNK_CORPUS_SCHEMA,
-            key_col="doc_id",
-            n_buckets=corpus_buckets,
-            properties=props,
-            # src_key blooms bound purge_source to ~O(files holding the
-            # purged url): urls hash-spread across doc-id buckets, so
-            # min/max zones never prune them — blooms are the only skip
-            bloom_filter_cols=("src_key",),
-        )
-        LakeTable.create(
-            spark,
-            os.path.join(root, "index"),
-            _CHUNK_INDEX_SCHEMA,
-            key_col="ck",
-            n_buckets=index_buckets,
-            properties={APPLIED_PROP: "[]"},
-            # chunk keys are md5 hex (uniform): zone maps can never prune
-            # them, blooms always can — they power both the pushed-IN
-            # probe's row-group skipping and point lookups on the index
-            bloom_filter_cols=("ck",),
-        )
-        return cls(spark, root)
-
-    # ------------------------------------------------------------- internals
-
-    def pending_ranges(self) -> list[tuple[int, int]]:
-        """Doc-id intervals committed to the corpus but not the index."""
-        return subtract_ranges(
-            applied_ranges(self.corpus), applied_ranges(self.index, self.corpus)
+        # src_key blooms bound purge_source to ~O(files holding the purged
+        # url): urls hash-spread across doc-id buckets, so min/max zones
+        # never prune them. Chunk keys are md5 hex (uniform): zone maps can
+        # never prune them either, blooms always can — they power both the
+        # pushed-IN probe's row-group skipping and point lookups on the index
+        return cls._create(
+            spark, root, corpus_buckets, index_buckets, props,
+            data_blooms=("src_key",), index_blooms=("ck",),
         )
 
     def purge_source(self, values, conflict_retries: int = 3) -> int:
@@ -1421,34 +1130,14 @@ class IncrementalChunkIndex:
         STAY in the index, so a verbatim re-submission of erased spans is
         still deduplicated rather than re-admitted.
 
-        Refuses while the index lags the corpus (pending id ranges): heal
-        re-chunks pending ranges FROM the corpus, and a purge hole there
-        would heal an index missing committed keys — run any ingest/sweep
-        first (healing is automatic there). The corpus rewrite is
-        file-pruned by the src_key blooms recorded at create.
-
-        Returns the corpus's new version."""
-        self.corpus.refresh()
-        self.index.refresh()
-        pending = self.pending_ranges()
-        if pending:
-            raise ValueError(
-                f"purge_source: index lags the corpus (pending id ranges "
-                f"{pending}) — run any ingest or sweep first (it heals "
-                f"automatically), then purge"
-            )
+        Refuses while the index lags the corpus (see
+        ``_require_index_current``; any ingest or sweep heals it). The
+        corpus rewrite is file-pruned by the src_key blooms recorded at
+        create. Returns the corpus's new version."""
+        self._require_index_current("purge_source")
         return self.corpus.purge_matching(
             "src_key", values, conflict_retries=conflict_retries
         )
-
-    def probe_lake_buckets(self, cks: DataFrame) -> list[int]:
-        """The index lake buckets the probe must open: distinct
-        pmod(xxhash64(ck), n_buckets) over the batch's chunk keys. Bounded
-        driver collect (<= index.n_buckets values)."""
-        rows = (
-            cks.select(self.index.bucket_expr("ck").alias("b")).distinct().collect()
-        )
-        return sorted(int(r["b"]) for r in rows)
 
     def _flag_chunks(
         self, chunks: DataFrame, keep=lambda df: df, n_docs: int | None = None
@@ -1465,10 +1154,9 @@ class IncrementalChunkIndex:
         pre-gates the pushed-IN fast path: distinct chunk keys ~>= docs,
         so a batch with more docs than the key cap skips the
         overflow-detection distinct entirely instead of paying a full
-        shuffle just to learn "too many" before the join (review-caught)."""
-        index_has_rows = any(self.index.manifest["buckets"].values())
+        shuffle just to learn "too many" before the join."""
         self.last_probe_mode = None
-        if index_has_rows:
+        if any(self.index.manifest["buckets"].values()):
             small = None
             if self.probe_isin_max_keys and (
                 n_docs is None or n_docs <= self.probe_isin_max_keys
@@ -1478,9 +1166,7 @@ class IncrementalChunkIndex:
                 # the cap (+1 detects overflow — an arbitrary subset is
                 # only used when it is the COMPLETE set)
                 head = (
-                    chunks.select(
-                        "ck", self.index.bucket_expr("ck").alias("_b")
-                    )
+                    chunks.select("ck", self.index.bucket_expr("ck").alias("_b"))
                     .distinct()
                     .limit(self.probe_isin_max_keys + 1)
                     .collect()
@@ -1496,11 +1182,10 @@ class IncrementalChunkIndex:
                 # min..max range — useless on md5-uniform keys, and the
                 # fast path would silently read every probed row group's
                 # data pages). session.py raises it, but this code must
-                # hold on DRIVER-OWNED sessions too (the correctness
-                # harness hands us one), and whenever probe_isin_max_keys
-                # is raised past the session value — so ensure it here;
-                # runtime-settable, and raising it is globally safe
-                # (review-caught, pass 2)
+                # hold on DRIVER-OWNED sessions too, and whenever
+                # probe_isin_max_keys is raised past the session value — so
+                # ensure it here; runtime-settable, and raising it is
+                # globally safe
                 conf_key = "spark.sql.parquet.pushdown.inFilterThreshold"
                 cur = int(self.spark.conf.get(conf_key, "10"))
                 if cur <= len(keys):
@@ -1509,10 +1194,9 @@ class IncrementalChunkIndex:
                 # bloom filters, so this reads footers + blooms, not the
                 # index's data pages; the surviving rows are a subset of
                 # the batch keys, hence the explicit broadcast (AQE can't
-                # see the size — ingest paths may scope it off)
+                # see the size — ingest paths scope it off)
                 idx = F.broadcast(
-                    self.index.read_buckets(probe_buckets)
-                    .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+                    _live(self.index, probe_buckets)
                     .filter(F.col("ck").isin(keys))
                     .select("ck")
                     .withColumn("_seen", F.lit(True))
@@ -1521,15 +1205,13 @@ class IncrementalChunkIndex:
                 self.last_probe_mode = "join"
                 probe_buckets = self.probe_lake_buckets(chunks.select("ck"))
                 idx = (
-                    self.index.read_buckets(probe_buckets)
-                    .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+                    _live(self.index, probe_buckets)
                     .select("ck")
                     .withColumn("_seen", F.lit(True))
                 )
             # persist: `firsts` (agg) and `flagged` (join back) both
             # consume `marked` — without the cache each would re-read the
             # pruned index bucket files and re-run the probe join
-            # (review-caught; same fix as the LSH probe's keep(idx))
             marked = keep(chunks.join(idx, "ck", "left"))
         else:
             probe_buckets = []
@@ -1544,6 +1226,13 @@ class IncrementalChunkIndex:
             F.col("_seen").isNull() & (F.col("occ") == F.col("first_occ")),
         )
         return flagged, firsts, probe_buckets
+
+    def index_rows(self, df: DataFrame) -> DataFrame:
+        """The chunk keys of ``df`` absent from the index, with their first
+        occurrence — the same probe the crashed run used (the crash
+        happened before its index append, so the index state is
+        identical)."""
+        return self._flag_chunks(dd.chunk_rows(df, w=self.w))[1]
 
     def ingest(
         self,
@@ -1565,186 +1254,38 @@ class IncrementalChunkIndex:
         deduped_text) for the batch (localCheckpointed — survives the
         tables), plus counters}. On a replayed batch ``rewritten`` is None
         (already persisted in the corpus)."""
-        g = _ingest_gate(
-            self.corpus, self.index, new_docs, batch_id, "doc_id", "doc ids",
-            self._heal_index,
+        return self._ingest(new_docs, batch_id, corpus_properties)
+
+    def _process(self, new_docs: DataFrame, gate: dict, keep, batch_id: str):
+        chunks = keep(dd.chunk_rows(new_docs, w=self.w))
+        flagged, firsts, probe_buckets = self._flag_chunks(
+            chunks, keep, n_docs=gate["n_new"]
         )
-        if g["status"] == "empty":
-            return {
-                "replayed": False,
-                "empty": True,
-                "rewritten": None,
-                "n_new": 0,
-                "n_chunks": 0,
-                "n_kept": 0,
-            }
-        if g["status"] == "replayed":
-            out = {"replayed": True, "rewritten": None}
-            if g["healed"]:
-                out["healed"] = "index"
-            return out
-        n_new, rng, corpus_applied = g["n_new"], g["rng"], g["applied"]
-
-        cached: list[DataFrame] = []
-
-        def keep(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
-        # batch-sized shuffle width (scoped), sized by the derived
-        # chunk-occurrence volume (~docs x words/w), not docs. AQE is now
-        # OFF for the ingest's own jobs, like the LSH/SRP ingests: the
-        # pipeline is fixed-shape (the probe join is explicitly broadcast
-        # on the isin path and 1:m key-joined otherwise; the firsts agg
-        # and reassembly partial-aggregate), and AQE's per-stage
-        # materialization barrier billed one extra JOB per shuffle stage
-        # (measured r6: 47 jobs -> fewer; wall compared below; the round-5 rationale
-        # predated the width scoping that now right-sizes the partitions
-        # AQE used to coalesce).
-        par = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, n_new // self.rows_per_task),
-        )
-        width = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, (n_new * 16) // self.rows_per_task),
-        )
-        aqe_off = _aqe_disabled(self.spark)
-        aqe_off.__enter__()
-        spp = _scoped_shuffle_partitions(self.spark, width)
-        spp.__enter__()
-        try:
-            if 1 < par and new_docs.rdd.getNumPartitions() < par:
-                new_docs = keep(new_docs.repartition(par, "doc_id"))
-            chunks = keep(dd.chunk_rows(new_docs, w=self.w))
-            flagged, firsts, probe_buckets = self._flag_chunks(
-                chunks, keep, n_docs=n_new
-            )
-            # localCheckpoint (not persist): returned to the caller and must
-            # survive the index's tables being deleted; also consumed twice
-            # below (corpus rows + counters)
-            rewritten = dd.chunk_reassemble(flagged).localCheckpoint()
-            sums = rewritten.agg(
-                F.sum("n_chunks").alias("nc"), F.sum("n_kept").alias("nk")
-            ).collect()[0]
-
-            # LEFT join: a NULL-text doc has no chunks and therefore no
-            # rewritten row, but its id range is marked applied with this
-            # commit — an inner join would drop the doc from the corpus
-            # FOREVER while the gate replays its redelivery as a no-op
-            # (review-caught, reproduced). Such docs persist with NULL
-            # rewrite columns.
-            # provenance rides along when the batch carries it (the CDC
-            # sweep passes the page url as src_key — purge_source's handle)
-            doc_cols = ["doc_id", "text"] + (
-                ["src_key"] if "src_key" in new_docs.columns else []
-            )
-            corpus_rows = _with_system(
-                new_docs.select(*doc_cols).join(rewritten, "doc_id", "left"),
-                self.corpus.bucket_expr("doc_id"),
-            )
-            props = {
-                APPLIED_PROP: json.dumps(merge_ranges(corpus_applied + [rng])),
-            }
-            if corpus_properties:
-                props.update(
-                    corpus_properties(rng[0], rng[1])
-                    if callable(corpus_properties)
-                    else dict(corpus_properties)
-                )
-            self.corpus.append_buckets(
-                corpus_rows,
-                properties=props,
-                lineage={"chunk_ingest": batch_id, "n_docs": n_new},
-            )
-            self._append_index(firsts, rng, batch_id, n_new)
-        finally:
-            spp.__exit__(None, None, None)
-            aqe_off.__exit__(None, None, None)
-            for df in cached:
-                df.unpersist()
-        return {
-            "replayed": False,
+        # localCheckpoint (not persist): returned to the caller and must
+        # survive the index's tables being deleted; also consumed twice
+        # below (corpus rows + counters)
+        rewritten = dd.chunk_reassemble(flagged).localCheckpoint()
+        sums = rewritten.agg(
+            F.sum("n_chunks").alias("nc"), F.sum("n_kept").alias("nk")
+        ).collect()[0]
+        out = {
             "rewritten": rewritten,
-            "n_new": n_new,
             "n_chunks": int(sums["nc"] or 0),
             "n_kept": int(sums["nk"] or 0),
             "probe_buckets": probe_buckets,
-            "corpus_version": self.corpus.version,
-            "index_version": self.index.version,
         }
-
-    def _append_index(
-        self, firsts: DataFrame, rng: tuple[int, int], batch_id: str, n_docs: int
-    ) -> None:
-        rows = _with_system(
-            firsts.select("ck", "first_occ"), self.index.bucket_expr("ck")
+        # LEFT join: a NULL-text doc has no chunks and therefore no
+        # rewritten row, but its id range is marked applied with this
+        # commit — an inner join would drop the doc from the corpus FOREVER
+        # while the gate replays its redelivery as a no-op. Such docs
+        # persist with NULL rewrite columns. Provenance rides along when
+        # the batch carries it (the CDC sweep passes the page url as
+        # src_key — purge_source's handle).
+        doc_cols = ["doc_id", "text"] + (
+            ["src_key"] if "src_key" in new_docs.columns else []
         )
-        self.index.append_buckets(
-            rows,
-            properties={
-                APPLIED_PROP: json.dumps(
-                    merge_ranges(
-                        applied_ranges(self.index, self.corpus) + [tuple(rng)]
-                    )
-                )
-            },
-            lineage={"chunk_ingest": batch_id, "n_docs": n_docs},
-        )
-
-    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
-        """Crash-retry path: the corpus committed id ranges the index lacks.
-        Re-chunk exactly those ranges' rows, anti-join against the index
-        (same probe the crashed run used — the crash happened before its
-        index append, so the index state is identical), and complete the
-        append. Chunking is deterministic, so the healed index is
-        byte-equal to a clean run's."""
-        batch_docs = (
-            self.corpus.read()
-            .filter(covered_expr(F.col("doc_id"), ranges))
-            .select("doc_id", "text")
-        )
-        chunks = dd.chunk_rows(batch_docs, w=self.w).persist()
-        try:
-            # interval sizes over-count docs (gap absorption) — harmless:
-            # an overestimate only skips the fast path, never correctness
-            _, firsts, _ = self._flag_chunks(
-                chunks, n_docs=sum(hi - lo + 1 for lo, hi in ranges)
-            )
-            firsts = firsts.persist()
-            # lineage count from the already-persisted chunks — a second
-            # corpus scan just for the counter would double the recovery
-            # path's heaviest read (review-caught)
-            n = chunks.select("doc_id").distinct().count()
-            rows = _with_system(
-                firsts.select("ck", "first_occ"), self.index.bucket_expr("ck")
-            )
-            self.index.append_buckets(
-                rows,
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(
-                            applied_ranges(self.index, self.corpus) + list(ranges)
-                        )
-                    )
-                },
-                lineage={"chunk_heal": json.dumps(list(ranges)), "n_docs": n},
-            )
-            firsts.unpersist()
-        finally:
-            chunks.unpersist()
-
-    # ----------------------------------------------------------- maintenance
-
-    def auto_compact(self, files_per_bucket: int) -> dict:
-        """Compact corpus/index buckets holding more than
-        ``files_per_bucket`` files (see _auto_compact_tables). The sweep
-        bridge and streaming ingest loops call this per-batch behind their
-        own knobs so a long-running loop's probe cost tracks data volume,
-        not batch history."""
-        return _auto_compact_tables(
-            [("corpus", self.corpus), ("index", self.index)], files_per_bucket
-        )
+        data_rows = new_docs.select(*doc_cols).join(rewritten, "doc_id", "left")
+        return out, data_rows, firsts
 
     # ---------------------------------------------------------------- reads
 

@@ -99,7 +99,7 @@ def _run(spark, work, n_events, n_batches, cap=0):
 
     # gate state stays bounded: one interval per table under monotone sweeps
     corpus_ranges = applied_ranges(ix.corpus)
-    index_ranges = applied_ranges(ix.index, ix.corpus)
+    index_ranges = applied_ranges(ix.index)
     assert len(corpus_ranges) == 1, corpus_ranges
     assert len(index_ranges) == 1, index_ranges
 

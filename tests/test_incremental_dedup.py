@@ -428,13 +428,11 @@ def test_rescale_composes_with_incremental_ingest(spark, tmp_path):
     assert _keepers_map(r2["keepers"])[20] == 0
 
 
-def test_legacy_batch_gate_is_reconstructed(spark, tmp_path):
-    """Review-caught gate bypass: a deduper root written by the round-4
-    per-batch gate (dedup.batches + dedup.batch.{id} range properties)
-    must load with its applied intervals RECONSTRUCTED — an empty set
-    would silently disable the exactly-once and monotone gates and let a
-    replayed batch commit duplicate rows. Missing range properties refuse
-    loudly instead of guessing."""
+def test_legacy_batch_gate_is_refused(spark, tmp_path):
+    """A table written by the retired per-batch gate (dedup.batches, no
+    dedup.applied) must refuse to load its applied intervals: reading it
+    as "nothing applied" would silently disable the exactly-once and
+    monotone gates and let a replayed batch commit duplicate rows."""
     import json
 
     import pytest
@@ -442,7 +440,6 @@ def test_legacy_batch_gate_is_reconstructed(spark, tmp_path):
     from migration_pair_spark.lakehouse.table import LakeTable
     from migration_pair_spark.operators.incremental import (
         _CORPUS_SCHEMA,
-        _INDEX_SCHEMA,
         applied_ranges,
     )
 
@@ -453,31 +450,9 @@ def test_legacy_batch_gate_is_reconstructed(spark, tmp_path):
         key_col="doc_id",
         n_buckets=2,
         properties={
-            "dedup.batches": json.dumps(["b0", "b1"]),
-            "dedup.max_doc_id": "19",
+            "dedup.batches": json.dumps(["b0"]),
             "dedup.batch.b0": json.dumps([0, 9]),
-            "dedup.batch.b1": json.dumps([10, 19]),
         },
     )
-    index = LakeTable.create(
-        spark,
-        str(tmp_path / "index"),
-        _INDEX_SCHEMA,
-        key_col="bucket_key",
-        n_buckets=2,
-        properties={"dedup.batches": json.dumps(["b0"])},
-    )
-    assert applied_ranges(corpus) == [(0, 19)]
-    # index ranges live on the corpus sibling in the legacy layout
-    assert applied_ranges(index, corpus) == [(0, 9)]
-    # a legacy table whose range property is gone must refuse, not bypass
-    index2 = LakeTable.create(
-        spark,
-        str(tmp_path / "index2"),
-        _INDEX_SCHEMA,
-        key_col="bucket_key",
-        n_buckets=2,
-        properties={"dedup.batches": json.dumps(["ghost"])},
-    )
     with pytest.raises(ValueError, match="legacy dedup batch gate"):
-        applied_ranges(index2, corpus)
+        applied_ranges(corpus)

@@ -89,7 +89,7 @@ def test_sequential_equals_batch_operator(spark, tmp_path):
 
 def test_probe_is_bucket_pruned(spark, index):
     new = _df(spark, BATCH2)
-    rows = index._bucket_rows(new).localCheckpoint()
+    rows = index.index_rows(new).localCheckpoint()
     probe = index.probe_lake_buckets(rows)
     assert 0 < len(probe) < index.index.n_buckets
     all_files = {

@@ -66,3 +66,43 @@ def test_history_without_stats_has_null_rows(spark, tmp_path):
     rows = {r["version"]: r for r in t.history().collect()}
     assert rows[max(rows)]["n_rows"] is None
     assert all(r["stats_json"] is None for r in t.files().collect())
+
+
+def test_history_labels_index_ingests_and_heals(spark, tmp_path):
+    """Incremental index commits classify by their lineage keys: every
+    family's ``*_ingest`` (a chunk-index ingest here) is ``dedup-ingest``
+    and every ``*_heal`` is ``dedup-heal``, not a plain ``commit``."""
+    import pytest
+
+    from migration_pair_spark.operators.incremental import (
+        IncrementalChunkIndex,
+    )
+
+    ix = IncrementalChunkIndex.create(
+        spark, str(tmp_path / "ix"), corpus_buckets=2, index_buckets=2, w=3
+    )
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    ix.ingest(docs([(0, "a b c d e f")]), "base")
+    # crash between the corpus commit and the index append, then heal
+    ix._append_index = lambda *a, **k: (_ for _ in ()).throw(
+        RuntimeError("injected crash")
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ix.ingest(docs([(1, "a b c x y z")]), "b1")
+    del ix._append_index
+    assert ix.ingest(docs([(1, "a b c x y z")]), "b1")["healed"] == "index"
+
+    def ops(table):
+        return [
+            (r["operation"], json.loads(r["lineage_json"] or "{}"))
+            for r in table.history().orderBy("version").collect()
+        ]
+
+    corpus, index = ops(ix.corpus), ops(ix.index)
+    assert [op for op, _ in corpus] == ["create", "dedup-ingest", "dedup-ingest"]
+    assert [op for op, _ in index] == ["create", "dedup-ingest", "dedup-heal"]
+    assert index[1][1]["chunk_ingest"] == "base"
+    assert json.loads(index[2][1]["chunk_heal"]) == [[1, 1]]

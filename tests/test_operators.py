@@ -204,6 +204,39 @@ def test_dedup_clusters_connected_components(spark):
         assert got == expected, f"cap={cap}"
 
 
+def test_dedup_clusters_string_ids_match_distributed_path(spark):
+    """The driver fast path keys its map by long: non-integral ids (here
+    strings) must take the type-generic distributed loop and label exactly
+    as the forced distributed path does."""
+    docs = spark.createDataFrame([(c,) for c in "abcdefg"], "doc_id string")
+    pairs = spark.createDataFrame(
+        [("b", "e"), ("e", "c"), ("f", "g")], "doc_a string, doc_b string"
+    )
+
+    def labels(cap):
+        return {
+            r.doc_id: r.keeper_doc_id
+            for r in dd.dedup_clusters(
+                docs, pairs, driver_cc_max_edges=cap
+            ).collect()
+        }
+
+    got = labels(dd.DRIVER_CC_MAX_EDGES)
+    assert got == labels(0)
+    assert got == {"a": "a", "b": "b", "c": "b", "d": "d", "e": "b",
+                   "f": "f", "g": "f"}
+
+
+def test_union_find_tracks_bridges_only_with_seen_max():
+    """Bridge tracking: a union of two components that each hold a seen
+    node (id <= seen_max) records the pair of their minimum seen nodes."""
+    edges = [(0, 10), (1, 11), (11, 10), (12, 13)]
+    labels, bridges = dd.union_find(edges, seen_max=1)
+    assert bridges == [(0, 1)]
+    assert labels == {0: 0, 10: 0, 1: 0, 11: 0, 12: 12, 13: 12}
+    assert dd.union_find(edges) == (labels, [])
+
+
 def test_dedup_clusters_driver_overflow_falls_back(spark):
     """An edge set larger than driver_cc_max_edges must fall through to the
     distributed loop (limit cap+1 detects overflow) with identical output."""
@@ -873,13 +906,10 @@ def test_union_find_deep_chain_no_recursion():
     """Review-caught RecursionError: chain-shaped duplicate clusters built
     an N-deep parent chain and the recursive find() blew the ~1000-frame
     limit well inside the 500k-edge driver-path cap."""
-    from migration_pair_spark.operators.incremental import _UnionFind
-
     n = 5000
-    uf = _UnionFind(seen_max=-1)
-    for i in range(n - 2, -1, -1):  # descending unions -> deepest chains
-        uf.union(i, i + 1)
-    assert uf.find(n - 1) == 0
+    # descending unions -> deepest chains
+    labels, _ = dd.union_find([(i, i + 1) for i in range(n - 2, -1, -1)])
+    assert labels[n - 1] == 0
 
 
 def test_video_frames_rejects_uncovering_stsc(spark):
