@@ -338,7 +338,6 @@ def main(argv: list[str] | None = None) -> int:
             table_path=args.table_path,
             n_buckets=cfg.n_buckets,
             write_mode=cfg.write_mode,
-            coalesce_bucket_files=cfg.coalesce_bucket_files,
         )
         events = spark.read.schema(CHANGE_STREAM_SCHEMA).parquet(args.events)
         lineage = pipe.apply_batch(spark, events)
@@ -350,7 +349,6 @@ def main(argv: list[str] | None = None) -> int:
             table_path=args.table_path,
             n_buckets=cfg.n_buckets,
             write_mode=getattr(args, "write_mode", None) or cfg.write_mode,
-            coalesce_bucket_files=cfg.coalesce_bucket_files,
             source_format=args.source_format,
             on_malformed=args.on_malformed,
             dead_letter_dir=args.dead_letter_dir,

@@ -29,8 +29,10 @@ Per micro-batch inside ``foreachBatch``:
    content of only the touched buckets, re-resolves per key over
    (warc_ts, _lsn) — the cross-batch LWW guard — and rewrites those buckets;
    merge-on-read appends the winners as delta files and defers the guard to
-   read/compaction time. Deletes become tombstone rows (physical rows with
-   _deleted=true) so a late event older than the delete still loses,
+   read/compaction time. Either way the written rows are routed by bucket
+   first, so a commit adds one file per touched bucket. Deletes become
+   tombstone rows (physical rows with _deleted=true) so a late event older
+   than the delete still loses,
 7. commit data + ``engine.max_lsn`` watermark + lineage in ONE atomic
    snapshot — this is what upgrades at-least-once replay to exactly-once.
 
@@ -53,6 +55,7 @@ logger = logging.getLogger("migration_pair_spark.cdc")
 from migration_pair_spark.cdc.lww import lww_dedup_agg
 from migration_pair_spark.functions.extract import with_extracted_text
 from migration_pair_spark.lakehouse.table import CommitConflictError, LakeTable
+from migration_pair_spark.sources import debezium as dbz
 
 WATERMARK_PROP = "engine.max_lsn"
 RANGES_PROP = "engine.applied_lsn_ranges"
@@ -167,7 +170,6 @@ def apply_cdc_batch(
     epoch_registry: "dict[int, list] | None" = None,
     extract_text: bool = True,
     write_mode: str = "cow",
-    coalesce_bucket_files: bool = False,
     expectations: "dict[str, str] | None" = None,
     on_violation: str = "drop",
     violations_dir: "str | None" = None,
@@ -190,17 +192,29 @@ def apply_cdc_batch(
         (measured: COW sustained throughput degrades with table size as
         every micro-batch rewrites nearly the whole table).
 
-    ``coalesce_bucket_files``: repartition the final rows by bucket before
-    the write, yielding ONE file per touched bucket per commit instead of
-    up to one per (task x bucket). Measured at the 8M-event bench shape
-    (local[8], 32 buckets, 80-byte html): write 2.5 s -> 1.7 s isolated,
-    full-apply write_commit ~10% faster, 256 -> 32 files (round-4
-    decomposition, BENCH/BASELINE.md). DEFAULT OFF because the repartition
-    is one extra full shuffle of the merged output — with real Common-Crawl
-    payloads (~100 KB html) that roughly doubles the batch's heaviest data
-    movement, and auto-compaction already bounds the file count. Turn it on
-    for thin-payload / high-bucket-count deployments where commit and read
-    amplification dominate.
+    Write layout: the rows a commit writes are hash-routed by ``_bucket``
+    into ``min(len(touched), spark.sql.shuffle.partitions)`` tasks, so
+    each touched bucket is written by exactly one task and the commit adds
+    ONE file per touched bucket (without routing, every write task adds a
+    file to every bucket it holds rows of: 4 tasks x 32 buckets = 128
+    files for one 10k-event tail batch instead of 32). Files, not bytes, are the
+    per-batch cost on a small batch: each create and mkdir of the local
+    filesystem pays fixed driver/task overhead (a ``chmod`` subprocess per
+    call when no native Hadoop library is loaded), and every later read
+    and point lookup opens each file once more. Exchange cost: MOR routes
+    the winners (one added exchange of at most one row per key, after the
+    LWW aggregate's map-side combine — never the raw events); COW routes
+    the union of the touched buckets' current rows and the winners and
+    re-resolves it grouped by (``_bucket``, key), which the routing
+    already satisfies, so it replaces the re-resolve's own exchange (one
+    added exchange only when every touched bucket is empty and the
+    winners are written as they are).
+
+    Malformed envelopes: a batch carrying the Debezium source's marks
+    (``_corrupt``/``_raw`` columns, sources/debezium.py) fails in the gate
+    when any row is marked — counted by one more gate aggregate, raised
+    before any commit with up to five raw sample lines (fetched only on
+    that failure path). The marks are dropped before the merge.
 
     ``expectations``: row-level quality gates (Delta Live Tables
     expectations analog) — {name: SQL boolean predicate over the event
@@ -273,9 +287,8 @@ def apply_cdc_batch(
         with _aqe_disabled(spark):
             return _apply_cdc_batch_inner(
                 table, batch, batch_id, epoch_registry, extract_text,
-                write_mode, coalesce_bucket_files, expectations or {},
-                on_violation, violations_dir, state["suppress"], t0,
-                phase_ms, _mark,
+                write_mode, expectations or {}, on_violation,
+                violations_dir, state["suppress"], t0, phase_ms, _mark,
             )
 
     def _on_conflict(e):
@@ -305,7 +318,6 @@ def _apply_cdc_batch_inner(
     epoch_registry: "dict[int, list] | None",
     extract_text: bool,
     write_mode: str,
-    coalesce_bucket_files: bool,
     expectations: "dict[str, str]",
     on_violation: str,
     violations_dir: "str | None",
@@ -329,6 +341,14 @@ def _apply_cdc_batch_inner(
     # DataFrame) are contractually single chunks anyway.
     applied = load_applied_ranges(table.properties)
     t_phase = time.monotonic()
+    # a malformed envelope fails the batch from the gate's own aggregate
+    # (apply_cdc_batch docstring): counted over ALL rows, fresh or not
+    has_marks = dbz.CORRUPT_COL in batch.columns
+    mark_aggs = (
+        [F.count_if(F.col(dbz.CORRUPT_COL)).alias("_malformed")]
+        if has_marks
+        else []
+    )
     supp_pred = None
     if suppress_keys is not None:
         # purged-key suppression (LakeTable.purge_keys ledger): mark each
@@ -409,9 +429,14 @@ def _apply_cdc_batch_inner(
             F.max("schema_epoch").alias("max_epoch"),
             *stale_aggs,
             *exp_aggs,
+            *mark_aggs,
         )
         .collect()
     )
+    if has_marks:
+        if any(r["_malformed"] for r in per_group):
+            dbz.fail_on_malformed(batch, "in micro-batch")
+        batch = batch.drop(dbz.CORRUPT_COL, dbz.RAW_COL)
     exp_counts = {
         name: int(sum(r[f"_exp_{i}"] or 0 for r in per_group))
         for i, name in enumerate(exp_names)
@@ -654,13 +679,10 @@ def _apply_cdc_batch_inner(
         F.count(F.when(fresh_landed & F.col("_deleted"), 1)).alias("_del"),
     ]
 
-    def _sink(df: DataFrame) -> DataFrame:
-        # optional one-file-per-bucket coalesce (see apply_cdc_batch doc);
-        # observe attaches AFTER the repartition so the counters still ride
-        # the write job itself
-        if coalesce_bucket_files:
-            df = df.repartition(max(len(touched), 1), F.col("_bucket"))
-        return df.observe(obs, *obs_metrics)
+    # one file per touched bucket (apply_cdc_batch docstring, "Write
+    # layout"): each touched bucket routes to exactly one write task
+    n_shuffle = int(batch.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    width = max(1, min(len(touched), n_shuffle))
 
     t_phase = _mark("plan", t_phase)
     if write_mode == "mor":
@@ -668,7 +690,9 @@ def _apply_cdc_batch_inner(
         # O(batch); the cross-batch LWW guard moves to read/compaction time
         # (same max_by over the table's lww_order).
         new_version, _added = table.append_delta_buckets(
-            _sink(winners_phys),
+            winners_phys.repartition(width, "_bucket").observe(
+                obs, *obs_metrics
+            ),
             touched,
             properties={**wm_props, **epoch_props},
             lineage=lineage,
@@ -677,7 +701,10 @@ def _apply_cdc_batch_inner(
         # copy-on-write: union the touched buckets' current rows with the
         # winners and re-resolve. The heavy pipeline (dedup + extraction)
         # flows exactly ONCE, straight into the write. At most 2 resolved
-        # rows per key meet in the re-rank (stored row + batch winner).
+        # rows per key meet in the re-rank (stored row + batch winner). The
+        # union is routed by bucket and re-resolved per (_bucket, key):
+        # the routing satisfies the aggregate's distribution, so it is the
+        # re-resolve's only exchange.
         # When every touched bucket is EMPTY (initial load / first batches
         # of a fresh table) the winners ARE the final content — skip the
         # empty union and the whole second hash-agg pass over the batch
@@ -692,22 +719,28 @@ def _apply_cdc_batch_inner(
             current = table.read_buckets(touched).withColumn(
                 "_bucket", table.bucket_expr()
             )
-            merged = current.unionByName(winners_phys)
-            final = lww_dedup_agg(merged, key_cols=(key,), order_cols=stored_order)
+            # winners on the LEFT: a union runs under its left side's
+            # session, and only the batch's session has AQE off (a
+            # streaming micro-batch arrives on a clone of the table's)
+            merged = winners_phys.unionByName(current).repartition(
+                width, "_bucket"
+            )
+            final = lww_dedup_agg(
+                merged, key_cols=("_bucket", key), order_cols=stored_order
+            )
         else:
-            final = winners_phys
+            final = winners_phys.repartition(width, "_bucket")
         new_version = table.replace_buckets(
-            _sink(final),
+            final.observe(obs, *obs_metrics),
             touched,
             properties={**wm_props, **epoch_props},
             lineage=lineage,
         )
 
     t_phase = _mark("write_commit", t_phase)
-    # finer attribution when the target records it (LakeTable stamps the
-    # Spark write action vs driver-side commit bookkeeping into the
-    # lineage dict it was handed — no read outside the UpsertTarget seam)
-    wp = lineage.pop("write_phases", None)
+    # finer attribution when the target records it: the Spark write action
+    # vs the driver-side commit bookkeeping (UpsertTarget.last_write_phases)
+    wp = table.last_write_phases
     if wp:
         phase_ms.update(wp)
     observed = obs.get  # available immediately: the write action completed

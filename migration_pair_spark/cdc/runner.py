@@ -34,6 +34,7 @@ from migration_pair_spark.lakehouse.table import (
     RenameColumn,
     WidenColumn,
 )
+from migration_pair_spark.sources import debezium as dbz
 
 # The pages table logical schema at epoch 1 (BASELINE.json:15 input_hint).
 PAGES_SCHEMA = T.StructType(
@@ -100,9 +101,6 @@ class CdcPipeline:
     # delta files (O(batch) writes; reads resolve until compaction) — see
     # apply_cdc_batch
     write_mode: str = "cow"
-    # one file per touched bucket per commit (extra shuffle of the merged
-    # output) — measured trade-off in apply_cdc_batch's docstring
-    coalesce_bucket_files: bool = False
     # MOR maintenance policy: when any bucket accumulates more than this many
     # files, compact the offending buckets right after the commit (0 = never;
     # bounds read amplification of a long-running MOR stream)
@@ -131,9 +129,10 @@ class CdcPipeline:
     # chunk), so the apply gate is format-agnostic.
     source_format: str = "parquet"
     # malformed-envelope policy for debezium-json: "error" fails the batch
-    # loudly; "dead_letter" appends raw bad lines under dead_letter_dir
-    # (at-least-once under replay — sources/debezium.py docstring) and
-    # records rows_malformed in lineage; "skip" drops silently.
+    # loudly, before any commit; "dead_letter" appends raw bad lines under
+    # dead_letter_dir (at-least-once under replay — sources/debezium.py
+    # docstring) and records rows_malformed in lineage; "skip" drops
+    # silently.
     on_malformed: str = "error"
     dead_letter_dir: str | None = None
     # zone maps: record per-file min/max for these columns at every commit
@@ -295,7 +294,14 @@ class CdcPipeline:
         /root/reference/Models/SettingsModel.cs:10). A crash mid-split loses
         at most one sub-batch, which the watermark gate re-applies cleanly.
         Sub-batch lineage ids are batch_id*1e6 + part (collision-free up to
-        a million chunks per batch)."""
+        a million chunks per batch).
+
+        ``events`` may carry the Debezium source's malformed-row marks
+        (``_corrupt``/``_raw``, on_malformed="error"): a marked row fails
+        the whole batch before any commit. A split batch counts the marks
+        in its bounds aggregate, because the sub-batches' LSN-range filters
+        never see a line whose LSN is null; an unsplit one leaves them to
+        the apply gate."""
         table = self.ensure_table(spark)
         # Deferred changelog: pin the subscription base BEFORE any commit it
         # must cover. Pinning after the apply (the previous shape) left a
@@ -311,11 +317,21 @@ class CdcPipeline:
         suppress = self._suppression_keys(table)
         limit = self.max_events_per_batch
         if limit and limit > 0:
+            has_marks = dbz.CORRUPT_COL in events.columns
             bounds = events.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.min("change_lsn").alias("lo"),
                 F.max("change_lsn").alias("hi"),
+                *(
+                    [F.count_if(F.col(dbz.CORRUPT_COL)).alias("bad")]
+                    if has_marks
+                    else []
+                ),
             ).collect()[0]
+            if has_marks:
+                if bounds.bad:
+                    dbz.fail_on_malformed(events, "in micro-batch")
+                events = events.drop(dbz.CORRUPT_COL, dbz.RAW_COL)
             if bounds.n and bounds.n > limit:
                 # contiguous LSN ranges sized ~limit (LSNs may be sparse;
                 # ranges are an upper bound on rows per sub-batch only when
@@ -342,7 +358,6 @@ class CdcPipeline:
                             epoch_registry=self.epoch_registry,
                             extract_text=self.extract_text,
                             write_mode=self.write_mode,
-                            coalesce_bucket_files=self.coalesce_bucket_files,
                             expectations=self.expectations,
                             on_violation=self.on_violation,
                             violations_dir=self.violations_dir,
@@ -386,7 +401,6 @@ class CdcPipeline:
             epoch_registry=self.epoch_registry,
             extract_text=self.extract_text,
             write_mode=self.write_mode,
-            coalesce_bucket_files=self.coalesce_bucket_files,
             expectations=self.expectations,
             on_violation=self.on_violation,
             violations_dir=self.violations_dir,
@@ -494,31 +508,21 @@ class CdcPipeline:
     def _handle_malformed(self, batch_df: DataFrame) -> tuple[DataFrame, int]:
         """Apply the malformed-envelope policy to one debezium micro-batch
         (the stream carries _corrupt/_raw markers — sources/debezium.py).
-        Returns (clean canonical rows, n_malformed). "skip" costs zero extra
-        jobs; "error"/"dead_letter" run one bad-rows-only action on the
-        micro-batch (the corrupt filter pushes to the text scan)."""
-        from migration_pair_spark.sources import debezium as dbz
-
+        Returns (the rows to apply, n_malformed). "error" returns the batch
+        still marked: the apply counts the marks in an aggregate it runs
+        anyway (the gate, or a split batch's bounds) and fails before any
+        commit, so a clean batch pays no extra job or parse. "skip" drops
+        the marked rows at no extra job; "dead_letter" runs one bad-rows-only
+        count and write (the corrupt filter pushes to the text scan)."""
         if self.on_malformed not in ("error", "skip", "dead_letter"):
             raise ValueError(
                 f"on_malformed must be 'error', 'skip' or 'dead_letter', "
                 f"got {self.on_malformed!r}"
             )
-        n_bad = 0
         if self.on_malformed == "error":
-            bad = (
-                batch_df.filter(F.col(dbz.CORRUPT_COL))
-                .select(dbz.RAW_COL)
-                .limit(5)
-                .collect()
-            )
-            if bad:
-                samples = "; ".join(repr(r[dbz.RAW_COL][:120]) for r in bad)
-                raise ValueError(
-                    f"malformed debezium envelope lines in micro-batch "
-                    f"(first samples: {samples})"
-                )
-        elif self.on_malformed == "dead_letter":
+            return batch_df, 0
+        n_bad = 0
+        if self.on_malformed == "dead_letter":
             if not self.dead_letter_dir:
                 raise ValueError("on_malformed='dead_letter' requires dead_letter_dir")
             n_bad = dbz.dead_letter(batch_df, self.dead_letter_dir)

@@ -36,7 +36,6 @@ class EngineConfig:
     # "cow" (rewrite touched buckets) or "mor" (append deltas, resolve on
     # read, fold via compact) — see cdc.apply.apply_cdc_batch
     write_mode: str = "cow"
-    coalesce_bucket_files: bool = False
     # csv snapshot round-trip (reference Extraction/Insertion file settings,
     # /root/reference/appsettings.json; delimiter default "," matches
     # /root/reference/Models/SettingsModel.cs:41)

@@ -262,6 +262,11 @@ class IcebergTable:
         self.refresh()
         return self.version, []
 
+    @property
+    def last_write_phases(self) -> dict | None:
+        """Iceberg commits in one writer call: no split is recorded."""
+        return None
+
     # ------------------------------------------------------------- evolution
 
     # Types Iceberg's ALTER COLUMN can widen TO (spec: int->long,

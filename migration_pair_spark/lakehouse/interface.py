@@ -52,6 +52,7 @@ evolve_schema()      ALTER TABLE ADD COLUMN / RENAME COLUMN / ALTER COLUMN
 compact()            maintenance: rewrite_data_files (bin-packing rewrite)
 is_merge_on_read /   v2 merge-on-read state / manifest entry counts per
 files_per_bucket()   bucket partition (the auto-compaction policy inputs)
+last_write_phases    None: the writer call commits too, no split to record
 ===================  =======================================================
 """
 
@@ -135,6 +136,13 @@ class UpsertTarget(Protocol):
         properties: dict[str, str] | None = None,
         lineage: dict | None = None,
     ) -> tuple[int, list[str]]: ...
+
+    @property
+    def last_write_phases(self) -> "dict | None":
+        """Wall split of the last write (``write_exec_ms``, ``commit_ms``),
+        or None when the format does not record one — advisory timing for
+        the apply's lineage, never part of a commit."""
+        ...
 
     # -- evolution ----------------------------------------------------------
     def evolve_schema(self, ops: list) -> int: ...

@@ -219,6 +219,14 @@ class WidenStructField:
     new_type: str
 
 
+def _phases(t_exec: float, t_commit: float) -> dict[str, int]:
+    """One bucket write's wall split (``LakeTable.last_write_phases``)."""
+    return {
+        "write_exec_ms": int((t_commit - t_exec) * 1000),
+        "commit_ms": int((time.monotonic() - t_commit) * 1000),
+    }
+
+
 def _schema_from_json(s: str) -> T.StructType:
     return T.StructType.fromJson(json.loads(s))
 
@@ -230,6 +238,7 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self._manifest: dict | None = None
+        self._last_write_phases: dict | None = None
 
     # ------------------------------------------------------------- lifecycle
 
@@ -478,6 +487,24 @@ class LakeTable:
         m["parent"] = m["version"]
         m["version"] = m["version"] + 1
         return m
+
+    @staticmethod
+    def _stamp(m: dict, properties: dict | None, lineage: dict | None) -> None:
+        """Put a write's properties and lineage into its next manifest. The
+        lineage is stamped as a deep copy, in its on-disk (JSON) form: the
+        caller keeps adding to its own record after the commit (counters,
+        timings), and the in-memory manifest must stay the file on disk."""
+        if properties:
+            m["properties"].update(properties)
+        m["lineage"] = None if lineage is None else json.loads(json.dumps(lineage))
+
+    @property
+    def last_write_phases(self) -> dict | None:
+        """Wall split of this handle's last bucket write (``replace_buckets``
+        / ``append_delta_buckets``): ``write_exec_ms`` for the Spark write
+        job, ``commit_ms`` for the driver-side file listing, footer stats
+        and manifest publish."""
+        return self._last_write_phases
 
     def _collect_written_files(
         self, tx_dir: str, schema_version: int
@@ -1061,12 +1088,11 @@ class LakeTable:
         tx_rel = os.path.join("data", txid)
         tx_dir = os.path.join(self.path, tx_rel)
 
-        # No repartition before the write: Spark's dynamic-partition writer
-        # routes rows to bucket directories per task (concurrent writers, or
-        # a local sort past 64 buckets/task — session.py), so skipping the
-        # extra full shuffle of the merged output saves the single largest
-        # data movement of a MERGE. Cost: up to one file per (task x bucket)
-        # per snapshot instead of one per bucket — bounded by compact().
+        # The writer partitions by _bucket inside each task, so a task adds
+        # one file to every bucket it holds rows of. Callers that want one
+        # file per touched bucket route the rows by _bucket first (the CDC
+        # apply does: file creation, not data, is its per-batch cost);
+        # compact() does the same for the buckets it folds.
         t_exec = time.monotonic()
         self._table_write(df_with_bucket, tx_dir, max_rows_per_file)
         t_commit = time.monotonic()
@@ -1082,21 +1108,10 @@ class LakeTable:
             )
         for b in touched_buckets:
             m["buckets"][str(b)] = new_files.get(b, [])
-        if properties:
-            m["properties"].update(properties)
-        m["lineage"] = lineage
-        # phase attribution (Spark write job vs driver-side commit work),
-        # recorded INTO the caller's lineage record rather than a new
-        # attribute: the CDC loop reads tables only through the
-        # UpsertTarget seam (tests/test_interface.py), and lineage is
-        # already the seam's advisory side-channel
-        if lineage is not None:
-            lineage["write_phases"] = {
-                "write_exec_ms": int((t_commit - t_exec) * 1000),
-                "commit_ms": int((time.monotonic() - t_commit) * 1000),
-            }
+        self._stamp(m, properties, lineage)
         self._write_manifest(m)
         self._manifest = m
+        self._last_write_phases = _phases(t_exec, t_commit)
         return m["version"]
 
     def append_delta_buckets(
@@ -1113,7 +1128,9 @@ class LakeTable:
         m = self._next_manifest()
         txid = f"tx-{m['version']:08d}-{uuid.uuid4().hex[:8]}"
         tx_dir = os.path.join(self.path, "data", txid)
+        t_exec = time.monotonic()
         self._table_write(df_with_bucket, tx_dir)
+        t_commit = time.monotonic()
         written = self._collect_written_files(tx_dir, m["schema_version"])
         added: list[str] = []
         for b, entries in written.items():
@@ -1122,11 +1139,10 @@ class LakeTable:
         m["mor"] = True
         prior = set(m.get("mor_buckets", []))
         m["mor_buckets"] = sorted(prior | set(written))
-        if properties:
-            m["properties"].update(properties)
-        m["lineage"] = lineage
+        self._stamp(m, properties, lineage)
         self._write_manifest(m)
         self._manifest = m
+        self._last_write_phases = _phases(t_exec, t_commit)
         return m["version"], added
 
     def append_buckets(
@@ -1152,9 +1168,7 @@ class LakeTable:
             tx_dir, m["schema_version"]
         ).items():
             m["buckets"].setdefault(str(b), []).extend(entries)
-        if properties:
-            m["properties"].update(properties)
-        m["lineage"] = lineage
+        self._stamp(m, properties, lineage)
         self._write_manifest(m)
         self._manifest = m
         return m["version"]

@@ -361,27 +361,33 @@ class _IndexPair:
         session toggles, sizing, persisted intermediates, then the two
         gated commits. ``data_props`` (a dict, or ``(lo, hi) -> dict`` of
         the batch's id range) ride the data commit."""
-        g = self._gate(rows, batch_id)
-        if g["status"] == "empty":
-            # quiet-day case: nothing arrived — clean no-op, no commits
-            return {"replayed": False, "empty": True, "n_new": 0, **self._nothing}
-        if g["status"] == "replayed":
-            out = {"replayed": True}
-            out.update((k, v) for k, v in self._nothing.items() if v is None)
-            if g["healed"]:
-                out["healed"] = "index"
-            return out
-        n_new, rng = g["n_new"], g["rng"]
         # every toggle and cache below is entered on ONE stack, so any
-        # exception leaves the session config as it found it
+        # exception (the gate's included) leaves the session config as it
+        # found it
         with contextlib.ExitStack() as stack:
-            # AQE off for the ingest's own jobs (the same refcounted
-            # per-session toggle as the CDC apply): the pipelines are
-            # fixed-shape — explicit broadcasts, known partition counts and
-            # the exemplar-star cap for skew — so AQE's per-stage
-            # materialization barrier is pure overhead (~20% of ingest wall
-            # at sf0.1, and one extra job per shuffle stage)
+            # AQE off for the ingest's own jobs, the gate's first (the same
+            # refcounted per-session toggle as the CDC apply): the
+            # pipelines are fixed-shape — explicit broadcasts, known
+            # partition counts and the exemplar-star cap for skew — so
+            # AQE's per-stage materialization barrier is pure overhead
+            # (~20% of ingest wall at sf0.1, and one extra job per shuffle
+            # stage: the gate's two-shuffle countDistinct runs as 3 jobs
+            # with AQE on, 1 with it off)
             stack.enter_context(_aqe_disabled(self.spark))
+            g = self._gate(rows, batch_id)
+            if g["status"] == "empty":
+                # quiet-day case: nothing arrived — clean no-op, no commits
+                return {
+                    "replayed": False, "empty": True, "n_new": 0,
+                    **self._nothing,
+                }
+            if g["status"] == "replayed":
+                out = {"replayed": True}
+                out.update((k, v) for k, v in self._nothing.items() if v is None)
+                if g["healed"]:
+                    out["healed"] = "index"
+                return out
+            n_new, rng = g["n_new"], g["rng"]
             # Parallelize the narrow signing chain: a small batch often
             # arrives as ONE file -> one input partition, and the heavy map
             # then runs single-threaded. The partition count is sized by

@@ -33,7 +33,8 @@ Scale notes (100-TB design):
   yields a null struct) and routed by policy: fail loudly, drop, or append
   to a dead-letter directory. The DLQ write is at-least-once (a replayed
   micro-batch may re-append its bad lines) — standard DLQ semantics; the
-  *table* stays exactly-once because bad rows never reach the apply gate.
+  *table* stays exactly-once because bad rows never reach a commit: a
+  micro-batch under "error" fails in the apply gate, before any commit.
 """
 
 from __future__ import annotations
@@ -242,16 +243,24 @@ def read_debezium_jsonl(
         spark.read.text(path), payload_schema, keep_corrupt=True
     )
     if on_malformed == "error":
-        bad = parsed.filter(F.col(CORRUPT_COL)).select(RAW_COL).limit(5).collect()
-        if bad:
-            samples = "; ".join(repr(r[RAW_COL][:120]) for r in bad)
-            raise ValueError(
-                f"malformed debezium envelope lines under {path} "
-                f"(first samples: {samples})"
-            )
+        fail_on_malformed(parsed, f"under {path}")
     elif on_malformed == "dead_letter":
         dead_letter(parsed, dead_letter_dir)  # type: ignore[arg-type]
     return parsed.filter(~F.col(CORRUPT_COL)).drop(CORRUPT_COL, RAW_COL)
+
+
+def fail_on_malformed(parsed: DataFrame, where: str) -> None:
+    """The ``"error"`` policy: raise with up to five raw sample lines when a
+    keep_corrupt parse holds marked rows. One bad-rows-only job (the filter
+    pushes to the scan); callers that already counted the marks run it
+    only on failure."""
+    bad = parsed.filter(F.col(CORRUPT_COL)).select(RAW_COL).limit(5).collect()
+    if bad:
+        samples = "; ".join(repr(r[RAW_COL][:120]) for r in bad)
+        raise ValueError(
+            f"malformed debezium envelope lines {where} "
+            f"(first samples: {samples})"
+        )
 
 
 def dead_letter(parsed: DataFrame, dead_letter_dir: str) -> int:
@@ -274,8 +283,8 @@ def stream_debezium_jsonl(
 ) -> DataFrame:
     """Streaming read: envelope JSONL directory -> canonical change rows
     WITH the ``_corrupt``/``_raw`` marker columns retained — the runner's
-    foreachBatch applies the malformed policy per micro-batch (it needs an
-    action to count, which a streaming DF can't run pre-batch)."""
+    foreachBatch applies the malformed policy per micro-batch (under
+    ``"error"`` the apply gate's own aggregate counts the marks)."""
     raw = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .text(path)

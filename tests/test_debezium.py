@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from migration_pair_spark import synth
+from migration_pair_spark.cdc.apply import load_applied_ranges
 from migration_pair_spark.cdc.runner import (
     CHANGE_STREAM_SCHEMA,
     CdcPipeline,
@@ -166,6 +167,37 @@ def test_malformed_error_policy_fails_loudly(spark, tmp_path):
     )
     with pytest.raises(Exception, match="malformed debezium envelope"):
         p.run_stream(spark, jd, str(tmp_path / "ck"))
+    # the micro-batch holding the bad lines committed nothing: none of its
+    # LSNs (the good late line's 9999 included) is applied, its row absent
+    t = LakeTable.load(spark, p.table_path)
+    applied = load_applied_ranges(t.properties)
+    assert applied and not any(
+        lo <= lsn <= hi for lo, hi in applied for lsn in (9001, 9002, 9999)
+    )
+    assert t.read().filter(F.col("url") == "https://late.example/x").count() == 0
+
+
+def test_malformed_null_lsn_fails_split_batch_before_any_commit(
+    spark, tmp_path
+):
+    """A bad line with no LSN in a micro-batch that max_events_per_batch
+    splits: the sub-batches' LSN-range filters never see it, so the split
+    path's bounds aggregate must count it and fail the whole batch before
+    the first sub-batch commits."""
+    jd = str(tmp_path / "jsonl")
+    synth.write_debezium_stream(jd, 100, 20, 1, seed=3)
+    (path,) = glob.glob(os.path.join(jd, "*.jsonl"))
+    with open(path, "a") as f:
+        f.write(BAD_LINES[2] + "\n")  # missing lsn
+    p = CdcPipeline(
+        table_path=str(tmp_path / "t"), n_buckets=4,
+        source_format="debezium-json", max_events_per_batch=30,
+    )
+    with pytest.raises(Exception, match="malformed debezium envelope"):
+        p.run_stream(spark, jd, str(tmp_path / "ck"))
+    t = LakeTable.load(spark, p.table_path)
+    assert t.version == 1  # the empty table ensure_table created
+    assert not load_applied_ranges(t.properties)
 
 
 def test_malformed_dead_letter_policy(spark, tmp_path):

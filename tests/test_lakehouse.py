@@ -360,3 +360,28 @@ def test_committer_scoped_to_table_writes(spark, tmp_path):
     plain = str(tmp_path / "plain")
     spark.range(5).write.parquet(plain)
     assert os.path.exists(os.path.join(plain, "_SUCCESS"))
+
+
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_committed_lineage_is_the_manifest_on_disk(spark, tmp_path, write_mode):
+    """The apply keeps adding to its lineage record after the commit
+    (counters, timings); the table's in-memory manifest must still hold
+    exactly what the committed manifest file holds."""
+    from migration_pair_spark import synth
+    from migration_pair_spark.cdc.apply import apply_cdc_batch
+    from migration_pair_spark.cdc.runner import PAGES_SCHEMA
+
+    events = spark.createDataFrame(
+        synth.make_change_events(200, 30, seed=11),
+        schema="change_lsn long, op string, url string, warc_ts timestamp, "
+        "html binary, lang string, schema_epoch int",
+    ).withColumn("language", F.lit(None).cast("string")).withColumn(
+        "fetch_status", F.lit(None).cast("long")
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), PAGES_SCHEMA, key_col="url", n_buckets=4
+    )
+    lin = apply_cdc_batch(t, events, batch_id=0, write_mode=write_mode)
+    assert "rows_upserted" in lin and "phase_ms" in lin
+    assert t.manifest["lineage"] == t.manifest_at(t.version)["lineage"]
+    assert "write_phases" not in t.manifest["lineage"]

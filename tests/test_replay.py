@@ -302,25 +302,33 @@ def test_rechunked_overlap_counts_only_truly_fresh_rows(spark, tmp_path):
     assert t.read().count() == 10
 
 
-def test_coalesce_bucket_files_equivalent_and_one_file_per_bucket(
-    spark, stream_dir, tmp_path
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_each_commit_adds_one_file_per_touched_bucket(
+    spark, stream_dir, tmp_path, write_mode
 ):
-    """The opt-in coalesced write (one extra shuffle by bucket) must produce
-    a byte-identical final state to the default path, with exactly one data
-    file per touched bucket per commit."""
+    """The apply routes the rows it writes by bucket, so every commit adds
+    at most one data file to each bucket it touches (the manifest diff
+    against the parent snapshot) and touches no other bucket — in both
+    write modes, including copy-on-write batches that re-resolve against
+    current content — and the final state is the per-key LWW oracle."""
     d, full = stream_dir
-    plain = CdcPipeline(
-        table_path=str(tmp_path / "plain"), n_buckets=8, salt_buckets=4
+    pipe = CdcPipeline(
+        table_path=str(tmp_path / write_mode), n_buckets=8, salt_buckets=8,
+        write_mode=write_mode,
     )
-    plain.apply_batch(spark, spark.read.parquet(d))
-    co = CdcPipeline(
-        table_path=str(tmp_path / "co"),
-        n_buckets=8,
-        salt_buckets=4,
-        coalesce_bucket_files=True,
-    )
-    co.apply_batch(spark, spark.read.parquet(d))
-    assert _state(spark, plain.table_path) == _state(spark, co.table_path)
-    t = LakeTable.load(spark, co.table_path)
-    for b, files in t.manifest["buckets"].items():
-        assert len(files) <= 1, f"bucket {b} has {len(files)} files"
+    lineages = pipe.run_stream(spark, d, str(tmp_path / "ckpt"))
+    assert len(lineages) == N_FILES
+    assert _state(spark, pipe.table_path) == _oracle_state(full)
+    t = LakeTable.load(spark, pipe.table_path)
+    for lin in lineages:
+        v = lin["snapshot_id"]
+        before = t.manifest_at(v - 1)["buckets"]
+        after = t.manifest_at(v)["buckets"]
+        added = {
+            int(b): set(e["path"] for e in files)
+            - set(e["path"] for e in before.get(b, []))
+            for b, files in after.items()
+        }
+        added = {b: paths for b, paths in added.items() if paths}
+        assert set(added) == {int(b) for b in lin["partition_counts"]}
+        assert all(len(paths) == 1 for paths in added.values()), added
