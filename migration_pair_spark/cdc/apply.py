@@ -303,8 +303,7 @@ def apply_cdc_batch(
         # rival may BE a purge of a key in this very batch, and retrying
         # with the stale (pre-purge) ledger would merge the erased key
         # right back (review-caught; pinned in tests/test_conflicts.py)
-        if hasattr(table, "suppressed_keys"):
-            state["suppress"] = table.suppressed_keys()
+        state["suppress"] = table.suppressed_keys()
 
     from migration_pair_spark.lakehouse.table import retry_conflicts
 

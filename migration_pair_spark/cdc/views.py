@@ -299,14 +299,8 @@ class MaterializedView:
                 # a span with no net group changes still advances the
                 # reflected version (metadata-only commit keeps refresh
                 # exactly-once)
-                m = self.view._next_manifest()
-                m["properties"].update(props)
-                m["lineage"] = lineage
-                self.view._write_manifest(m)
-                self.view._manifest = m
-                return {
-                    **lineage, "refreshed": True, "view_version": m["version"]
-                }
+                version = self.view.commit_properties(props, lineage)
+                return {**lineage, "refreshed": True, "view_version": version}
 
             # fold deltas into ONLY the touched buckets' current groups —
             # the untouched ones carry over by manifest reference, so

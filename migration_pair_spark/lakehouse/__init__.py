@@ -1,25 +1,22 @@
-"""Snapshot-committed lake table layer.
-
-The north rule targets Iceberg tables. This sandbox has no network access to
-fetch `iceberg-spark-runtime` jars, so — exactly as planned in SURVEY.md §7
-(S0 fallback) — the engine ships a minimal Hive-less lake format with the
-Iceberg semantics the CDC loop depends on, behind the same narrow API so the
-real Iceberg catalog is a config switch:
+"""Snapshot-committed lake table layer: :class:`LakeTable`, the one table
+format the engine writes, and :class:`UpsertTarget`, the protocol the CDC
+loop reaches it through.
 
 - **atomic snapshot commits**: a table version becomes visible only via an
-  exclusive ``os.link`` publish of its manifest file (EEXIST = commit
-  conflict); readers always see a complete snapshot, never a partial write,
+  exclusive ``os.link`` publish of its manifest file; readers always see a
+  complete snapshot, never a partial write,
 - **snapshot properties**: arbitrary key/value properties committed
-  atomically WITH the data (this is what makes the LSN watermark exactly-once
-  — SURVEY.md §2.4 step 5),
-- **optimistic concurrency**: a manifest rename that loses the race fails
-  (rename onto an existing version number is rejected), like Iceberg's
-  commit conflict,
-- **bucket-level copy-on-write MERGE**: data files are hash-bucketed by the
-  merge key; an upsert batch rewrites only the buckets its keys touch,
-- **schema evolution**: add / rename / widen are manifest-only commits; old
-  data files are reconciled on read through a rename/cast mapping (Iceberg
-  name-mapping lite).
+  atomically WITH the data (this is what makes the LSN watermark
+  exactly-once),
+- **optimistic concurrency**: a publish onto an existing version number
+  fails with :class:`CommitConflictError`; recomputable operations refresh
+  and retry,
+- **bucket-level MERGE**: data files are hash-bucketed by the merge key; an
+  upsert batch rewrites (copy-on-write) or appends deltas to (merge-on-read)
+  only the buckets its keys touch,
+- **schema evolution**: add / rename / widen / drop are manifest-only
+  commits; old data files are reconciled on read through a rename/cast
+  mapping.
 """
 
 from migration_pair_spark.lakehouse.interface import UpsertTarget

@@ -1,59 +1,20 @@
 """UpsertTarget: the table-format seam between the CDC loop and the lake.
 
-The engine was designed for Iceberg (the north rule names Iceberg MERGE),
-but iceberg-spark-runtime jars are not fetchable in this sandbox (SURVEY.md
-§7 S0 fallback), so the shipped implementation is :class:`~migration_pair_
-spark.lakehouse.table.LakeTable`. This module makes the swap a CONFIG
-SWITCH rather than a rewrite: ``apply_cdc_batch`` and ``CdcPipeline``'s
-apply + maintenance loop touch tables ONLY through this protocol, and
-tests/test_interface.py pins both that LakeTable satisfies it and that the
-CDC loop needs nothing outside it. (The snapshot-diff changelog and
-time-travel reads in cdc/changelog.py are deliberately OUTSIDE the seam:
-they read LakeTable manifests directly; on Iceberg they map to the native
-changelog read / VERSION AS OF, not to an adapter of this protocol.)
+``apply_cdc_batch`` and ``CdcPipeline``'s apply + maintenance loop touch
+their target table ONLY through this protocol; :class:`~migration_pair_
+spark.lakehouse.table.LakeTable` is the implementation. The snapshot-diff
+changelog, time travel and the metadata views (cdc/changelog.py,
+``LakeTable.at_version`` / ``history``) read LakeTable manifests directly
+and are deliberately outside the seam.
 
-Mapping of each member to its Iceberg implementation (what an
-``IcebergTable`` adapter would do, for when the jars are available):
-
-===================  =======================================================
-Protocol member      Iceberg equivalent
-===================  =======================================================
-refresh()            spark.catalog.refreshTable(name) / Table.refresh()
-version              MONOTONIC commit ordinal (ancestor-chain length from
-                     the ``history`` metadata table) — NOT the raw snapshot
-                     id, which is a random long; version is consumed
-                     ordinally (lineage, changelog spans)
-schema               spark.table(name).schema (catalog-authoritative)
-key_col / n_buckets  table property + partition spec ``bucket(N, key)``
-properties           snapshot SUMMARY properties — read from the current
-                     snapshot's summary map. The engine's exactly-once
-                     watermark (engine.applied_lsn_ranges / engine.max_lsn)
-                     rides each write as ``option("snapshot-property.<k>",
-                     v)`` so data + watermark commit in ONE snapshot, which
-                     is the same atomicity LakeTable gets from the manifest
-                     file.
-bucket_expr()        ``system.bucket(N, key)`` (the same hash family the
-                     partition spec uses, so pruning matches routing)
-read_buckets(ids)    scan with partition predicate ``bucket(N, key) IN ids``
-                     — Iceberg's SparkScanBuilder prunes manifests/files
-replace_buckets()    copy-on-write MERGE INTO (or dynamic partition
-                     overwrite of the touched bucket partitions with
-                     partitionOverwriteMode=dynamic) + snapshot-property
-                     options; commit conflicts surface as Iceberg
-                     CommitFailedException == our RuntimeError('commit
-                     conflict')
-append_delta_bucket  merge-on-read MERGE with write.merge.mode=
-s()                  merge-on-read (equality deletes play the tombstone
-                     role); our explicit compact() == Iceberg
-                     rewrite_data_files
-evolve_schema()      ALTER TABLE ADD COLUMN / RENAME COLUMN / ALTER COLUMN
-                     TYPE — Iceberg schema-update commits; idempotent replay
-                     handled the same way (skip ops whose effect is present)
-compact()            maintenance: rewrite_data_files (bin-packing rewrite)
-is_merge_on_read /   v2 merge-on-read state / manifest entry counts per
-files_per_bucket()   bucket partition (the auto-compaction policy inputs)
-last_write_phases    None: the writer call commits too, no split to record
-===================  =======================================================
+What a target guarantees is the semantic contract in :class:`UpsertTarget`
+(atomic commit of data + properties + lineage, exclusive versioning with a
+loud conflict, property read-your-writes, bucket pruning, idempotent
+evolution, a queryable suppression ledger). tests/test_interface.py proves
+the seam is closed: it runs the CDC apply (both write modes, a replay, and
+a retry after a lost commit) and the auto-compaction policy against a
+``SeamProxy`` that forwards protocol members and fails on any other
+attribute.
 """
 
 from __future__ import annotations
@@ -68,7 +29,8 @@ from pyspark.sql import types as T
 class UpsertTarget(Protocol):
     """Everything the exactly-once CDC merge loop requires of a table format.
 
-    Semantic contract (pinned in tests/test_interface.py):
+    Semantic contract (pinned for LakeTable in tests/test_lakehouse.py,
+    tests/test_conflicts.py and tests/test_interface.py):
 
     1. **Atomic commit**: a write either publishes data + properties +
        lineage as one new version, or changes nothing.
@@ -81,13 +43,16 @@ class UpsertTarget(Protocol):
        key hashes (via :meth:`bucket_expr`) into the requested buckets.
     5. **Idempotent evolution**: re-applying an already-applied schema op
        is a no-op, not an error (crash-replay window).
+    6. **Suppression ledger**: :meth:`suppressed_keys` reflects every
+       committed purge after :meth:`refresh`, so an apply that lost its
+       commit to a purge retries without the purged keys.
     """
 
     # -- metadata ----------------------------------------------------------
     @property
     def path(self) -> str:
-        """Table root location (engine's lineage.jsonl audit lives beside the
-        data; Iceberg: ``table.location()``)."""
+        """Table root location (the engine's lineage.jsonl audit lives
+        beside the data)."""
         ...
 
     def refresh(self) -> None: ...
@@ -109,8 +74,8 @@ class UpsertTarget(Protocol):
 
     @property
     def lww_order(self) -> tuple[str, ...]:
-        """Persisted LWW ordering columns (Iceberg: a table property the
-        MERGE templates read — e.g. 'engine.lww-order')."""
+        """Persisted LWW ordering columns (stored-row column names) every
+        resolve path orders by."""
         ...
 
     # -- routing / reads ----------------------------------------------------
@@ -119,6 +84,12 @@ class UpsertTarget(Protocol):
     def read_buckets(self, bucket_ids: list[int], resolve: bool = False) -> DataFrame: ...
 
     def read(self, include_tombstones: bool = False) -> DataFrame: ...
+
+    def suppressed_keys(self) -> "DataFrame | None":
+        """Distinct keys of the purge ledger, or None when the table was
+        never purged — the apply drops their change events, and re-reads
+        the ledger when it retries after a lost commit."""
+        ...
 
     # -- writes -------------------------------------------------------------
     def replace_buckets(
@@ -150,16 +121,13 @@ class UpsertTarget(Protocol):
     # -- maintenance ----------------------------------------------------------
     @property
     def is_merge_on_read(self) -> bool:
-        """True while reads must resolve outstanding deltas (Iceberg: v2
-        merge-on-read with delete files)."""
+        """True while reads must resolve outstanding deltas."""
         ...
 
     def files_per_bucket(self) -> dict[int, int]:
-        """Data-file count per bucket — the auto-compaction policy input
-        (Iceberg: manifest entry counts per bucket partition)."""
+        """Data-file count per bucket — the auto-compaction policy input."""
         ...
 
     def compact(self, bucket_ids: "list[int] | None" = None) -> int:
-        """Fold the chosen buckets to read-optimal layout (Iceberg:
-        rewrite_data_files)."""
+        """Fold the chosen buckets to one LWW-resolved file per bucket."""
         ...

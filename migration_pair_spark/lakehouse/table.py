@@ -239,6 +239,8 @@ class LakeTable:
         self.path = path
         self._manifest: dict | None = None
         self._last_write_phases: dict | None = None
+        # (start, end) of the Spark write awaiting its publish (_write_tx)
+        self._tx_clock: tuple[float, float] | None = None
 
     # ------------------------------------------------------------- lifecycle
 
@@ -308,8 +310,7 @@ class LakeTable:
             "bloom_cols": list(bloom_filter_cols),
             "bloom_ndv": int(bloom_ndv),
         }
-        t._write_manifest(manifest)
-        t._manifest = manifest
+        t._publish(manifest)
         return t
 
     @classmethod
@@ -451,7 +452,7 @@ class LakeTable:
         tx_dir: str,
         max_rows_per_file: int | None = None,
     ) -> None:
-        """The bucket-partitioned data write both commit paths share.
+        """The bucket-partitioned data write of every data commit.
 
         Committer v2 + no _SUCCESS, scoped to TABLE writes only (per-write
         Hadoop options, not session config): v2 commits task files straight
@@ -488,22 +489,80 @@ class LakeTable:
         m["version"] = m["version"] + 1
         return m
 
-    @staticmethod
-    def _stamp(m: dict, properties: dict | None, lineage: dict | None) -> None:
-        """Put a write's properties and lineage into its next manifest. The
-        lineage is stamped as a deep copy, in its on-disk (JSON) form: the
-        caller keeps adding to its own record after the commit (counters,
-        timings), and the in-memory manifest must stay the file on disk."""
+    def _write_tx(
+        self,
+        m: dict,
+        df_with_bucket: DataFrame,
+        touched_buckets: "set[int] | list[int] | None" = None,
+        max_rows_per_file: int | None = None,
+    ) -> dict[int, list[dict]]:
+        """Write one commit's rows into its own ``data/tx-<version>-<uuid>``
+        directory and map the files back to manifest entries ({bucket id:
+        [entry, ...]}). With ``touched_buckets`` given, rows landing in any
+        other bucket refuse the commit: the caller would not reference
+        their files, so the rows would be silently orphaned. The Spark
+        write's wall clock waits for :meth:`_publish`
+        (:attr:`last_write_phases`)."""
+        txid = f"tx-{m['version']:08d}-{uuid.uuid4().hex[:8]}"
+        tx_dir = os.path.join(self.path, "data", txid)
+        t_exec = time.monotonic()
+        self._table_write(df_with_bucket, tx_dir, max_rows_per_file)
+        t_written = time.monotonic()
+        written = self._collect_written_files(tx_dir, m["schema_version"])
+        if touched_buckets is not None:
+            stray = set(written) - set(touched_buckets)
+            if stray:
+                raise ValueError(
+                    f"rows landed in buckets {sorted(stray)} outside "
+                    f"touched_buckets {sorted(touched_buckets)} — refusing "
+                    f"to commit (the stray rows would be silently orphaned)"
+                )
+        self._tx_clock = (t_exec, t_written)
+        return written
+
+    def _publish(
+        self, m: dict, properties: dict | None = None, lineage: dict | None = None
+    ) -> int:
+        """The one commit path, for data and metadata-only commits alike:
+        merge ``properties`` into the next manifest ``m``, give it its own
+        ``lineage``, publish it exclusively (:meth:`_write_manifest`) and
+        make it this handle's state. Returns the new version.
+
+        The lineage is stamped as a deep copy, in its on-disk (JSON) form:
+        the caller keeps adding to its own record after the commit
+        (counters, timings), and the in-memory manifest must stay the file
+        on disk."""
+        clock, self._tx_clock = self._tx_clock, None
         if properties:
             m["properties"].update(properties)
         m["lineage"] = None if lineage is None else json.loads(json.dumps(lineage))
+        self._write_manifest(m)
+        self._manifest = m
+        if clock is not None:
+            self._last_write_phases = _phases(*clock)
+        return m["version"]
+
+    def _resolve_mor(self, m: dict, buckets: list[int]) -> None:
+        """Mark ``buckets`` resolved in the next manifest ``m``: their new
+        content holds one row per key, so reads need no LWW resolve there.
+        The table-wide flag clears when no bucket holds deltas."""
+        if self.is_merge_on_read:
+            remaining = sorted(self.mor_buckets - set(buckets))
+            m["mor_buckets"] = remaining
+            m["mor"] = bool(remaining)
+
+    def commit_properties(
+        self, properties: dict[str, str], lineage: dict | None = None
+    ) -> int:
+        """Metadata-only commit: a new version with the same data files and
+        ``properties`` merged in. Returns the new version."""
+        return self._publish(self._next_manifest(), properties, lineage)
 
     @property
     def last_write_phases(self) -> dict | None:
-        """Wall split of this handle's last bucket write (``replace_buckets``
-        / ``append_delta_buckets``): ``write_exec_ms`` for the Spark write
-        job, ``commit_ms`` for the driver-side file listing, footer stats
-        and manifest publish."""
+        """Wall split of this handle's last data-writing commit:
+        ``write_exec_ms`` for the Spark write job, ``commit_ms`` for the
+        driver-side file listing, footer stats and manifest publish."""
         return self._last_write_phases
 
     def _collect_written_files(
@@ -511,7 +570,7 @@ class LakeTable:
     ) -> dict[int, list[dict]]:
         """Map one transaction directory's output back to manifest entries:
         {bucket id: [{path, schema_version}, ...]} — the single place the
-        file-entry format lives (all commit paths share it). When the table
+        file-entry format lives (every data commit shares it). When the table
         declares ``stats_cols``, each entry also carries that file's zone
         map ({"stats": {col: [min, max]}, "rows": n}) read from the parquet
         FOOTER — no data scan. Footer reads here are driver-side and O(new
@@ -1082,37 +1141,22 @@ class LakeTable:
         ``_bucket`` int column) becomes the new content of ``touched_buckets``;
         all other buckets carry over untouched. Returns the new version.
         ``max_rows_per_file`` bounds output file size (sorted-compaction
-        path — see :meth:`compact`)."""
+        path — see :meth:`compact`). The touched buckets leave the
+        merge-on-read set in the same commit: their new content is whole
+        and one row per key, so a compaction is one snapshot."""
         m = self._next_manifest()
-        txid = f"tx-{m['version']:08d}-{uuid.uuid4().hex[:8]}"
-        tx_rel = os.path.join("data", txid)
-        tx_dir = os.path.join(self.path, tx_rel)
-
         # The writer partitions by _bucket inside each task, so a task adds
         # one file to every bucket it holds rows of. Callers that want one
         # file per touched bucket route the rows by _bucket first (the CDC
         # apply does: file creation, not data, is its per-batch cost);
         # compact() does the same for the buckets it folds.
-        t_exec = time.monotonic()
-        self._table_write(df_with_bucket, tx_dir, max_rows_per_file)
-        t_commit = time.monotonic()
-
-        # Map the written files back into the manifest, bucket by bucket.
-        new_files = self._collect_written_files(tx_dir, m["schema_version"])
-        stray = set(new_files) - set(touched_buckets)
-        if stray:
-            raise ValueError(
-                f"replace_buckets: rows landed in buckets {sorted(stray)} "
-                f"outside touched_buckets {sorted(touched_buckets)} — refusing "
-                f"to commit (the stray rows would be silently orphaned)"
-            )
+        written = self._write_tx(
+            m, df_with_bucket, touched_buckets, max_rows_per_file
+        )
         for b in touched_buckets:
-            m["buckets"][str(b)] = new_files.get(b, [])
-        self._stamp(m, properties, lineage)
-        self._write_manifest(m)
-        self._manifest = m
-        self._last_write_phases = _phases(t_exec, t_commit)
-        return m["version"]
+            m["buckets"][str(b)] = written.get(b, [])
+        self._resolve_mor(m, touched_buckets)
+        return self._publish(m, properties, lineage)
 
     def append_delta_buckets(
         self,
@@ -1126,24 +1170,14 @@ class LakeTable:
         O(bucket)). Readers LWW-resolve per key until :meth:`compact` folds
         the deltas. Returns (new version, relpaths of the added files)."""
         m = self._next_manifest()
-        txid = f"tx-{m['version']:08d}-{uuid.uuid4().hex[:8]}"
-        tx_dir = os.path.join(self.path, "data", txid)
-        t_exec = time.monotonic()
-        self._table_write(df_with_bucket, tx_dir)
-        t_commit = time.monotonic()
-        written = self._collect_written_files(tx_dir, m["schema_version"])
+        written = self._write_tx(m, df_with_bucket)
         added: list[str] = []
         for b, entries in written.items():
             m["buckets"].setdefault(str(b), []).extend(entries)
             added.extend(e["path"] for e in entries)
         m["mor"] = True
-        prior = set(m.get("mor_buckets", []))
-        m["mor_buckets"] = sorted(prior | set(written))
-        self._stamp(m, properties, lineage)
-        self._write_manifest(m)
-        self._manifest = m
-        self._last_write_phases = _phases(t_exec, t_commit)
-        return m["version"], added
+        m["mor_buckets"] = sorted(set(m.get("mor_buckets", [])) | set(written))
+        return self._publish(m, properties, lineage), added
 
     def append_buckets(
         self,
@@ -1161,17 +1195,9 @@ class LakeTable:
         resolution on a non-MOR table. Write cost is O(batch) like the MOR
         path. Returns the new version."""
         m = self._next_manifest()
-        txid = f"tx-{m['version']:08d}-{uuid.uuid4().hex[:8]}"
-        tx_dir = os.path.join(self.path, "data", txid)
-        self._table_write(df_with_bucket, tx_dir)
-        for b, entries in self._collect_written_files(
-            tx_dir, m["schema_version"]
-        ).items():
+        for b, entries in self._write_tx(m, df_with_bucket).items():
             m["buckets"].setdefault(str(b), []).extend(entries)
-        self._stamp(m, properties, lineage)
-        self._write_manifest(m)
-        self._manifest = m
-        return m["version"]
+        return self._publish(m, properties, lineage)
 
     def append_bucketed(
         self,
@@ -1245,7 +1271,7 @@ class LakeTable:
         compacted = df.repartition(len(buckets), F.col("_bucket"))
         if sort_by:
             compacted = compacted.sortWithinPartitions("_bucket", *sort_by)
-        version = self.replace_buckets(
+        return self.replace_buckets(
             compacted,
             buckets,
             lineage={
@@ -1255,24 +1281,6 @@ class LakeTable:
             },
             max_rows_per_file=max_rows_per_file,
         )
-        # per-bucket accounting: compacted buckets are resolved; the global
-        # flag clears when NO bucket holds deltas (review-caught: a single
-        # global bool forced a full-table resolve on every read forever
-        # after any PARTIAL compaction — steady-state auto-compaction never
-        # compacts every bucket at once)
-        remaining = sorted(self.mor_buckets - set(buckets))
-        if self.is_merge_on_read:
-            m = self._next_manifest()
-            m["mor_buckets"] = remaining
-            m["mor"] = bool(remaining)
-            m["lineage"] = {
-                "compaction_mor_buckets_cleared": sorted(set(buckets)),
-                "mor_buckets_remaining": remaining,
-            }
-            self._write_manifest(m)
-            self._manifest = m
-            version = m["version"]
-        return version
 
     def rescale(
         self, target_n_buckets: int, parents_per_commit: int | None = None
@@ -1345,34 +1353,23 @@ class LakeTable:
                 max(len(batch) * (target_n_buckets // n_old), 1), F.col("_bucket")
             )
             m = self._next_manifest()
-            txid = f"tx-{m['version']:08d}-{uuid.uuid4().hex[:8]}"
-            tx_dir = os.path.join(self.path, "data", txid)
-            self._table_write(dfb, tx_dir)
+            parents = set(batch)
+            children = [c for c in range(target_n_buckets) if c % n_old in parents]
             new_files: dict[int, list[dict]] = {p: [] for p in batch}
-            for c, entries in self._collect_written_files(
-                tx_dir, m["schema_version"]
-            ).items():
-                p = c % n_old
-                if p not in new_files:
-                    raise ValueError(
-                        f"rescale: child bucket {c} maps to parent {p} "
-                        f"outside this chunk {batch} — refusing to commit"
-                    )
-                new_files[p].extend({**e, "child_bucket": c} for e in entries)
+            for c, entries in self._write_tx(m, dfb, children).items():
+                new_files[c % n_old].extend({**e, "child_bucket": c} for e in entries)
             for p in batch:
                 m["buckets"][str(p)] = new_files[p]
             m["rescale"] = {
                 "target": target_n_buckets,
                 "migrated": sorted(
-                    set(m.get("rescale", {}).get("migrated", [])) | set(batch)
+                    set(m.get("rescale", {}).get("migrated", [])) | parents
                 ),
             }
-            remaining_mor = sorted(self.mor_buckets - set(batch))
-            m["mor_buckets"] = remaining_mor
-            m["mor"] = bool(remaining_mor)
-            m["lineage"] = {"rescale_parents": batch, "target": target_n_buckets}
-            self._write_manifest(m)
-            self._manifest = m
+            self._resolve_mor(m, batch)
+            self._publish(
+                m, lineage={"rescale_parents": batch, "target": target_n_buckets}
+            )
         # phase 2: metadata-only cutover
         m = self._next_manifest()
         new_buckets: dict[str, list[dict]] = {}
@@ -1385,12 +1382,9 @@ class LakeTable:
         m["buckets"] = new_buckets
         m["n_buckets"] = target_n_buckets
         m.pop("rescale", None)
-        m["lineage"] = {
-            "rescale_finalized": {"from": n_old, "to": target_n_buckets}
-        }
-        self._write_manifest(m)
-        self._manifest = m
-        return m["version"]
+        return self._publish(
+            m, lineage={"rescale_finalized": {"from": n_old, "to": target_n_buckets}}
+        )
 
     # ----------------------------------------------------------- retention
 
@@ -1711,45 +1705,29 @@ class LakeTable:
             "buckets": sorted(survivors),
             "files_rewritten": len(candidates),
         }
+        props = None
         if arm_suppression:
-            # ledger-recorded key purges arm apply-side suppression;
-            # non-key and no-ledger purges gate nothing downstream
-            m["properties"][PURGE_EPOCH_PROP] = str(
-                int(m["properties"].get(PURGE_EPOCH_PROP, "0")) + 1
+            # ledger-recorded key purges arm apply-side suppression; non-key
+            # and no-ledger purges gate nothing downstream
+            epoch = int(m["properties"].get(PURGE_EPOCH_PROP, "0")) + 1
+            props = {PURGE_EPOCH_PROP: str(epoch)}
+        # with no candidates nothing stored matches: the metadata-only
+        # commit still bumps purge.epoch (key purges) so suppression activates
+        if candidates:
+            # broadcast only when the key set was driver-collected anyway
+            # (file_prune): the file_prune=False escape hatch exists for
+            # purge sets too large to materialize on the driver, and a
+            # broadcast hint there would defeat it (review-caught)
+            anti = F.broadcast(kdf) if file_prune else kdf
+            kept = (
+                self._read_files(candidates)
+                .join(anti, on=col, how="left_anti")
+                .withColumn("_bucket", self.bucket_expr())
             )
-        m["lineage"] = lineage
-        if not candidates:
-            # nothing stored matches — the metadata-only commit still bumps
-            # purge.epoch (key purges) so suppression activates
-            self._write_manifest(m)
-            self._manifest = m
-            return m["version"]
-
-        txid = f"tx-{m['version']:08d}-{uuid.uuid4().hex[:8]}"
-        tx_dir = os.path.join(self.path, "data", txid)
-        # broadcast only when the key set was driver-collected anyway
-        # (file_prune): the file_prune=False escape hatch exists for purge
-        # sets too large to materialize on the driver, and a broadcast
-        # hint there would defeat it (review-caught)
-        anti = F.broadcast(kdf) if file_prune else kdf
-        kept = (
-            self._read_files(candidates)
-            .join(anti, on=col, how="left_anti")
-            .withColumn("_bucket", self.bucket_expr())
-        )
-        self._table_write(kept, tx_dir)
-        new_files = self._collect_written_files(tx_dir, m["schema_version"])
-        stray = set(new_files) - set(survivors)
-        if stray:
-            raise ValueError(
-                f"purge: rows landed in buckets {sorted(stray)} outside "
-                f"the touched set {sorted(survivors)} — refusing to commit"
-            )
-        for b, clean in survivors.items():
-            m["buckets"][str(b)] = clean + new_files.get(b, [])
-        self._write_manifest(m)
-        self._manifest = m
-        return m["version"]
+            written = self._write_tx(m, kept, set(survivors))
+            for b, clean in survivors.items():
+                m["buckets"][str(b)] = clean + written.get(b, [])
+        return self._publish(m, props, lineage)
 
     def verify_purged(self, keys) -> dict[int, int]:
         """Erasure audit: for each RETAINED snapshot version, the number of
@@ -1825,13 +1803,6 @@ class LakeTable:
             .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
             .drop(*SYSTEM_COLS)
         )
-
-    # ------------------------------------------------------------ time travel
-
-    def snapshot(self, version: int) -> "LakeTable":
-        """Time travel: a read-only view of the table at an earlier snapshot
-        (alias of :meth:`at_version` kept for the original API)."""
-        return self.at_version(version)
 
     # ------------------------------------------------------------- evolution
 
@@ -2232,13 +2203,10 @@ class LakeTable:
             return self.version  # full replay — nothing to commit
         m["schema_version"] = new_sv
         m["schemas"][str(new_sv)] = T.StructType(fields).jsonValue()
-        # own lineage, not the parent's (deep-copied by _next_manifest):
-        # without this the history() view labels evolution commits with the
-        # PREVIOUS commit's record
-        m["lineage"] = {
-            "schema_evolution": [repr(op) for op in ops],
-            "new_schema_version": new_sv,
-        }
-        self._write_manifest(m)
-        self._manifest = m
-        return m["version"]
+        return self._publish(
+            m,
+            lineage={
+                "schema_evolution": [repr(op) for op in ops],
+                "new_schema_version": new_sv,
+            },
+        )

@@ -419,7 +419,7 @@ def export_changelog_debezium(
     epoch = int(epoch_raw) if epoch_raw is not None else None
     feed = snapshot_diff(table, v_from, v_to)
     if mask_suppressed:
-        ledger = table.suppressed_keys() if hasattr(table, "suppressed_keys") else None
+        ledger = table.suppressed_keys()
         if ledger is not None:
             key = table.key_col
             marked = F.broadcast(

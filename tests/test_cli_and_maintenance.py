@@ -59,7 +59,7 @@ def test_time_travel_snapshot(spark, tmp_path):
     pipe.apply_batch(spark, spark.createDataFrame(pdf2))
     t.refresh()
     assert t.version > v1
-    old = t.snapshot(v1)
+    old = t.at_version(v1)
     assert old.read().count() == n1  # immutable history
 
 

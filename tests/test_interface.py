@@ -1,7 +1,8 @@
-"""UpsertTarget seam contract (SURVEY.md §7 S0 promise, VERDICT r1 #10):
-LakeTable satisfies the protocol, and the CDC merge loop can run against a
-proxy that REJECTS any attribute outside it — i.e. swapping in an Iceberg
-adapter is provably a config switch, not a rewrite."""
+"""UpsertTarget seam contract: LakeTable satisfies the protocol, and the
+CDC merge loop (apply in both write modes, replay, a retry after a lost
+commit, and the auto-compaction policy) runs against a proxy that REJECTS
+any attribute outside it — the loop needs nothing of a table but the
+protocol."""
 
 from __future__ import annotations
 
@@ -28,6 +29,21 @@ def test_laketable_satisfies_protocol(spark, tmp_path):
     assert isinstance(t, UpsertTarget)
 
 
+def _events(spark):
+    return spark.createDataFrame(
+        synth.make_change_events(300, 40, seed=7),
+        schema="change_lsn long, op string, url string, warc_ts timestamp, "
+        "html binary, lang string, schema_epoch int",
+    ).withColumn("language", F.lit(None).cast("string")).withColumn(
+        "fetch_status", F.lit(None).cast("long")
+    )
+
+
+def _oracle_urls():
+    oracle = synth.oracle_final_state(synth.make_change_events(300, 40, seed=7))
+    return sorted(oracle["url"])
+
+
 class SeamProxy:
     """Forwards ONLY protocol members; anything else is a seam violation."""
 
@@ -44,13 +60,7 @@ class SeamProxy:
 
 @pytest.mark.parametrize("write_mode", ["cow", "mor"])
 def test_cdc_loop_runs_through_the_seam_only(spark, tmp_path, write_mode):
-    events = spark.createDataFrame(
-        synth.make_change_events(300, 40, seed=7),
-        schema="change_lsn long, op string, url string, warc_ts timestamp, "
-        "html binary, lang string, schema_epoch int",
-    ).withColumn("language", F.lit(None).cast("string")).withColumn(
-        "fetch_status", F.lit(None).cast("long")
-    )
+    events = _events(spark)
     table = LakeTable.create(
         spark, str(tmp_path / "pages"), PAGES_SCHEMA, key_col="url", n_buckets=4
     )
@@ -62,9 +72,35 @@ def test_cdc_loop_runs_through_the_seam_only(spark, tmp_path, write_mode):
     lin2 = apply_cdc_batch(proxy, events, batch_id=1, write_mode=write_mode)
     assert lin2["skipped"]
     # state is real: final rows match the pandas oracle's url set
-    oracle = synth.oracle_final_state(synth.make_change_events(300, 40, seed=7))
     got = sorted(r.url for r in table.read().select("url").collect())
-    assert got == sorted(oracle["url"])
+    assert got == _oracle_urls()
+
+
+def test_apply_retry_after_a_lost_commit_stays_inside_the_seam(
+    spark, tmp_path, monkeypatch
+):
+    """The conflict retry refreshes the target and re-reads its purge
+    ledger through protocol members only, and the batch lands once."""
+    from test_conflicts import inject_rival_commit
+
+    table = LakeTable.create(
+        spark, str(tmp_path / "pages"), PAGES_SCHEMA, key_col="url", n_buckets=4
+    )
+    proxy = SeamProxy(table)
+    state = inject_rival_commit(monkeypatch, spark)
+    lin = apply_cdc_batch(proxy, _events(spark), batch_id=0)
+    monkeypatch.undo()
+    assert state["injected"] == 1
+    assert not lin["skipped"] and lin["rows_upserted"] > 0
+    assert apply_cdc_batch(proxy, _events(spark), batch_id=1)["skipped"]
+    lineages = [
+        table.manifest_at(v).get("lineage") or {}
+        for v in table.snapshot_versions()
+    ]
+    assert [l.get("_rival", False) for l in lineages[1:]] == [True, False]
+    assert lineages[2]["batch_id"] == 0
+    got = sorted(r.url for r in table.read().select("url").collect())
+    assert got == _oracle_urls()
 
 
 def test_seam_proxy_rejects_out_of_protocol_access(spark, tmp_path):
@@ -82,13 +118,7 @@ def test_maintenance_loop_runs_through_the_seam_only(spark, tmp_path):
     previously read table.manifest directly."""
     from migration_pair_spark.cdc.runner import CdcPipeline
 
-    events = spark.createDataFrame(
-        synth.make_change_events(300, 40, seed=7),
-        schema="change_lsn long, op string, url string, warc_ts timestamp, "
-        "html binary, lang string, schema_epoch int",
-    ).withColumn("language", F.lit(None).cast("string")).withColumn(
-        "fetch_status", F.lit(None).cast("long")
-    )
+    events = _events(spark)
     table = LakeTable.create(
         spark, str(tmp_path / "pages"), PAGES_SCHEMA, key_col="url", n_buckets=4
     )
@@ -105,42 +135,3 @@ def test_maintenance_loop_runs_through_the_seam_only(spark, tmp_path):
     assert lineage.get("auto_compacted_buckets"), lineage
     table.refresh()
     assert max(table.files_per_bucket().values()) <= 1
-
-
-def test_iceberg_adapter_conforms_to_protocol(spark):
-    """The IcebergTable adapter (lakehouse/iceberg.py) presents the FULL
-    UpsertTarget surface — the config switch is code, not a documented
-    mapping. Construction needs no Iceberg jars (only method execution
-    does), so conformance is pinned in this sandbox; execution is gated on
-    IcebergTable.available()."""
-    import inspect
-
-    from migration_pair_spark.lakehouse.iceberg import IcebergTable
-    from migration_pair_spark.lakehouse.table import LakeTable as _LT
-
-    t = IcebergTable(spark, "catalog.db.pages")
-    # surface check at the CLASS level: isinstance() on a runtime_checkable
-    # protocol hasattr-probes the INSTANCE, which would execute the lazy
-    # property getters (they query the absent catalog); the class carries
-    # the same attributes without evaluation
-    proto_attrs = [
-        a
-        for a in dir(_Proto)
-        if not a.startswith("_")
-        and (callable(getattr(_Proto, a, None)) or isinstance(
-            getattr(_Proto, a, None), property
-        ))
-    ]
-    assert len(proto_attrs) >= 15  # the protocol surface, not a stub list
-    missing = [a for a in proto_attrs if not hasattr(type(t), a)]
-    assert not missing, f"adapter lacks protocol members: {missing}"
-    assert not IcebergTable.available(spark)  # sandbox truth: no jars
-    # method signatures match the protocol's (arity drift would break the
-    # CDC loop at call time even though the runtime_checkable passes)
-    for name in (
-        "read_buckets", "replace_buckets", "append_delta_buckets",
-        "evolve_schema", "compact", "bucket_expr", "files_per_bucket",
-    ):
-        got = inspect.signature(getattr(IcebergTable, name))
-        want = inspect.signature(getattr(_LT, name))
-        assert list(got.parameters) == list(want.parameters), name

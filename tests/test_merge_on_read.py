@@ -97,6 +97,33 @@ def test_mor_compaction_folds_without_changing_state(spark, stream_dir, tmp_path
     assert LakeTable.load(spark, pipe.table_path).manifest["mor"] is True
 
 
+def test_cow_apply_resolves_the_mor_buckets_it_rewrites(
+    spark, stream_dir, tmp_path
+):
+    """A COW apply rewrites each touched bucket whole and one row per key,
+    so the same commit takes those buckets out of ``mor_buckets``; buckets
+    it did not touch keep their deltas and stay flagged."""
+    from pyspark.sql import functions as F
+
+    d, full = stream_dir
+    events = spark.read.parquet(d)
+    path = str(tmp_path / "mixed")
+    tail = F.col("change_lsn") > N_EVENTS - 5
+    CdcPipeline(table_path=path, n_buckets=8, write_mode="mor").apply_batch(
+        spark, events.filter(~tail)
+    )
+    flagged = LakeTable.load(spark, path).mor_buckets
+    lin = CdcPipeline(table_path=path, n_buckets=8, write_mode="cow").apply_batch(
+        spark, events.filter(tail)
+    )
+    touched = {int(b) for b in lin["partition_counts"]}
+    t = LakeTable.load(spark, path)
+    assert touched and touched <= flagged
+    assert t.mor_buckets == flagged - touched
+    assert all(len(t.manifest["buckets"][str(b)]) == 1 for b in touched)
+    assert _state(spark, path) == _oracle(full)
+
+
 def test_cow_and_mor_agree(spark, stream_dir, tmp_path):
     d, full = stream_dir
     cow = CdcPipeline(table_path=str(tmp_path / "cow"), n_buckets=8, write_mode="cow")

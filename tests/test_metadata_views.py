@@ -1,25 +1,36 @@
-"""Metadata views (LakeTable.history / files): Iceberg
-history/snapshots/files analogs built from the retained manifests."""
+"""Metadata views (LakeTable.history / files): one row per committed
+snapshot / per data file, built from the retained manifests."""
 
 from __future__ import annotations
 
 import json
+
+import pytest
 
 from migration_pair_spark import synth
 from migration_pair_spark.cdc.runner import CdcPipeline
 from migration_pair_spark.lakehouse.table import LakeTable
 
 
-def test_history_and_files_views(spark, tmp_path):
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_history_and_files_views(spark, tmp_path, write_mode):
     ev = str(tmp_path / "events")
     synth.write_change_stream(ev, 300, 40, 3, seed=21, evolution=True)
     p = CdcPipeline(
         table_path=str(tmp_path / "t"), n_buckets=4,
-        stats_cols=("warc_ts", "_lsn"),
+        stats_cols=("warc_ts", "_lsn"), write_mode=write_mode,
     )
     p.run_stream(spark, ev, str(tmp_path / "ck"))
     t = LakeTable.load(spark, p.table_path)
+    assert t.is_merge_on_read == (write_mode == "mor")
+    before = t.version
+    compacted = {int(b) for b, fs in t.manifest["buckets"].items() if fs}
     t.compact(sort_by=["warc_ts"])
+    # a compaction is ONE snapshot, and it leaves no compacted bucket
+    # flagged merge-on-read
+    assert t.version == before + 1
+    assert not compacted & set(t.manifest["mor_buckets"])
+    assert not t.is_merge_on_read
 
     h = {r["version"]: r for r in t.history().collect()}
     assert sorted(h) == t.snapshot_versions()

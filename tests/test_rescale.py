@@ -86,11 +86,11 @@ def test_rescale_readable_mid_migration_and_resumes(spark, tmp_table_dir):
     writes = {"n": 0}
     orig = t._table_write
 
-    def crashing_write(df, tx_dir):
+    def crashing_write(df, tx_dir, *rest):
         if writes["n"] >= 2:
             raise RuntimeError("injected crash mid-rescale")
         writes["n"] += 1
-        orig(df, tx_dir)
+        orig(df, tx_dir, *rest)
 
     t._table_write = crashing_write
     with pytest.raises(RuntimeError, match="mid-rescale"):
@@ -107,9 +107,9 @@ def test_rescale_readable_mid_migration_and_resumes(spark, tmp_table_dir):
     # resume with the same target: only the remaining parents are rewritten
     writes2 = {"n": 0}
 
-    def counting_write(df, tx_dir):
+    def counting_write(df, tx_dir, *rest):
         writes2["n"] += 1
-        orig(df, tx_dir)
+        orig(df, tx_dir, *rest)
 
     fresh._table_write = counting_write
     fresh.rescale(8, parents_per_commit=1)
@@ -124,11 +124,11 @@ def test_rescale_conflicting_target_rejected(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir, n_buckets=4)
     orig = t._table_write
 
-    def crash_after_one(df, tx_dir):
+    def crash_after_one(df, tx_dir, *rest):
         if crash_after_one.n >= 1:
             raise RuntimeError("boom")
         crash_after_one.n += 1
-        orig(df, tx_dir)
+        orig(df, tx_dir, *rest)
 
     crash_after_one.n = 0
     t._table_write = crash_after_one
