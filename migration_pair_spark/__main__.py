@@ -306,10 +306,11 @@ def main(argv: list[str] | None = None) -> int:
     from migration_pair_spark.config import EngineConfig
     from migration_pair_spark.session import get_spark
 
-    cfg = EngineConfig.load(args.config, **{
-        k: v for k, v in vars(args).items()
-        if k in {"table_path", "delimiter", "max_files_per_trigger"} and v is not None
-    } | ({"csv_delimiter": args.delimiter} if getattr(args, "delimiter", None) else {}))
+    cfg = EngineConfig.load(
+        args.config,
+        max_files_per_trigger=getattr(args, "max_files_per_trigger", None),
+        csv_delimiter=getattr(args, "delimiter", None),
+    )
     spark = get_spark("mps-cli", master=cfg.master)
 
     if args.cmd == "snapshot-export":

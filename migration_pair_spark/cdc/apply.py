@@ -54,7 +54,11 @@ logger = logging.getLogger("migration_pair_spark.cdc")
 
 from migration_pair_spark.cdc.lww import lww_dedup_agg
 from migration_pair_spark.functions.extract import with_extracted_text
-from migration_pair_spark.lakehouse.table import CommitConflictError, LakeTable
+from migration_pair_spark.lakehouse.table import (
+    COMMIT_RETRIES,
+    LakeTable,
+    retry_conflicts,
+)
 from migration_pair_spark.sources import debezium as dbz
 
 WATERMARK_PROP = "engine.max_lsn"
@@ -168,13 +172,11 @@ def apply_cdc_batch(
     batch: DataFrame,
     batch_id: int = 0,
     epoch_registry: "dict[int, list] | None" = None,
-    extract_text: bool = True,
     write_mode: str = "cow",
     expectations: "dict[str, str] | None" = None,
     on_violation: str = "drop",
     violations_dir: "str | None" = None,
     suppress_keys: "DataFrame | None" = None,
-    conflict_retries: int = 3,
 ) -> dict:
     """Apply one micro-batch of change events to ``table``. Returns the
     lineage record (FIXTURES.md F4). Idempotent: re-applying any prefix,
@@ -249,14 +251,15 @@ def apply_cdc_batch(
     ledger is broadcast (takedown-scale, tiny next to the batch); batches
     on never-purged tables pass None and pay nothing.
 
-    ``conflict_retries``: a rival writer (a maintenance CLI — compact,
+    Commit conflicts: a rival writer (a maintenance CLI — compact,
     purge, rescale — racing this stream) can win the optimistic commit;
     the batch then refreshes and re-applies WHOLE, which is safe by the
     same argument as crash replay: the gate re-reads the applied
     intervals from the rival's snapshot, so anything it already covers is
     skipped and the merge recomputes against the new bucket content. The
-    losing attempt's files are invisible orphans. Exhausting the retries
-    re-raises (a stream that loses every commit should stop loudly)."""
+    losing attempt's files are invisible orphans. Exhausting the
+    ``COMMIT_RETRIES`` retries re-raises (a stream that loses every
+    commit should stop loudly)."""
     t0 = time.monotonic()
     phase_ms: dict[str, int] = {}  # per-phase wall breakdown (lineage)
 
@@ -286,9 +289,9 @@ def apply_cdc_batch(
     def _run():
         with _aqe_disabled(spark):
             return _apply_cdc_batch_inner(
-                table, batch, batch_id, epoch_registry, extract_text,
-                write_mode, expectations or {}, on_violation,
-                violations_dir, state["suppress"], t0, phase_ms, _mark,
+                table, batch, batch_id, epoch_registry, write_mode,
+                expectations or {}, on_violation, violations_dir,
+                state["suppress"], t0, phase_ms, _mark,
             )
 
     def _on_conflict(e):
@@ -296,7 +299,7 @@ def apply_cdc_batch(
         logger.warning(
             "batch %s lost commit to a rival writer (%s) — refreshing "
             "and re-applying (attempt %d/%d)",
-            batch_id, e, state["attempt"], conflict_retries,
+            batch_id, e, state["attempt"], COMMIT_RETRIES,
         )
         table.refresh()
         # re-derive the suppression ledger from the RIVAL's state: the
@@ -305,9 +308,7 @@ def apply_cdc_batch(
         # right back (review-caught; pinned in tests/test_conflicts.py)
         state["suppress"] = table.suppressed_keys()
 
-    from migration_pair_spark.lakehouse.table import retry_conflicts
-
-    return retry_conflicts(_run, conflict_retries, _on_conflict)
+    return retry_conflicts(_run, _on_conflict)
 
 
 def _apply_cdc_batch_inner(
@@ -315,7 +316,6 @@ def _apply_cdc_batch_inner(
     batch: DataFrame,
     batch_id: int,
     epoch_registry: "dict[int, list] | None",
-    extract_text: bool,
     write_mode: str,
     expectations: "dict[str, str]",
     on_violation: str,
@@ -618,7 +618,7 @@ def _apply_cdc_batch_inner(
     # -- 5: vectorized text extraction, winners only (mapInArrow: columns
     # stay Arrow buffers, the RE2 chain is the only Python-side work; delete
     # winners carry html=null and extract to null) ---------------------------
-    if extract_text and "html" in winners.columns:
+    if "html" in winners.columns:
         winners = with_extracted_text(winners, html_col="html", out_col="text")
 
     # Project winners onto the physical table schema, casting every column to

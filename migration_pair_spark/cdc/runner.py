@@ -93,7 +93,6 @@ class CdcPipeline:
     epoch_registry: dict[int, list] = field(
         default_factory=lambda: dict(PAGES_EPOCH_REGISTRY)
     )
-    extract_text: bool = True
     # 0 = unbounded; >0 splits oversized batches into LSN-ranged sub-commits
     # (reference InsertionBatch analog; see apply_batch)
     max_events_per_batch: int = 0
@@ -145,12 +144,6 @@ class CdcPipeline:
     # "current text of url X") prune files a hash-distributed key's zone
     # maps never can. Applies at CREATE time; ("url",) is the natural value.
     bloom_filter_cols: tuple[str, ...] = ()
-    # clustered auto-compaction: when the follow loop compacts, sort rows
-    # within each bucket by these columns (and optionally split into
-    # bounded sorted runs) so the zone maps above get TIGHT — see
-    # LakeTable.compact
-    compact_sort_by: tuple[str, ...] = ()
-    compact_max_rows_per_file: int = 0
     # canonicalize the key column (functions/webtext.canonical_url) before
     # LWW/bucketing: crawl-URL variants of one page (case, default ports,
     # tracking params, fragments) collapse into ONE key — fewer phantom
@@ -216,14 +209,7 @@ class CdcPipeline:
         self._supp_cache = (epoch, ledger)
         return ledger
 
-    def purge(
-        self,
-        spark: SparkSession,
-        keys: list,
-        erase_history: bool = False,
-        keep_last: int = 1,
-        vacuum_older_than_s: float = 3600.0,
-    ) -> dict:
+    def purge(self, spark: SparkSession, keys: list) -> dict:
         """Right-to-be-forgotten erasure of ``keys`` (takedowns, robots
         revocations): canonicalizes the keys exactly like ingest does when
         ``canonicalize_key`` is set (a purge of any crawl variant erases
@@ -232,20 +218,12 @@ class CdcPipeline:
         records them on the suppression ledger so future change events for
         them are dropped at the apply gate with their LSNs committed.
 
-        ``erase_history=True`` completes erasure across retained history:
-        expire all but ``keep_last`` snapshots and vacuum unreferenced
-        files. ``vacuum_older_than_s`` keeps vacuum's concurrent-writer
-        safety horizon (a racing stream's uncommitted transaction files
-        look exactly like orphans — vacuum(0) would delete data a rival
-        is about to commit, review-caught); pass 0 ONLY on a table with no
-        concurrent writers, otherwise verify_purged reports the last young
-        pre-purge files until the horizon passes. Leave erase_history
-        False to schedule retention separately.
-
-        Downstream consumers (changelog subscriptions, materialized-view
-        refreshes) read snapshot-diff spans, and expiring manifests they
-        have not consumed breaks them loudly — bring them PAST the purge
-        version first: purge (erase_history=False) -> emit/refresh
+        Erasure across retained history is left to retention
+        (``expire_snapshots`` + ``vacuum``, or the ``purge --erase-history``
+        CLI). Downstream consumers (changelog subscriptions,
+        materialized-view refreshes) read snapshot-diff spans, and
+        expiring manifests they have not consumed breaks them loudly —
+        bring them PAST the purge version first: purge -> emit/refresh
         consumers -> retention. Same rule as the retention CLI."""
         table = self.ensure_table(spark)
         kdf = table._purge_keys_df(keys)
@@ -258,13 +236,7 @@ class CdcPipeline:
             )
         version = table.purge_keys(kdf)
         self._supp_cache = None  # next apply reloads the grown ledger
-        out = {"snapshot_id": version, "lineage": table.lineage}
-        if erase_history:
-            out["expired_versions"] = table.expire_snapshots(keep_last=keep_last)
-            out["vacuumed_files"] = len(
-                table.vacuum(older_than_s=vacuum_older_than_s)
-            )
-        return out
+        return {"snapshot_id": version, "lineage": table.lineage}
 
     def normalize(self, batch: DataFrame) -> DataFrame:
         """Map mixed-epoch events onto the newest naming (pre-rename events
@@ -315,6 +287,22 @@ class CdcPipeline:
             ensure_subscription_base(self.changelog_dir, table.version)
         events = self.normalize(events)
         suppress = self._suppression_keys(table)
+
+        def _apply(df: DataFrame, bid: int) -> dict:
+            lineage = apply_cdc_batch(
+                table,
+                df,
+                batch_id=bid,
+                epoch_registry=self.epoch_registry,
+                write_mode=self.write_mode,
+                expectations=self.expectations,
+                on_violation=self.on_violation,
+                violations_dir=self.violations_dir,
+                suppress_keys=suppress,
+            )
+            self._maybe_changelog(table, lineage)
+            return lineage
+
         limit = self.max_events_per_batch
         if limit and limit > 0:
             has_marks = dbz.CORRUPT_COL in events.columns
@@ -351,20 +339,7 @@ class CdcPipeline:
                         chunk = events.filter(
                             (F.col("change_lsn") >= lo) & (F.col("change_lsn") <= hi)
                         )
-                        sub = apply_cdc_batch(
-                            table,
-                            chunk,
-                            batch_id=batch_id * 1_000_000 + part,
-                            epoch_registry=self.epoch_registry,
-                            extract_text=self.extract_text,
-                            write_mode=self.write_mode,
-                            expectations=self.expectations,
-                            on_violation=self.on_violation,
-                            violations_dir=self.violations_dir,
-                            suppress_keys=suppress,
-                        )
-                        self._maybe_changelog(table, sub)
-                        lineages.append(sub)
+                        lineages.append(_apply(chunk, batch_id * 1_000_000 + part))
                         lo, part = hi + 1, part + 1
                 finally:
                     # unpersist on ALL exits: a commit conflict raised
@@ -394,19 +369,7 @@ class CdcPipeline:
                     "wall_ms": sum(l["wall_ms"] for l in lineages),
                     "sub_batches": lineages,
                 }
-        lineage = apply_cdc_batch(
-            table,
-            events,
-            batch_id=batch_id,
-            epoch_registry=self.epoch_registry,
-            extract_text=self.extract_text,
-            write_mode=self.write_mode,
-            expectations=self.expectations,
-            on_violation=self.on_violation,
-            violations_dir=self.violations_dir,
-            suppress_keys=suppress,
-        )
-        self._maybe_changelog(table, lineage)
+        lineage = _apply(events, batch_id)
         self._maybe_auto_compact(table, lineage)
         return lineage
 
@@ -481,11 +444,7 @@ class CdcPipeline:
             return
         over = [b for b, n in table.files_per_bucket().items() if n > limit]
         if over:
-            version = table.compact(
-                over,
-                sort_by=list(self.compact_sort_by) or None,
-                max_rows_per_file=self.compact_max_rows_per_file or None,
-            )
+            version = table.compact(over)
             lineage["auto_compacted_buckets"] = over
             lineage["auto_compact_snapshot"] = version
             if self.changelog_dir is not None and self.changelog_policy == "on_compact":

@@ -238,7 +238,7 @@ class MaterializedView:
 
     # --------------------------------------------------------------- refresh
 
-    def refresh(self, conflict_retries: int = 3) -> dict:
+    def refresh(self) -> dict:
         """Advance the view to the base table's current version. One diff
         span covers any number of base commits. Returns a lineage-style
         record; no-op (and no commit) when already current. A rival
@@ -248,9 +248,7 @@ class MaterializedView:
         from migration_pair_spark.lakehouse.table import retry_conflicts
 
         # _refresh_once refreshes base+view itself, so rebase needs no hook
-        return retry_conflicts(
-            self._refresh_once, conflict_retries, lambda _e: None
-        )
+        return retry_conflicts(self._refresh_once, lambda _e: None)
 
     def _refresh_once(self) -> dict:
         self.base.refresh()

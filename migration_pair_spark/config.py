@@ -12,27 +12,20 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import asdict, dataclass, field, fields
+from dataclasses import asdict, dataclass, fields
 
 
 @dataclass(frozen=True)
 class EngineConfig:
-    # target table
-    table_path: str = "./pages_table"
-    key_col: str = "url"
+    """The settings the CLI reads; the table path, event and checkpoint
+    directories are per-command arguments, not config."""
+
+    # target table (applies when a command creates it)
     n_buckets: int = 32
     # change stream
-    events_dir: str = "./change_events"
-    checkpoint_dir: str = "./checkpoints/cdc"
     max_files_per_trigger: int = 1
-    # reference's InsertionBatch analog (micro-batch size bound); the
-    # reference defaults to 100_000 statements per flush when unset
-    # (/root/reference/Models/SettingsModel.cs:10)
-    max_events_per_batch: int = 100_000
     # execution
     master: str | None = None
-    shuffle_partitions: int | None = None
-    extract_text: bool = True
     # "cow" (rewrite touched buckets) or "mor" (append deltas, resolve on
     # read, fold via compact) — see cdc.apply.apply_cdc_batch
     write_mode: str = "cow"

@@ -49,6 +49,8 @@ SYSTEM_COLS = ["_lsn", "_deleted"]
 #: bumped by every purge_keys commit; its PRESENCE is the zero-cost signal
 #: the CDC apply path uses to know a suppression ledger exists
 PURGE_EPOCH_PROP = "purge.epoch"
+#: how many lost commits a recomputable operation absorbs before re-raising
+COMMIT_RETRIES = 3
 
 
 class CommitConflictError(RuntimeError):
@@ -57,22 +59,22 @@ class CommitConflictError(RuntimeError):
     transaction's data files are orphans (invisible; vacuum collects
     them) — the loser refreshes and retries its WHOLE operation against
     the new table state. Recomputable operations (CDC apply, compact,
-    purge, view refresh) do that automatically; see their
-    ``conflict_retries`` parameters."""
+    purge, view refresh) do that automatically, up to ``COMMIT_RETRIES``
+    times."""
 
 
-def retry_conflicts(fn, retries: int, on_conflict):
+def retry_conflicts(fn, on_conflict):
     """The one optimistic-rebase loop every recomputable operation shares:
     run ``fn``; on CommitConflictError call ``on_conflict(error)`` (which
     must refresh whatever state ``fn`` recomputes from) and re-run, up to
-    ``retries`` times; then re-raise."""
+    ``COMMIT_RETRIES`` times; then re-raise."""
     attempt = 0
     while True:
         try:
             return fn()
         except CommitConflictError as e:
             attempt += 1
-            if attempt > retries:
+            if attempt > COMMIT_RETRIES:
                 raise
             on_conflict(e)
 _SYSTEM_FIELDS = [
@@ -1222,7 +1224,6 @@ class LakeTable:
         bucket_ids: list[int] | None = None,
         sort_by: list[str] | None = None,
         max_rows_per_file: int | None = None,
-        conflict_retries: int = 3,
     ) -> int:
         """Maintenance: fold each chosen bucket into one file per bucket —
         LWW-resolving merge-on-read deltas (one surviving row per key) and
@@ -1245,12 +1246,11 @@ class LakeTable:
         CONCURRENCY: compaction racing a live writer (a maintenance CLI
         against a running cdc-run) loses the optimistic commit and, being
         a pure content-preserving fold, simply refreshes and recomputes —
-        up to ``conflict_retries`` times (Iceberg's rewrite_data_files
+        up to ``COMMIT_RETRIES`` times (Iceberg's rewrite_data_files
         retry analog). The losing attempt's files are invisible orphans
         (vacuum collects them). tests/test_conflicts.py."""
         return retry_conflicts(
             lambda: self._compact_once(bucket_ids, sort_by, max_rows_per_file),
-            conflict_retries,
             lambda _e: self.refresh(),
         )
 
@@ -1540,13 +1540,7 @@ class LakeTable:
                 remaining = [e for e in remaining if e["path"] not in hit_paths]
         return hits, remaining
 
-    def purge_keys(
-        self,
-        keys,
-        file_prune: bool = True,
-        conflict_retries: int = 3,
-        record_suppression: bool = True,
-    ) -> int:
+    def purge_keys(self, keys, record_suppression: bool = True) -> int:
         """Right-to-be-forgotten erasure (takedowns, robots revocations):
         physically REMOVE every stored row — tombstones and merge-on-read
         delta versions included — whose key is in ``keys`` from the current
@@ -1557,13 +1551,10 @@ class LakeTable:
 
         Scale shape: keys hash to buckets, and within each touched bucket
         only the files whose zone maps / parquet blooms cannot rule the key
-        out are rewritten (``file_prune=True``) — on a bloom-indexed key a
-        purge of k URLs rewrites ~k files out of a 100-TB table, never the
-        buckets wholesale. The key list is collected driver-side to drive
-        file pruning (bounded: purge sets are takedown-scale); for purge
-        sets too large to collect pass ``file_prune=False`` — keys stay
-        distributed and every file of every bucket rewrites via one
-        anti-join.
+        out are rewritten — on a bloom-indexed key a purge of k URLs
+        rewrites ~k files out of a 100-TB table, never the buckets
+        wholesale. The key list is collected driver-side to drive file
+        pruning (bounded: purge sets are takedown-scale).
 
         Erasure across RETAINED HISTORY is completed by retention, exactly
         as in Iceberg/Delta: older snapshots still reference the pre-purge
@@ -1575,7 +1566,7 @@ class LakeTable:
         CONCURRENCY: a purge racing a live writer loses the optimistic
         commit, refreshes and recomputes (the anti-join rewrite is
         idempotent against any newer state; the ledger append happened
-        once, before the first attempt) — up to ``conflict_retries``
+        once, before the first attempt) — up to ``COMMIT_RETRIES``
         times. tests/test_conflicts.py.
 
         ``record_suppression=False`` skips the ledger and the epoch bump —
@@ -1589,20 +1580,12 @@ class LakeTable:
             self._append_suppression(kdf)
         return retry_conflicts(
             lambda: self._purge_once(
-                kdf, self.key_col, file_prune,
-                arm_suppression=record_suppression,
+                kdf, self.key_col, arm_suppression=record_suppression
             ),
-            conflict_retries,
             lambda _e: self.refresh(),
         )
 
-    def purge_matching(
-        self,
-        col: str,
-        values,
-        file_prune: bool = True,
-        conflict_retries: int = 3,
-    ) -> int:
+    def purge_matching(self, col: str, values) -> int:
         """Erasure by a NON-KEY column — the provenance variant of
         :meth:`purge_keys` (e.g. a dedup corpus whose rows carry the
         source url in a ``src_key`` column). Values can't route to
@@ -1617,9 +1600,7 @@ class LakeTable:
             raise ValueError(f"purge_matching: unknown column {col!r}")
         kdf = self._values_df(col, values)
         return retry_conflicts(
-            lambda: self._purge_once(kdf, col, file_prune),
-            conflict_retries,
-            lambda _e: self.refresh(),
+            lambda: self._purge_once(kdf, col), lambda _e: self.refresh()
         )
 
     def _values_df(self, col: str, values) -> DataFrame:
@@ -1652,37 +1633,24 @@ class LakeTable:
         return vdf.where(F.col(col).isNotNull()).distinct()
 
     def _purge_once(
-        self,
-        kdf: DataFrame,
-        col: str,
-        file_prune: bool,
-        arm_suppression: bool = False,
+        self, kdf: DataFrame, col: str, arm_suppression: bool = False
     ) -> int:
-        by_key = col == self.key_col
         m = self._next_manifest()
-        if by_key and file_prune:
+        if col == self.key_col:
             # key values route to their buckets: probe only those
             rows = kdf.withColumn("_b", self.bucket_expr()).collect()
             by_bucket: dict[int, list] = {}
             for r in rows:
                 by_bucket.setdefault(int(r["_b"]), []).append(r[col])
             n_keys = len(rows)
-        elif by_key:
-            brows = (
-                kdf.select(self.bucket_expr().alias("_b"))
-                .distinct()
-                .collect()
-            )
-            by_bucket = {int(r["_b"]): [] for r in brows}  # [] = probe all
-            n_keys = kdf.count()
         else:
             # non-key purge: values can land in ANY bucket; every bucket's
             # files are probed (and zone/bloom-pruned per value)
-            vals = [r[col] for r in kdf.collect()] if file_prune else []
+            vals = [r[col] for r in kdf.collect()]
             by_bucket = {
                 int(b): vals for b, fs in m["buckets"].items() if fs
             }
-            n_keys = len(vals) if file_prune else kdf.count()
+            n_keys = len(vals)
 
         candidates: list[dict] = []
         survivors: dict[int, list[dict]] = {}
@@ -1690,10 +1658,7 @@ class LakeTable:
             entries = m["buckets"].get(str(b), [])
             if not entries:
                 continue
-            if file_prune:
-                hit, clean = self._purge_candidates(entries, vals, col)
-            else:
-                hit, clean = list(entries), []
+            hit, clean = self._purge_candidates(entries, vals, col)
             if hit:
                 candidates.extend(hit)
                 survivors[b] = clean
@@ -1714,14 +1679,10 @@ class LakeTable:
         # with no candidates nothing stored matches: the metadata-only
         # commit still bumps purge.epoch (key purges) so suppression activates
         if candidates:
-            # broadcast only when the key set was driver-collected anyway
-            # (file_prune): the file_prune=False escape hatch exists for
-            # purge sets too large to materialize on the driver, and a
-            # broadcast hint there would defeat it (review-caught)
-            anti = F.broadcast(kdf) if file_prune else kdf
+            # the key set was driver-collected above: broadcast it
             kept = (
                 self._read_files(candidates)
-                .join(anti, on=col, how="left_anti")
+                .join(F.broadcast(kdf), on=col, how="left_anti")
                 .withColumn("_bucket", self.bucket_expr())
             )
             written = self._write_tx(m, kept, set(survivors))

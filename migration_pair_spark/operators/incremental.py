@@ -627,7 +627,7 @@ class IncrementalDeduper(_IndexPair):
         ranges = applied_ranges(self.corpus)
         return ranges[-1][1] if ranges else -1
 
-    def purge_docs(self, doc_ids, conflict_retries: int = 3) -> dict:
+    def purge_docs(self, doc_ids) -> dict:
         """Right-to-be-forgotten erasure from the LSH dedup state: the
         docs' corpus rows (their full text) are removed by a bucket-pruned
         key purge, and their signature/band rows leave the index by a
@@ -652,13 +652,8 @@ class IncrementalDeduper(_IndexPair):
         Refuses while the index lags the corpus (see
         ``_require_index_current``)."""
         self._require_index_current("purge_docs")
-        cv = self.corpus.purge_keys(
-            doc_ids, conflict_retries=conflict_retries,
-            record_suppression=False,
-        )
-        iv = self.index.purge_matching(
-            "doc_id", doc_ids, conflict_retries=conflict_retries
-        )
+        cv = self.corpus.purge_keys(doc_ids, record_suppression=False)
+        iv = self.index.purge_matching("doc_id", doc_ids)
         return {"corpus_version": cv, "index_version": iv}
 
     def _band_rows(self, sig: DataFrame) -> DataFrame:
@@ -1126,7 +1121,7 @@ class IncrementalChunkIndex(_IndexPair):
             data_blooms=("src_key",), index_blooms=("ck",),
         )
 
-    def purge_source(self, values, conflict_retries: int = 3) -> int:
+    def purge_source(self, values) -> int:
         """Right-to-be-forgotten erasure through the dedup family: remove
         every corpus row whose ``src_key`` (the page url the CDC sweep
         stamped) is in ``values`` — text AND deduped_text, every swept
@@ -1141,9 +1136,7 @@ class IncrementalChunkIndex(_IndexPair):
         corpus rewrite is file-pruned by the src_key blooms recorded at
         create. Returns the corpus's new version."""
         self._require_index_current("purge_source")
-        return self.corpus.purge_matching(
-            "src_key", values, conflict_retries=conflict_retries
-        )
+        return self.corpus.purge_matching("src_key", values)
 
     def _flag_chunks(
         self, chunks: DataFrame, keep=lambda df: df, n_docs: int | None = None

@@ -86,14 +86,3 @@ def sample_per_stratum(
         .drop("_rn")
     )
 
-
-def oracle_sample_sql(
-    stratum_col: str, k: int, key_col: str = "doc_id", salt: str = "sample"
-) -> str:
-    """DuckDB twin of sample_per_stratum's selection predicate."""
-    h = f"md5('{salt}:' || CAST({key_col} AS VARCHAR))"
-    return (
-        f"SELECT * EXCLUDE (_rn) FROM (SELECT *, row_number() OVER "
-        f"(PARTITION BY {stratum_col} ORDER BY {h} ASC, {key_col} ASC) AS _rn "
-        f"FROM documents) WHERE _rn <= {k}"
-    )

@@ -11,7 +11,9 @@ factory calls ``ship_package`` automatically.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import zipfile
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
@@ -19,11 +21,17 @@ _PKG_NAME = os.path.basename(_PKG_DIR)
 
 
 def build_pyfiles_zip(out_path: str | None = None) -> str:
-    """Zip the engine package (pure source, no caches) for --py-files."""
+    """Zip the engine package (pure source, no caches) for --py-files.
+
+    The default path is in a fresh temp directory per call (same
+    basename): a session's tasks keep fetching the file it added, so
+    sessions must not share one path — a second session (another
+    checkout, or this one after an edit) overwriting it fails every task
+    of the first with "exists and does not match contents"."""
     if out_path is None:
         import tempfile
 
-        out_path = os.path.join(tempfile.gettempdir(), f"{_PKG_NAME}-pyfiles.zip")
+        out_path = os.path.join(tempfile.mkdtemp(), f"{_PKG_NAME}-pyfiles.zip")
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, dirs, files in os.walk(_PKG_DIR):
             dirs[:] = [d for d in dirs if d != "__pycache__"]
@@ -42,5 +50,9 @@ def ship_package(spark) -> None:
     marker = "_mps_pyfiles_shipped"
     if getattr(sc, marker, False):
         return
-    sc.addPyFile(build_pyfiles_zip())
+    path = build_pyfiles_zip()
+    sc.addPyFile(path)
+    # the file server reads the archive for the session's lifetime; drop
+    # its per-call directory when the process exits
+    atexit.register(shutil.rmtree, os.path.dirname(path), True)
     setattr(sc, marker, True)

@@ -19,12 +19,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """3/8 of physical memory, capped at 48g: the heap, the JVM's
+    off-heap memory and the Python workers must all fit in the box."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys * 3 // 8 >> 20, 48 << 10)}m"
+
+
 def get_spark(
     app_name: str = "migration_pair_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    task_retries: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
@@ -32,10 +38,10 @@ def get_spark(
     cluster the master comes from spark-submit and this argument is left
     None. ``shuffle_partitions`` defaults to the core count locally; on a
     cluster AQE coalescing makes the initial number non-critical.
-    ``task_retries`` > 1 enables in-task retry in local mode
-    (``local[N, F]``) — the engine analog of the reference's write-timeout
-    retry policy (/root/reference/Policies/RetryPolicy.cs:18-23); on a
-    cluster ``spark.task.maxFailures`` governs instead.
+    In-task retry in local mode is ``master="local[N,F]"`` — the engine
+    analog of the reference's write-timeout retry policy
+    (``Policies/RetryPolicy.cs:18-23``); on a cluster
+    ``spark.task.maxFailures`` governs instead.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     # Under spark-submit the driver python is launched by an existing JVM
@@ -45,10 +51,7 @@ def get_spark(
     # ONLY when no external master can be in play.
     submitted = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not submitted:
-        master = (
-            f"local[{cpus},{task_retries}]" if task_retries and task_retries > 1
-            else f"local[{cpus}]"
-        )
+        master = f"local[{cpus}]"
     if shuffle_partitions is None and master is not None:
         # local[N], local[N,F] or local[*]
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
@@ -89,7 +92,10 @@ def get_spark(
         # local mode: driver heap IS executor memory; size for the box, not
         # the default 1g/8g — 32 concurrent tasks + cached micro-batch state
         # at an 8g heap GC-thrash and invert core scaling (measured).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # Dynamic-partition writes (the bucketed table commit) keep up to 64
         # open writers per task instead of SORTING the batch by partition
         # first: the sort is a memory-bandwidth-bound pass over the full

@@ -17,13 +17,16 @@ from migration_pair_spark.lakehouse.table import LakeTable
 def test_config_load_defaults_and_overrides(tmp_path):
     cfg = EngineConfig.load(None, n_buckets=64)
     assert cfg.n_buckets == 64
-    assert cfg.max_events_per_batch == 100_000  # reference InsertionBatch default
     p = tmp_path / "cfg.json"
-    p.write_text(json.dumps({"key_col": "url", "csv_delimiter": ";"}))
+    p.write_text(json.dumps({"csv_delimiter": ";"}))
     cfg2 = EngineConfig.load(str(p))
     assert cfg2.csv_delimiter == ";"
     with pytest.raises(ValueError, match="unknown config keys"):
         EngineConfig.load(None, nope=1)
+    # a removed field is refused, not silently ignored
+    p.write_text(json.dumps({"csv_delimiter": ";", "max_events_per_batch": 10}))
+    with pytest.raises(ValueError, match="max_events_per_batch"):
+        EngineConfig.load(str(p))
     with pytest.raises(Exception):  # frozen
         cfg.n_buckets = 1
 
@@ -79,6 +82,33 @@ def test_cli_backfill_and_export(spark, tmp_path, capsys):
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "url" in res["exported_columns"]
     assert main(["compact", "--table-path", table_path]) == 0
+
+
+def test_cli_snapshot_roundtrip_with_delimiter(spark, tmp_path, capsys):
+    import glob
+
+    from migration_pair_spark.__main__ import main
+
+    t, _ = _loaded_table(spark, tmp_path)
+    out_csv = str(tmp_path / "csv")
+    assert main([
+        "snapshot-export", "--table-path", t.path, "--out", out_csv,
+        "--delimiter", ";",
+    ]) == 0
+    capsys.readouterr()
+    part = sorted(glob.glob(out_csv + "/part-*.csv"))[0]
+    with open(part) as f:
+        assert f.readline().strip().split(";")[0] == "url"
+    copy = str(tmp_path / "copy")
+    assert main([
+        "snapshot-import", "--csv", out_csv, "--table-path", copy,
+        "--delimiter", ";",
+    ]) == 0
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert res["rows"] == t.read().count()
+    cols = ["url", "text"]
+    got = LakeTable.load(spark, copy).read().select(cols)
+    assert sorted(got.collect()) == sorted(t.read().select(cols).collect())
 
 
 def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):

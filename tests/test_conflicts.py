@@ -175,4 +175,4 @@ def test_exhausted_retries_reraise(spark, tmp_path, monkeypatch):
     # a rival beats EVERY attempt: the loop must give up loudly
     inject_rival_commit(monkeypatch, spark, n_rivals=99)
     with pytest.raises(CommitConflictError):
-        t.compact(conflict_retries=2)
+        t.compact()
