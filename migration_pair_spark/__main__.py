@@ -721,7 +721,7 @@ def main(argv: list[str] | None = None) -> int:
             "schema_version": m["schema_version"],
             "key_col": m["key_col"],
             "n_buckets": m["n_buckets"],
-            "mor": m.get("mor", False),
+            "mor": table.is_merge_on_read,
             "properties": m["properties"],
             "snapshots": table.snapshot_versions(),
             "files": sum(len(fs) for fs in m["buckets"].values()),

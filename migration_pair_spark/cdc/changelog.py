@@ -63,9 +63,7 @@ def changed_buckets(m_from: dict, m_to: dict) -> list[int]:
 def _visible(snap: LakeTable, buckets: list[int]) -> DataFrame:
     """Resolved, visible (non-tombstone) rows of the chosen buckets, user
     schema only."""
-    df = snap.read_buckets(buckets)
-    if snap.manifest.get("mor"):
-        df = snap._lww_resolve(df)
+    df = snap.read_buckets(buckets, resolve=True)
     return df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop(
         *SYSTEM_COLS
     )

@@ -11,7 +11,6 @@ O14 disposition).
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import asdict, dataclass, fields
 
 
@@ -38,7 +37,7 @@ class EngineConfig:
     @classmethod
     def load(cls, path: str | None = None, **overrides) -> "EngineConfig":
         data: dict = {}
-        if path and os.path.exists(path):
+        if path:
             with open(path) as f:
                 data.update(json.load(f))
         data.update({k: v for k, v in overrides.items() if v is not None})

@@ -81,7 +81,12 @@ class UpsertTarget(Protocol):
     # -- routing / reads ----------------------------------------------------
     def bucket_expr(self, col: str | None = None) -> Column: ...
 
-    def read_buckets(self, bucket_ids: list[int], resolve: bool = False) -> DataFrame: ...
+    def read_buckets(self, bucket_ids: list[int], resolve: bool = False) -> DataFrame:
+        """The named buckets' stored rows, with system columns and
+        tombstones. ``resolve=True`` returns one LWW winner per key
+        whenever one of the buckets holds unresolved deltas; the rows come
+        back raw otherwise."""
+        ...
 
     def read(self, include_tombstones: bool = False) -> DataFrame: ...
 
@@ -121,7 +126,8 @@ class UpsertTarget(Protocol):
     # -- maintenance ----------------------------------------------------------
     @property
     def is_merge_on_read(self) -> bool:
-        """True while reads must resolve outstanding deltas."""
+        """True while any bucket holds unresolved deltas (reads of those
+        buckets resolve them; compaction folds them)."""
         ...
 
     def files_per_bucket(self) -> dict[int, int]:

@@ -233,6 +233,18 @@ def _schema_from_json(s: str) -> T.StructType:
     return T.StructType.fromJson(json.loads(s))
 
 
+def _chase(renames: list[dict], name: str, after: int = 0) -> str:
+    """A column name chased FORWARD through the rename history, applying
+    only the renames made after schema version ``after`` (0: all of them,
+    giving the current spelling). A version-aware chase lets a history
+    entry recorded under a since-reused name resolve to the column it
+    described at the time."""
+    for r in renames:
+        if r["at_schema_version"] > after and r["old"] == name:
+            name = r["new"]
+    return name
+
+
 class LakeTable:
     """One keyed, bucketed, snapshot-committed table."""
 
@@ -294,10 +306,9 @@ class LakeTable:
             "buckets": {},  # bucket id (str) -> [{"path":..., "schema_version": v}]
             "properties": dict(properties or {}),
             "lineage": None,
-            # merge-on-read state: True when any bucket holds delta files
-            # whose rows must be LWW-resolved at read time by lww_order
-            "mor": False,  # derived: kept for readers; authoritative set below
-            "mor_buckets": [],  # bucket ids holding unresolved delta files
+            # merge-on-read state: the bucket ids holding delta files whose
+            # rows must be LWW-resolved at read time by lww_order
+            "mor_buckets": [],
             "lww_order": list(lww_order),
             # zone maps: per-file min/max recorded for these columns at every
             # commit (parquet footer stats — no data scan); read_range prunes
@@ -328,10 +339,9 @@ class LakeTable:
         return bool(glob.glob(os.path.join(path, "manifests", "v*.json")))
 
     def refresh(self) -> None:
-        files = sorted(glob.glob(os.path.join(self.path, "manifests", "v*.json")))
-        if files:
-            with open(files[-1]) as f:
-                self._manifest = json.load(f)
+        versions = self.snapshot_versions()
+        if versions:
+            self._manifest = self.manifest_at(versions[-1])
 
     # ------------------------------------------------------------- metadata
 
@@ -376,22 +386,16 @@ class LakeTable:
 
     @property
     def is_merge_on_read(self) -> bool:
-        """True while any bucket holds unresolved delta files (reads must
+        """True while any bucket holds unresolved delta files (reads of it
         LWW-resolve; compaction folds them). Iceberg analog: v2 table with
         outstanding delete files / write.merge.mode=merge-on-read."""
-        return bool(self.mor_buckets) or bool(self.manifest.get("mor"))
+        return bool(self.mor_buckets)
 
     @property
     def mor_buckets(self) -> set[int]:
-        """Buckets with unresolved deltas. Tables written before per-bucket
-        tracking carry only the global bool — treat every nonempty bucket as
-        unresolved for them."""
-        m = self.manifest
-        if "mor_buckets" in m:
-            return {int(b) for b in m["mor_buckets"]}
-        if m.get("mor"):
-            return {int(b) for b, fs in m["buckets"].items() if fs}
-        return set()
+        """Buckets with unresolved deltas — the table's only merge-on-read
+        state."""
+        return {int(b) for b in self.manifest["mor_buckets"]}
 
     def files_per_bucket(self) -> dict[int, int]:
         """Data-file count per bucket — the maintenance metric the
@@ -546,12 +550,9 @@ class LakeTable:
 
     def _resolve_mor(self, m: dict, buckets: list[int]) -> None:
         """Mark ``buckets`` resolved in the next manifest ``m``: their new
-        content holds one row per key, so reads need no LWW resolve there.
-        The table-wide flag clears when no bucket holds deltas."""
-        if self.is_merge_on_read:
-            remaining = sorted(self.mor_buckets - set(buckets))
-            m["mor_buckets"] = remaining
-            m["mor"] = bool(remaining)
+        content holds one row per key, so reads of them need no LWW
+        resolve."""
+        m["mor_buckets"] = sorted(set(m["mor_buckets"]) - set(buckets))
 
     def commit_properties(
         self, properties: dict[str, str], lineage: dict | None = None
@@ -665,20 +666,14 @@ class LakeTable:
         in place, missing columns/fields read as nulls, widened types cast
         up."""
         m = self.manifest
-
-        def cur_name(name: str) -> str:
-            # chase a history-time column spelling to the CURRENT name
-            # (struct renames are recorded under the column name as of
-            # their own epoch, which a later top-level rename may move)
-            for r in m["renames"]:
-                if r["old"] == name:
-                    name = r["new"]
-            return name
-
         for r in m.get("struct_renames", []):
-            # the df still carries WRITE-TIME column names here: resolve
-            # the struct column's current spelling back to the file version
-            col = self._name_at_version(cur_name(r["column"]), from_version)
+            # the df still carries WRITE-TIME column names here: chase the
+            # struct rename's column spelling (recorded as of its own epoch,
+            # which a later top-level rename may move) to the CURRENT name,
+            # then resolve that back to the file version
+            col = self._name_at_version(
+                self._current_name(r["column"]), from_version
+            )
             if r["at_schema_version"] <= from_version or col not in df.columns:
                 continue
             have = df.schema[col].dataType
@@ -717,10 +712,7 @@ class LakeTable:
         # Normal adds are unaffected: pre-add files lack the column anyway.
         born: dict[str, int] = {}
         for a in m.get("adds", []):
-            name = a["name"]
-            for r in m["renames"]:
-                if r["at_schema_version"] > a["at_schema_version"] and r["old"] == name:
-                    name = r["new"]
+            name = _chase(m["renames"], a["name"], a["at_schema_version"])
             born[name] = max(born.get(name, 0), a["at_schema_version"])
         cols = []
         for field in cur.fields:
@@ -768,7 +760,7 @@ class LakeTable:
         duplicated here rather than imported to keep the lakehouse layer
         free of cdc dependencies)."""
         key = self.key_col
-        order = self.manifest.get("lww_order", ["warc_ts", "_lsn"])
+        order = self.lww_order
         payload = [c for c in df.columns if c != key]
         out = df.groupBy(key).agg(
             F.max_by(
@@ -778,27 +770,65 @@ class LakeTable:
         )
         return out.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
 
+    def _scan(
+        self,
+        buckets: "set[int] | None" = None,
+        prune=None,
+        resolve: bool = True,
+    ) -> DataFrame:
+        """The one read planner: the rows of ``buckets`` (default: all),
+        with system columns and tombstones. ``prune`` (a function from a
+        bucket's file entries to the ones worth reading) applies only to
+        resolved buckets: a merge-on-read bucket's winner is known only
+        after ALL its deltas are read, so dropping one by value could
+        resurrect an older row. With ``resolve``, the rows are LWW-resolved
+        exactly when a scanned bucket with files is in :attr:`mor_buckets`
+        (resolved buckets already hold one row per key)."""
+        mor = self.mor_buckets
+        entries: list[dict] = []
+        unresolved = False
+        for b, files in self.manifest["buckets"].items():
+            if buckets is not None and int(b) not in buckets:
+                continue
+            if int(b) in mor and files:
+                unresolved = True
+                entries.extend(files)
+            else:
+                entries.extend(prune(files) if prune else files)
+        df = self._read_files(entries)
+        if df is None:
+            return self._empty_df()
+        return self._lww_resolve(df) if resolve and unresolved else df
+
+    @staticmethod
+    def _visible(df: DataFrame) -> DataFrame:
+        """Rows that are not tombstones, in the user schema."""
+        return df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop(
+            *SYSTEM_COLS
+        )
+
     def read(self, include_tombstones: bool = False) -> DataFrame:
         """Current snapshot as a DataFrame (user schema; tombstones filtered;
         delta files LWW-resolved when the table is in merge-on-read state)."""
-        entries = [e for files in self.manifest["buckets"].values() for e in files]
-        df = self._read_files(entries)
-        if df is None:
-            df = self._empty_df()
-        if self.manifest.get("mor"):
-            df = self._lww_resolve(df)
-        if not include_tombstones:
-            df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop(
-                *SYSTEM_COLS
-            )
-        return df
+        df = self._scan()
+        return df if include_tombstones else self._visible(df)
 
     def manifest_at(self, version: int) -> dict:
-        """The committed manifest of an older snapshot (manifests are
-        immutable and retained — this IS the time-travel metadata)."""
+        """The committed manifest of a snapshot (manifests are immutable
+        and retained — this IS the time-travel metadata). The one manifest
+        reader: a manifest without ``mor_buckets`` keeps only a table-wide
+        merge-on-read flag, a layout no reader here resolves, so it is
+        refused."""
         p = os.path.join(self.path, "manifests", f"v{version:08d}.json")
         with open(p) as f:
-            return json.load(f)
+            m = json.load(f)
+        if "mor_buckets" not in m:
+            raise ValueError(
+                f"table {self.path} v{version} uses the legacy merge-on-read "
+                "layout (no mor_buckets) — its unresolved buckets are "
+                "unknown; re-create the table from its source data"
+            )
+        return m
 
     def at_version(self, version: int, schema_from: "dict | None" = None) -> "LakeTable":
         """Time travel: a read-only view of the table at ``version``.
@@ -813,51 +843,30 @@ class LakeTable:
         m_old = self.manifest_at(version)
         m = m_old
         if schema_from is not None:
+            # the MOR state tracks the OLD file lists: the newer manifest's
+            # mor_buckets would misreport the old snapshot's resolve needs
             m = {
                 **schema_from,
                 "buckets": m_old["buckets"],
-                "mor": m_old.get("mor", False),
+                "mor_buckets": m_old["mor_buckets"],
                 "version": m_old["version"],
                 "properties": m_old["properties"],
             }
-            # per-bucket MOR state must track the OLD file lists too —
-            # inheriting the newer manifest's mor_buckets would make
-            # is_merge_on_read/mor_buckets on the time-travel view
-            # misreport the old snapshot's resolve needs (advisor-caught).
-            # A pre-tracking manifest OMITS the key so the legacy
-            # every-nonempty-bucket fallback still applies to the view.
-            m.pop("mor_buckets", None)
-            if "mor_buckets" in m_old:
-                m["mor_buckets"] = m_old["mor_buckets"]
         snap = LakeTable(self.spark, self.path)
         snap._manifest = m
         return snap
 
     def read_buckets(self, bucket_ids: list[int], resolve: bool = False) -> DataFrame:
         """Scan ONLY the named buckets (with system columns + tombstones) —
-        the bucket-pruned side of the MERGE. ``resolve=True`` applies
-        merge-on-read LWW resolution (raw duplicates otherwise; the COW merge
-        resolves in its own aggregate anyway)."""
-        wanted = set(bucket_ids)
-        entries = [
-            e
-            for b, files in self.manifest["buckets"].items()
-            if int(b) in wanted
-            for e in files
-        ]
-        df = self._read_files(entries)
-        df = df if df is not None else self._empty_df()
-        if resolve and self.manifest.get("mor"):
-            df = self._lww_resolve(df)
-        return df
+        the bucket-pruned side of the MERGE. ``resolve=True`` LWW-resolves
+        when any named bucket is in :attr:`mor_buckets` (raw duplicates
+        otherwise; the COW merge resolves in its own aggregate anyway)."""
+        return self._scan(set(bucket_ids), resolve=resolve)
 
     def _current_name(self, name: str) -> str:
         """A column name chased forward through the rename history to its
         current spelling."""
-        for r in self.manifest["renames"]:
-            if r["old"] == name:
-                name = r["new"]
-        return name
+        return _chase(self.manifest["renames"], name)
 
     # ---------------------------------------------------------- metadata views
 
@@ -882,8 +891,10 @@ class LakeTable:
                 op = "create" if m.get("parent") is None else "commit"
             elif lin.get("compaction"):
                 op = "compact"
-            elif "rescale_parents" in lin or "rescale" in lin:
+            elif "rescale_parents" in lin or "rescale_finalized" in lin:
                 op = "rescale"
+            elif lin.get("purge"):
+                op = "purge"
             elif "schema_evolution" in lin:
                 op = "evolve"
             elif lin.keys() & {"dedup_ingest", "emb_ingest", "chunk_ingest"}:
@@ -902,7 +913,7 @@ class LakeTable:
                     m.get("schema_version"),
                     len(entries),
                     n_rows,
-                    bool(m.get("mor")),
+                    bool(m["mor_buckets"]),
                     op,
                     json.dumps(lin) if lin else None,
                 )
@@ -1092,38 +1103,19 @@ class LakeTable:
         to ``read().filter(col BETWEEN lo AND hi)`` (pinned in
         tests/test_zonemaps.py): surviving files still apply the predicate
         (parquet row-group pushdown inside them), null values never match,
-        and MOR buckets skip file pruning entirely (their winner is only
-        known after resolving ALL delta files, so dropping one by value
-        range could resurrect an older row — the filter still applies after
-        resolution)."""
-        pred_col = col
+        and merge-on-read buckets skip file pruning (:meth:`_scan`: the
+        filter applies after their LWW resolve)."""
         if col not in {f.name for f in self.schema.fields} | set(SYSTEM_COLS):
             raise ValueError(f"read_range: unknown column {col!r}")
-        mor_set = self.mor_buckets if self.manifest.get("mor") else set()
-        entries: list[dict] = []
-        for b, files in self.manifest["buckets"].items():
-            if int(b) in mor_set:
-                entries.extend(files)
-            else:
-                kept, _ = self.prune_entries(files, col, lo, hi)
-                entries.extend(kept)
-        df = self._read_files(entries)
-        if df is None:
-            df = self._empty_df()
         pred = F.lit(True)
         if lo is not None:
-            pred = pred & (F.col(pred_col) >= F.lit(lo))
+            pred = pred & (F.col(col) >= F.lit(lo))
         if hi is not None:
-            pred = pred & (F.col(pred_col) <= F.lit(hi))
-        if self.manifest.get("mor"):
-            df = self._lww_resolve(df).filter(pred)
-        else:
-            df = df.filter(pred)
-        if not include_tombstones:
-            df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop(
-                *SYSTEM_COLS
-            )
-        return df
+            pred = pred & (F.col(col) <= F.lit(hi))
+        df = self._scan(
+            prune=lambda files: self.prune_entries(files, col, lo, hi)[0]
+        ).filter(pred)
+        return df if include_tombstones else self._visible(df)
 
     def bucket_expr(self, col: str | None = None) -> F.Column:
         """The bucket id of a key value: pmod(xxhash64(key), n_buckets)."""
@@ -1177,8 +1169,7 @@ class LakeTable:
         for b, entries in written.items():
             m["buckets"].setdefault(str(b), []).extend(entries)
             added.extend(e["path"] for e in entries)
-        m["mor"] = True
-        m["mor_buckets"] = sorted(set(m.get("mor_buckets", [])) | set(written))
+        m["mor_buckets"] = sorted(set(m["mor_buckets"]) | set(written))
         return self._publish(m, properties, lineage), added
 
     def append_buckets(
@@ -1739,31 +1730,20 @@ class LakeTable:
             )
             .collect()[0]["b"]
         )
-        b = int(bucket)
-        entries = self.manifest["buckets"].get(str(b), [])
-        mor = self.manifest.get("mor") and b in self.mor_buckets
-        if not mor:
-            entries, _ = self.prune_entries(
-                entries, self.key_col, key_value, key_value
-            )
+        key = self.key_col
+
+        def prune(files: list[dict]) -> list[dict]:
+            files, _ = self.prune_entries(files, key, key_value, key_value)
             # bloom pruning after zone maps: on an unclustered table the
             # key's [min, max] spans the keyspace in every file, so the
             # bloom is the only metadata that can prove absence. O(bucket
             # files) footer+bloom reads, no data pages.
-            if self.key_col in (self.manifest.get("bloom_cols") or []):
-                entries, _ = self.bloom_prune_entries(
-                    entries, self.key_col, key_value
-                )
-        df = self._read_files(entries)
-        if df is None:
-            df = self._empty_df()
-        elif mor:
-            df = self._lww_resolve(df)
-        return (
-            df.filter(F.col(self.key_col) == key_value)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .drop(*SYSTEM_COLS)
-        )
+            if key in (self.manifest.get("bloom_cols") or []):
+                files, _ = self.bloom_prune_entries(files, key, key_value)
+            return files
+
+        df = self._scan({int(bucket)}, prune=prune)
+        return self._visible(df.filter(F.col(key) == key_value))
 
     # ------------------------------------------------------------- evolution
 
@@ -1791,24 +1771,12 @@ class LakeTable:
         names = [f.name for f in fields]
         new_sv = m["schema_version"] + 1
 
-        def chase(name: str) -> str:
-            # follow the rename history so a replayed op from before a later
-            # rename epoch checks against the column's CURRENT name — else a
-            # replay straddling a rename wedges ('cannot widen missing x')
-            # or re-adds a spurious column (review-caught)
-            for r in m["renames"]:
-                if r["old"] == name:
-                    name = r["new"]
-            return name
-
-        def chase_from(name: str, sv: int) -> str:
-            # version-aware chase: only renames AFTER sv apply — lets a
-            # history entry recorded under a since-reused name resolve to
-            # the column it actually described at the time
-            for r in m["renames"]:
-                if r["at_schema_version"] > sv and r["old"] == name:
-                    name = r["new"]
-            return name
+        # ops and history entries name columns as of their own epoch:
+        # chasing them to the CURRENT name keeps a replayed op from before a
+        # later rename epoch from wedging ('cannot widen missing x') or
+        # re-adding a spurious column (review-caught). The list is live:
+        # renames this call applies join it.
+        renames = m["renames"]
 
         widens = m.setdefault("widens", [])
         adds = m.setdefault("adds", [])
@@ -1846,7 +1814,8 @@ class LakeTable:
                     a["name"] == op.name
                     and a["type"] == want.simpleString()
                     and not any(
-                        d["name"] == chase_from(a["name"], a["at_schema_version"])
+                        d["name"]
+                        == _chase(renames, a["name"], a["at_schema_version"])
                         and d["at_schema_version"] > a["at_schema_version"]
                         for d in drops
                     )
@@ -1905,14 +1874,15 @@ class LakeTable:
                 )
                 changed = True
             elif isinstance(op, WidenColumn):
-                cur_name = chase(op.name)
+                cur_name = _chase(renames, op.name)
                 if cur_name not in names:
                     raise ValueError(f"cannot widen missing column {op.name}")
                 i = names.index(cur_name)
                 old_t = fields[i].dataType.simpleString()
                 new_t = T._parse_datatype_string(op.new_type)
                 replayed = any(
-                    chase(w["name"]) == cur_name and w["to"] == new_t.simpleString()
+                    _chase(renames, w["name"]) == cur_name
+                    and w["to"] == new_t.simpleString()
                     for w in widens
                 )
                 if old_t == new_t.simpleString() or replayed:
@@ -1937,7 +1907,7 @@ class LakeTable:
                 )
                 changed = True
             elif isinstance(op, AddStructField):
-                col = chase(op.column)
+                col = _chase(renames, op.column)
                 if col not in names:
                     raise ValueError(
                         f"cannot add field to missing column {op.column}"
@@ -1997,7 +1967,7 @@ class LakeTable:
                 )
                 changed = True
             elif isinstance(op, RenameStructField):
-                col = chase(op.column)
+                col = _chase(renames, op.column)
                 if col not in names:
                     raise ValueError(
                         f"cannot rename field in missing column {op.column}"
@@ -2056,7 +2026,7 @@ class LakeTable:
                 )
                 changed = True
             elif isinstance(op, DropColumn):
-                cur_name = chase(op.name)
+                cur_name = _chase(renames, op.name)
                 if cur_name not in names:
                     # replay iff the drop history records it; a drop of a
                     # column re-added by a LATER epoch cannot replay (the
@@ -2083,13 +2053,13 @@ class LakeTable:
                     kept = [
                         c
                         for c in m.get(key) or []
-                        if chase(c) != cur_name
+                        if _chase(renames, c) != cur_name
                     ]
                     if m.get(key) and kept != m[key]:
                         m[key] = kept
                 changed = True
             elif isinstance(op, WidenStructField):
-                col = chase(op.column)
+                col = _chase(renames, op.column)
                 if col not in names:
                     raise ValueError(
                         f"cannot widen field in missing column {op.column}"
@@ -2108,7 +2078,10 @@ class LakeTable:
 
                 def fchase(fname: str) -> str:
                     for r in srenames:
-                        if chase(r["column"]) == col and r["old"] == fname:
+                        if (
+                            _chase(renames, r["column"]) == col
+                            and r["old"] == fname
+                        ):
                             fname = r["new"]
                     return fname
 
@@ -2121,7 +2094,7 @@ class LakeTable:
                 new_t = T._parse_datatype_string(op.new_type)
                 swidens = m.setdefault("struct_widens", [])
                 replayed = any(
-                    chase(w["column"]) == col
+                    _chase(renames, w["column"]) == col
                     and fchase(w["name"]) == fname
                     and w["to"] == new_t.simpleString()
                     for w in swidens

@@ -31,6 +31,12 @@ def test_config_load_defaults_and_overrides(tmp_path):
         cfg.n_buckets = 1
 
 
+def test_config_load_refuses_a_missing_file(tmp_path):
+    """A mistyped ``--config`` path fails instead of running on defaults."""
+    with pytest.raises(FileNotFoundError):
+        EngineConfig.load(str(tmp_path / "typo.json"))
+
+
 def _loaded_table(spark, tmp_path, n_events=400, n_urls=60):
     pdf = synth.make_change_events(n_events, n_urls, seed=9)
     pipe = CdcPipeline(table_path=str(tmp_path / "t"), n_buckets=4)

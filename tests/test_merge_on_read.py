@@ -71,7 +71,7 @@ def test_mor_appends_not_rewrites(spark, stream_dir, tmp_path):
     pipe = _pipe(tmp_path, "append")
     pipe.run_stream(spark, d, str(tmp_path / "ck"), max_files_per_trigger=1)
     t = LakeTable.load(spark, pipe.table_path)
-    assert t.manifest["mor"] is True
+    assert t.is_merge_on_read
     # file count grows with batches (deltas accumulate until compaction)
     n_files = sum(len(fs) for fs in t.manifest["buckets"].values())
     assert n_files >= N_FILES  # at least one delta file per applied batch
@@ -84,7 +84,7 @@ def test_mor_compaction_folds_without_changing_state(spark, stream_dir, tmp_path
     before = _state(spark, pipe.table_path)
     t = LakeTable.load(spark, pipe.table_path)
     t.compact()
-    assert t.manifest["mor"] is False
+    assert not t.is_merge_on_read
     assert _state(spark, pipe.table_path) == before == _oracle(full)
     # folded: at most one file per non-empty bucket
     non_empty = [fs for fs in t.manifest["buckets"].values() if fs]
@@ -94,7 +94,7 @@ def test_mor_compaction_folds_without_changing_state(spark, stream_dir, tmp_path
     more["change_lsn"] += N_EVENTS
     lin = pipe.apply_batch(spark, spark.createDataFrame(more))
     assert not lin["skipped"]
-    assert LakeTable.load(spark, pipe.table_path).manifest["mor"] is True
+    assert LakeTable.load(spark, pipe.table_path).is_merge_on_read
 
 
 def test_cow_apply_resolves_the_mor_buckets_it_rewrites(
@@ -122,6 +122,57 @@ def test_cow_apply_resolves_the_mor_buckets_it_rewrites(
     assert t.mor_buckets == flagged - touched
     assert all(len(t.manifest["buckets"][str(b)]) == 1 for b in touched)
     assert _state(spark, path) == _oracle(full)
+
+
+def test_resolve_applies_only_to_mor_buckets(spark, stream_dir, tmp_path):
+    """``read_buckets(resolve=True)`` LWW-resolves exactly when a named
+    bucket is in ``mor_buckets``: over the resolved buckets of a table that
+    still holds merge-on-read ones it plans no aggregate and returns the
+    same rows as the table's resolved read."""
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def rows(df):
+        return sorted((r.asDict() for r in df.collect()), key=lambda r: r["url"])
+
+    d, _ = stream_dir
+    pipe = _pipe(tmp_path, "rule")
+    pipe.run_stream(spark, d, str(tmp_path / "ck"), max_files_per_trigger=1)
+    t = LakeTable.load(spark, pipe.table_path)
+    t.compact([b for b in sorted(t.mor_buckets) if b % 2 == 0])
+    resolved = sorted(
+        int(b)
+        for b, fs in t.manifest["buckets"].items()
+        if fs and int(b) not in t.mor_buckets
+    )
+    assert resolved and t.mor_buckets
+    got = t.read_buckets(resolved, resolve=True)
+    assert "Aggregate" not in plan(got)
+    assert "Aggregate" in plan(t.read_buckets(sorted(t.mor_buckets), resolve=True))
+    want = (
+        t.read(include_tombstones=True)
+        .where(t.bucket_expr().isin(resolved))
+        .select(*got.columns)
+    )
+    assert rows(got) == rows(want)
+
+
+def test_manifest_without_mor_buckets_is_refused(spark, tmp_path):
+    """A manifest carrying only the retired table-wide ``mor`` flag cannot
+    say which buckets need an LWW resolve: loading it fails loudly, naming
+    the table, instead of reading unresolved deltas as rows."""
+    path = str(tmp_path / "legacy")
+    _pipe(tmp_path, "legacy").apply_batch(
+        spark, spark.createDataFrame(synth.make_change_events(50, 10, seed=5))
+    )
+    t = LakeTable.load(spark, path)
+    legacy = {k: v for k, v in t.manifest.items() if k != "mor_buckets"}
+    legacy.update(version=t.version + 1, parent=t.version, mor=True)
+    t._write_manifest(legacy)
+    with pytest.raises(ValueError, match="legacy merge-on-read") as e:
+        LakeTable.load(spark, path)
+    assert path in str(e.value)
 
 
 def test_cow_and_mor_agree(spark, stream_dir, tmp_path):

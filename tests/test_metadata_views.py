@@ -79,6 +79,19 @@ def test_history_without_stats_has_null_rows(spark, tmp_path):
     assert all(r["stats_json"] is None for r in t.files().collect())
 
 
+def test_history_labels_rescale_and_purge(spark, tmp_path):
+    """Every rescale commit, the metadata-only cut-over included, is
+    ``rescale``, and a purge commit is ``purge``, not a plain ``commit``."""
+    pdf = synth.make_change_events(120, 30, seed=23)
+    p = CdcPipeline(table_path=str(tmp_path / "t"), n_buckets=2)
+    p.apply_batch(spark, spark.createDataFrame(pdf))
+    t = LakeTable.load(spark, p.table_path)
+    t.rescale(4)  # one parent-chunk commit, then the cut-over
+    t.purge_keys([t.read().first()["url"]])
+    ops = [r["operation"] for r in t.history().orderBy("version").collect()]
+    assert ops[-3:] == ["rescale", "rescale", "purge"]
+
+
 def test_history_labels_index_ingests_and_heals(spark, tmp_path):
     """Incremental index commits classify by their lineage keys: every
     family's ``*_ingest`` (a chunk-index ingest here) is ``dedup-ingest``

@@ -176,7 +176,7 @@ def test_mor_buckets_skip_pruning_but_stay_correct(spark, tmp_path):
     )
     buckets = [r["_bucket"] for r in d.select("_bucket").distinct().collect()]
     t.append_delta_buckets(d, buckets)
-    assert t.manifest.get("mor")
+    assert t.is_merge_on_read
     got = _sorted(t.read_range("v", 0, 100), "key")
     want = _sorted(t.read().filter(F.col("v").between(0, 100)), "key")
     assert got == want

@@ -15,11 +15,24 @@ DataFrame the apply hands to the table write: ``cdc_write_mor`` (merge-on-
 read delta append), ``cdc_write_cow_empty`` (copy-on-write into empty
 buckets, the first micro-batch) and ``cdc_write_cow`` (copy-on-write that
 re-resolves against the touched buckets' current rows, the second).
+
+The read-path names (``READ_PATHS``) need no test data either: the same
+stream lands as two merge-on-read batches in a 32-bucket table that records
+key blooms and ``url``/``_lsn`` zone maps, and the even buckets are then
+compacted into bounded ``_lsn``-sorted runs, so the table holds both MOR and
+resolved buckets. Captured: ``lookup`` of a key in a MOR bucket, of a key in
+a resolved bucket and of an absent key, ``read``, ``read_range`` over an
+``_lsn`` window, and ``read_buckets`` raw and resolved over MOR buckets.
+
+Every plan is masked so two runs of the same code compare equal: the
+scratch directory, ``tx-*`` directories, part-file ids, expression ids,
+RDD ids and plan ids are replaced by fixed tokens.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import tempfile
 
@@ -27,6 +40,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 CDC_WRITES = ("cdc_write_mor", "cdc_write_cow_empty", "cdc_write_cow")
+READ_PATHS = (
+    "read_lookup_mor",
+    "read_lookup_resolved",
+    "read_lookup_absent",
+    "read_all",
+    "read_range",
+    "read_buckets_raw",
+    "read_buckets_mor_resolved",
+)
 
 
 def _explain(spark, df) -> str:
@@ -35,6 +57,16 @@ def _explain(spark, df) -> str:
             "formatted"
         )
     )
+
+
+def _mask(plan: str, root: str) -> str:
+    """A plan with its run-specific names replaced by fixed tokens."""
+    plan = plan.replace(root, "<tmp>")
+    plan = re.sub(r"tx-\d+-[0-9a-f]{8}", "tx-*", plan)
+    plan = re.sub(r"part-\d+-[0-9a-f-]{36}", "part-*", plan)
+    plan = re.sub(r"#\d+", "#*", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[*]", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=*", plan)
 
 
 def capture_cdc_writes(spark) -> dict[str, str]:
@@ -72,7 +104,57 @@ def capture_cdc_writes(spark) -> dict[str, str]:
                     out["cdc_write_cow_empty"], out["cdc_write_cow"] = plans[:2]
         finally:
             LakeTable._table_write = write
-    return out
+        return {k: _mask(v, tmp) for k, v in out.items()}
+
+
+def capture_reads(spark) -> dict[str, str]:
+    """{read-path name: plan} on a table holding both merge-on-read and
+    resolved buckets."""
+    from pyspark.sql import functions as F
+
+    from migration_pair_spark import synth
+    from migration_pair_spark.cdc.runner import CdcPipeline
+    from migration_pair_spark.lakehouse.table import LakeTable
+
+    with tempfile.TemporaryDirectory() as tmp:
+        src = os.path.join(tmp, "events")
+        synth.write_debezium_stream(src, 4000, 800, 2, seed=7)
+        pipe = CdcPipeline(
+            table_path=os.path.join(tmp, "reads"),
+            n_buckets=32,
+            write_mode="mor",
+            source_format="debezium-json",
+            stats_cols=("url", "_lsn"),
+            bloom_filter_cols=("url",),
+        )
+        pipe.run_stream(spark, src, os.path.join(tmp, "ckpt-reads"))
+        t = LakeTable.load(spark, pipe.table_path)
+        t.compact(
+            [b for b in sorted(t.mor_buckets) if b % 2 == 0],
+            sort_by=["_lsn"],
+            max_rows_per_file=8,
+        )
+        mor = sorted(t.mor_buckets)
+        keyed = (
+            t.read().select("url", t.bucket_expr().alias("b")).orderBy("url")
+            .collect()
+        )
+        mor_key = next(r["url"] for r in keyed if r["b"] in mor)
+        resolved_key = next(r["url"] for r in keyed if r["b"] not in mor)
+        first, last = t.read(include_tombstones=True).agg(
+            F.min("_lsn"), F.max("_lsn")
+        ).first()
+        lo, hi = first + (last - first) * 2 // 5, first + (last - first) * 3 // 5
+        dfs = {
+            "read_lookup_mor": t.lookup(mor_key),
+            "read_lookup_resolved": t.lookup(resolved_key),
+            "read_lookup_absent": t.lookup("https://absent.example/none"),
+            "read_all": t.read(),
+            "read_range": t.read_range("_lsn", lo, hi),
+            "read_buckets_raw": t.read_buckets(list(range(t.n_buckets))),
+            "read_buckets_mor_resolved": t.read_buckets(mor[:4], resolve=True),
+        }
+        return {k: _mask(_explain(spark, df), tmp) for k, df in dfs.items()}
 
 
 def main() -> None:
@@ -80,7 +162,7 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     from bench import HEADLINE_QUERIES
 
-    names = sys.argv[3:] or [*HEADLINE_QUERIES, *CDC_WRITES]
+    names = sys.argv[3:] or [*HEADLINE_QUERIES, *CDC_WRITES, *READ_PATHS]
     os.makedirs(out_dir, exist_ok=True)
 
     from migration_pair_spark.queries import REGISTRY
@@ -91,11 +173,13 @@ def main() -> None:
     spark = get_spark(
         "capture-plans", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
-    cdc = capture_cdc_writes(spark) if set(names) & set(CDC_WRITES) else {}
+    captured = capture_cdc_writes(spark) if set(names) & set(CDC_WRITES) else {}
+    if set(names) & set(READ_PATHS):
+        captured.update(capture_reads(spark))
     for name in names:
         spark.sparkContext.setJobDescription(f"plan:{name}")
-        if name in cdc:
-            plan = cdc[name]
+        if name in captured:
+            plan = captured[name]
         else:
             try:
                 plan = _explain(spark, REGISTRY[name].fn(spark, sf_dir))
