@@ -45,6 +45,37 @@ def _parse_expectations(
     return out
 
 
+def _add_dedup_create_flags(sp: argparse.ArgumentParser) -> None:
+    """The IncrementalDeduper create-time flags dedup-ingest and
+    dedup-stream share (ignored once the index exists)."""
+    sp.add_argument("--threshold", type=float, default=0.5,
+                    help="jaccard threshold for rejection (create-time only)")
+    sp.add_argument("--max-bucket", type=int, default=1000,
+                    help="hot-bucket guard: LSH buckets above this size "
+                         "contribute only their exemplar to candidate "
+                         "generation (create-time only; 0 disables)")
+    sp.add_argument("--on-bridge", choices=["error", "greedy"],
+                    default="error",
+                    help="policy when a batch bridges two committed "
+                         "duplicate clusters (create-time only)")
+
+
+def _open_index(spark, cls, root: str, **create_kw):
+    """The incremental index ``cls`` at ``root``: loaded when its corpus
+    table exists, else created with the create-time ``create_kw``."""
+    from migration_pair_spark.lakehouse.table import LakeTable
+
+    if LakeTable.exists(os.path.join(root, "corpus")):
+        return cls(spark, root)
+    return cls.create(spark, root, **create_kw)
+
+
+def _pick(res: dict, keys: str) -> dict:
+    """The JSON-safe entries of an ingest result: those of ``keys``
+    (space-separated) that ``res`` holds."""
+    return {k: res[k] for k in keys.split() if k in res}
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="migration_pair_spark")
     p.add_argument("--config", help="JSON config file (EngineConfig keys)")
@@ -219,16 +250,7 @@ def main(argv: list[str] | None = None) -> int:
     di.add_argument("--batch-id", required=True,
                     help="idempotency key: re-running the same batch id "
                          "replays/heals instead of double-ingesting")
-    di.add_argument("--threshold", type=float, default=0.5,
-                    help="jaccard threshold for rejection (create-time only)")
-    di.add_argument("--max-bucket", type=int, default=1000,
-                    help="hot-bucket guard: LSH buckets above this size "
-                         "contribute only their exemplar to candidate "
-                         "generation (create-time only; 0 disables)")
-    di.add_argument("--on-bridge", choices=["error", "greedy"],
-                    default="error",
-                    help="policy when a batch bridges two committed "
-                         "duplicate clusters (create-time only)")
+    _add_dedup_create_flags(di)
     di.add_argument("--export-accepted", default=None,
                     help="optionally write the accepted corpus parquet here")
 
@@ -274,10 +296,7 @@ def main(argv: list[str] | None = None) -> int:
                          "— tailed with availableNow")
     ds.add_argument("--checkpoint", required=True)
     ds.add_argument("--max-files-per-trigger", type=int, default=1)
-    ds.add_argument("--threshold", type=float, default=0.5)
-    ds.add_argument("--max-bucket", type=int, default=1000)
-    ds.add_argument("--on-bridge", choices=["error", "greedy"],
-                    default="error")
+    _add_dedup_create_flags(ds)
 
     cu = sub.add_parser("curate")
     cu.add_argument("--docs", required=True, help="input documents parquet")
@@ -405,30 +424,19 @@ def main(argv: list[str] | None = None) -> int:
             "snapshot": version, "n_buckets": table.n_buckets,
         }))
     elif args.cmd == "dedup-ingest":
-        import os as _os
-
-        from migration_pair_spark.lakehouse.table import LakeTable
         from migration_pair_spark.operators.incremental import IncrementalDeduper
 
-        if LakeTable.exists(_os.path.join(args.root, "corpus")):
-            ded = IncrementalDeduper(spark, args.root)
-        else:
-            ded = IncrementalDeduper.create(
-                spark, args.root, threshold=args.threshold,
-                max_bucket=args.max_bucket or None,
-                on_bridge=args.on_bridge,
-            )
+        ded = _open_index(
+            spark, IncrementalDeduper, args.root, threshold=args.threshold,
+            max_bucket=args.max_bucket or None, on_bridge=args.on_bridge,
+        )
         docs = spark.read.parquet(args.docs).select("doc_id", "text")
         res = ded.ingest(docs, args.batch_id)
-        out = {
-            k: res.get(k)
-            for k in (
-                "replayed", "healed", "empty", "n_new", "n_accepted",
-                "n_rejected", "bridges", "probe_buckets", "corpus_version",
-                "index_version",
-            )
-            if k in res
-        }
+        out = _pick(
+            res,
+            "replayed healed empty n_new n_accepted n_rejected bridges "
+            "probe_buckets corpus_version index_version",
+        )
         if res.get("pairs") is not None:
             out["n_pairs"] = res["pairs"].count()
         if args.export_accepted:
@@ -436,25 +444,16 @@ def main(argv: list[str] | None = None) -> int:
             out["exported"] = args.export_accepted
         print(json.dumps(out))
     elif args.cmd == "chunk-ingest":
-        import os as _os
-
-        from migration_pair_spark.lakehouse.table import LakeTable
         from migration_pair_spark.operators.incremental import IncrementalChunkIndex
 
-        if LakeTable.exists(_os.path.join(args.root, "corpus")):
-            cix = IncrementalChunkIndex(spark, args.root)
-        else:
-            cix = IncrementalChunkIndex.create(spark, args.root, w=args.w)
+        cix = _open_index(spark, IncrementalChunkIndex, args.root, w=args.w)
         docs = spark.read.parquet(args.docs).select("doc_id", "text")
         res = cix.ingest(docs, args.batch_id)
-        out = {
-            k: res.get(k)
-            for k in (
-                "replayed", "healed", "empty", "n_new", "n_chunks",
-                "n_kept", "probe_buckets", "corpus_version", "index_version",
-            )
-            if k in res
-        }
+        out = _pick(
+            res,
+            "replayed healed empty n_new n_chunks n_kept probe_buckets "
+            "corpus_version index_version",
+        )
         if args.export_rewritten and res.get("rewritten") is not None:
             res["rewritten"].write.parquet(
                 args.export_rewritten, mode="errorifexists"
@@ -478,42 +477,26 @@ def main(argv: list[str] | None = None) -> int:
             "version": args.version or table.version,
         }))
     elif args.cmd == "dedup-sweep":
-        import os as _os
-
         from migration_pair_spark.lakehouse.table import LakeTable
         from migration_pair_spark.operators.cdc_dedup import sweep_into_chunk_index
         from migration_pair_spark.operators.incremental import IncrementalChunkIndex
 
         pages = LakeTable.load(spark, args.table_path)
-        if LakeTable.exists(_os.path.join(args.index_root, "corpus")):
-            cix = IncrementalChunkIndex(spark, args.index_root)
-        else:
-            cix = IncrementalChunkIndex.create(spark, args.index_root, w=args.w)
+        cix = _open_index(spark, IncrementalChunkIndex, args.index_root, w=args.w)
         res = sweep_into_chunk_index(pages, cix, text_col=args.text_col)
-        out = {
-            k: res.get(k)
-            for k in (
-                "replayed", "healed", "empty", "n_new", "n_chunks", "n_kept",
-                "sweep_from_lsn", "corpus_version", "index_version",
-            )
-            if k in res
-        }
-        print(json.dumps(out))
+        print(json.dumps(_pick(
+            res,
+            "replayed healed empty n_new n_chunks n_kept sweep_from_lsn "
+            "corpus_version index_version",
+        )))
     elif args.cmd == "dedup-stream":
-        import os as _os
-
-        from migration_pair_spark.lakehouse.table import LakeTable
         from migration_pair_spark.operators.incremental import IncrementalDeduper
         from migration_pair_spark.streaming.dedup_stream import run_dedup_stream
 
-        if LakeTable.exists(_os.path.join(args.root, "corpus")):
-            ded = IncrementalDeduper(spark, args.root)
-        else:
-            ded = IncrementalDeduper.create(
-                spark, args.root, threshold=args.threshold,
-                max_bucket=args.max_bucket or None,
-                on_bridge=args.on_bridge,
-            )
+        ded = _open_index(
+            spark, IncrementalDeduper, args.root, threshold=args.threshold,
+            max_bucket=args.max_bucket or None, on_bridge=args.on_bridge,
+        )
         results = run_dedup_stream(
             spark, ded, args.docs, args.checkpoint,
             max_files_per_trigger=args.max_files_per_trigger,

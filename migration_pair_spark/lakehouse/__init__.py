@@ -15,8 +15,11 @@ loop reaches it through.
   upsert batch rewrites (copy-on-write) or appends deltas to (merge-on-read)
   only the buckets its keys touch,
 - **schema evolution**: add / rename / widen / drop are manifest-only
-  commits; old data files are reconciled on read through a rename/cast
-  mapping.
+  commits. Add, rename and widen reach the fields of struct and
+  ``array<struct>`` columns by the same rules as top-level columns (drop
+  is top-level only); old data files are reconciled on read, each field
+  at any depth finding its write-time name through one backward walk of
+  its container's rename history, and widened types cast up.
 """
 
 from migration_pair_spark.lakehouse.interface import UpsertTarget

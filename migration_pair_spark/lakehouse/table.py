@@ -221,6 +221,22 @@ class WidenStructField:
     new_type: str
 
 
+# the widen promotion lattice: (from, to) type pairs every reader casts up
+_WIDEN_OK = frozenset(
+    {
+        ("int", "bigint"),
+        ("smallint", "int"),
+        ("smallint", "bigint"),
+        ("tinyint", "smallint"),
+        ("tinyint", "int"),
+        ("tinyint", "bigint"),
+        ("float", "double"),
+        ("int", "double"),
+        ("bigint", "double"),
+    }
+)
+
+
 def _phases(t_exec: float, t_commit: float) -> dict[str, int]:
     """One bucket write's wall split (``LakeTable.last_write_phases``)."""
     return {
@@ -243,6 +259,51 @@ def _chase(renames: list[dict], name: str, after: int = 0) -> str:
         if r["at_schema_version"] > after and r["old"] == name:
             name = r["new"]
     return name
+
+
+def _unchase(renames: list[dict], name: str, ver: int) -> str:
+    """A current name as spelled at schema version ``ver``: the rename
+    history walked BACKWARDS (a forward in-place walk collides when a later
+    rename reuses a dropped or renamed-away name)."""
+    for r in reversed(renames):
+        if r["at_schema_version"] > ver and r["new"] == name:
+            name = r["old"]
+    return name
+
+
+def _history(m: dict, kind: str, path: tuple[str, ...] = ()) -> list[dict]:
+    """One container's ``kind`` history (``adds``/``renames``/``widens``/
+    ``drops``). The table schema is the root struct (``path`` ``()``); a
+    struct column (or the element struct of an ``array<struct>`` column) is
+    the container ``(current column name,)``, whose history is the
+    ``struct_<kind>`` entries whose column, named as of the entry's own
+    epoch, chases to it. Ops address no deeper container."""
+    if not path:
+        return m.get(kind, [])
+    if len(path) > 1:
+        return []
+    return [
+        e
+        for e in m.get("struct_" + kind, [])
+        if _chase(m["renames"], e["column"], e["at_schema_version"] - 1) == path[0]
+    ]
+
+
+def _write_name(m: dict, path: tuple[str, ...], name: str, ver: int) -> str | None:
+    """The field now called ``name`` in container ``path`` as spelled in
+    files written at schema version ``ver``, or None when the field was
+    (re-)added after ``ver``: a same-named field in those files is a
+    retired incarnation (dropped, or renamed away), which must read as
+    NULL. Iceberg fences this with field ids; the add history and version
+    ordinals carry the same information."""
+    renames = _history(m, "renames", path)
+    if any(
+        a["at_schema_version"] > ver
+        and _chase(renames, a["name"], a["at_schema_version"]) == name
+        for a in _history(m, "adds", path)
+    ):
+        return None
+    return _unchase(renames, name, ver)
 
 
 class LakeTable:
@@ -616,120 +677,82 @@ class LakeTable:
             [], self._physical_schema(self.manifest["schema_version"])
         )
 
-    @staticmethod
-    def _conform(expr: F.Column, have: T.DataType, want: T.DataType) -> F.Column:
-        """Cast ``expr`` (of type ``have``) to ``want``, rebuilding structs
-        field-by-field: Spark's struct cast requires matching field counts,
-        but evolution ADDS fields — missing ones become nulls, extras drop,
-        nested structs recurse. The isNull guard matters: ``F.struct`` of
-        children from a NULL parent yields a non-null struct of nulls."""
+    def _conform(
+        self,
+        expr: F.Column,
+        have: T.DataType,
+        want: T.DataType,
+        ver: int,
+        path: tuple[str, ...],
+    ) -> F.Column:
+        """Cast ``expr`` (of type ``have``, written at schema version
+        ``ver``) to ``want``, rebuilding structs field-by-field: Spark's
+        struct cast requires matching field counts, but evolution ADDS
+        fields — missing ones become nulls, extras drop, nested structs
+        recurse (:meth:`_fields`, with ``path`` naming the container whose
+        history the struct's fields resolve through). The isNull guard
+        matters: ``F.struct`` of children from a NULL parent yields a
+        non-null struct of nulls."""
         if have == want:
             return expr
+        null = F.lit(None).cast(want)
         if isinstance(want, T.ArrayType):
-            # array-of-struct evolution: conform each element (transform is
-            # a Catalyst HOF — per-row JVM work, no Python stage)
+            # array-of-struct evolution: conform each element, whose fields
+            # live in the column's container (transform is a Catalyst HOF —
+            # per-row JVM work, no Python stage)
             if not isinstance(have, T.ArrayType):
-                return F.lit(None).cast(want)
-            return F.when(expr.isNull(), F.lit(None).cast(want)).otherwise(
+                return null
+            return F.when(expr.isNull(), null).otherwise(
                 F.transform(
                     expr,
-                    lambda x: LakeTable._conform(
-                        x, have.elementType, want.elementType
+                    lambda x: self._conform(
+                        x, have.elementType, want.elementType, ver, path
                     ),
                 )
             )
         if isinstance(want, T.StructType):
             if not isinstance(have, T.StructType):
-                return F.lit(None).cast(want)
-            have_map = {f.name: f.dataType for f in have.fields}
-            parts = []
-            for f in want.fields:
-                if f.name in have_map:
-                    parts.append(
-                        LakeTable._conform(
-                            expr.getField(f.name), have_map[f.name], f.dataType
-                        ).alias(f.name)
-                    )
-                else:
-                    parts.append(F.lit(None).cast(f.dataType).alias(f.name))
-            return F.when(expr.isNull(), F.lit(None).cast(want)).otherwise(
-                F.struct(*parts)
+                return null
+            return F.when(expr.isNull(), null).otherwise(
+                F.struct(*self._fields(expr.getField, have, want, ver, path))
             )
         return expr.cast(want)
 
-    def _reconcile(self, df: DataFrame, from_version: int) -> DataFrame:
-        """Map a DataFrame written at an older schema version onto the current
-        schema (Iceberg name-mapping lite): each CURRENT field resolves to
-        its physical write-time name by reverse-chasing the rename history
-        (never a forward in-place rename walk — a dropped column whose name
-        a later rename reuses would collide), struct-field renames rewrite
-        in place, missing columns/fields read as nulls, widened types cast
-        up."""
-        m = self.manifest
-        for r in m.get("struct_renames", []):
-            # the df still carries WRITE-TIME column names here: chase the
-            # struct rename's column spelling (recorded as of its own epoch,
-            # which a later top-level rename may move) to the CURRENT name,
-            # then resolve that back to the file version
-            col = self._name_at_version(
-                self._current_name(r["column"]), from_version
-            )
-            if r["at_schema_version"] <= from_version or col not in df.columns:
-                continue
-            have = df.schema[col].dataType
-            if isinstance(have, T.StructType) and r["old"] in have.fieldNames():
-                df = df.withColumn(
-                    col,
-                    F.col(col)
-                    .withField(r["new"], F.col(col).getField(r["old"]))
-                    .dropFields(r["old"]),
-                )
-            elif (
-                isinstance(have, T.ArrayType)
-                and isinstance(have.elementType, T.StructType)
-                and r["old"] in have.elementType.fieldNames()
-            ):
-                # array-of-struct: rename inside each element via transform
-                # (the lambda must be unary — transform treats a second
-                # parameter as the element index; it is invoked eagerly, so
-                # capturing the loop bindings here is safe)
-                old_f, new_f = r["old"], r["new"]
-                df = df.withColumn(
-                    col,
-                    F.transform(
-                        F.col(col),
-                        lambda x: x.withField(
-                            new_f, x.getField(old_f)
-                        ).dropFields(old_f),
-                    ),
-                )
-        cur = self.schema
-        # incarnation fence (drop + re-add): a column (re-)added at schema
-        # version A must read as NULL from files written BEFORE A even when
-        # they physically carry a same-named column — that column is a
-        # dropped earlier incarnation (Iceberg fences this with field ids;
-        # the add history + version ordinals carry the same information).
-        # Normal adds are unaffected: pre-add files lack the column anyway.
-        born: dict[str, int] = {}
-        for a in m.get("adds", []):
-            name = _chase(m["renames"], a["name"], a["at_schema_version"])
-            born[name] = max(born.get(name, 0), a["at_schema_version"])
-        cols = []
-        for field in cur.fields:
-            phys = self._name_at_version(field.name, from_version)
-            if phys in df.columns and from_version >= born.get(field.name, 0):
-                cols.append(
+    def _fields(
+        self,
+        get,
+        have: T.StructType,
+        want: T.StructType,
+        ver: int,
+        path: tuple[str, ...] = (),
+    ) -> list[F.Column]:
+        """``want``'s fields read from a struct of type ``have`` written at
+        schema version ``ver`` (``get`` fetches one by name): each field of
+        container ``path`` finds its write-time name through the
+        container's history (:func:`_write_name`), at any depth, and reads
+        as NULL when that struct lacks it or holds a retired incarnation."""
+        have_types = {f.name: f.dataType for f in have.fields}
+        out = []
+        for f in want.fields:
+            phys = _write_name(self.manifest, path, f.name, ver)
+            if phys in have_types:
+                out.append(
                     self._conform(
-                        F.col(phys),
-                        df.schema[phys].dataType,
-                        field.dataType,
-                    ).alias(field.name)
+                        get(phys), have_types[phys], f.dataType, ver, (*path, f.name)
+                    ).alias(f.name)
                 )
             else:
-                cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-        for sc in SYSTEM_COLS:
-            cols.append(F.col(sc))
-        return df.select(*cols)
+                out.append(F.lit(None).cast(f.dataType).alias(f.name))
+        return out
+
+    def _reconcile(self, df: DataFrame, from_version: int) -> DataFrame:
+        """Map a DataFrame written at an older schema version onto the
+        current schema (Iceberg name-mapping lite): the table schema is the
+        root struct, so its columns and their struct fields resolve by one
+        rule (:meth:`_fields`); renamed fields read their write-time names,
+        added ones read as nulls, widened types cast up."""
+        cols = self._fields(F.col, df.schema, self.schema, from_version)
+        return df.select(*cols, *(F.col(sc) for sc in SYSTEM_COLS))
 
     def _read_files(self, entries: list[dict]) -> DataFrame | None:
         """Read a set of manifest file entries, reconciling schema versions."""
@@ -954,11 +977,7 @@ class LakeTable:
         """A CURRENT column name as it was spelled at schema version
         ``ver`` (walks the rename history backwards; zone-map stats are
         recorded under write-time names)."""
-        name = current
-        for r in reversed(self.manifest["renames"]):
-            if r["at_schema_version"] > ver and r["new"] == name:
-                name = r["old"]
-        return name
+        return _unchase(self.manifest["renames"], current, ver)
 
     def prune_entries(
         self, entries: list[dict], col: str, lo=None, hi=None
@@ -1751,388 +1770,167 @@ class LakeTable:
         self,
         ops: "list[AddColumn | RenameColumn | WidenColumn | DropColumn | AddStructField | RenameStructField | WidenStructField]",
     ) -> int:
-        """Apply add/rename/widen/drop (top-level) and add/rename/widen
-        (struct fields) as a metadata-only commit (no data rewrite);
-        old files are reconciled on read. Incompatible ops hard-fail —
-        reference analog: the schema-compliance gate
-        /root/reference/Tasks/EndToEnd.cs:51-85, turned from a rejector into
-        an evolver (SURVEY.md §1, O3).
+        """Apply schema-evolution ops as one metadata-only commit (no data
+        rewrite); old files are reconciled on read. Reference analog: the
+        reference's schema-compliance gate (``Tasks/EndToEnd.cs``), turned
+        from a rejector into an evolver (SURVEY.md §1, O3).
 
-        IDEMPOTENT per op: an op whose effect is already present (column
-        exists with the same type / rename already applied / already widened)
-        is a no-op. Evolution commits its own manifest BEFORE the epoch's
-        data commit advances EPOCH_PROP; a crash in that window replays the
-        same epoch ops, which must re-apply cleanly instead of wedging every
-        retry with 'column already exists'. Returns the current version
-        unchanged when all ops were no-ops."""
+        The table schema is the root struct. Each op resolves to a
+        container — the root for column ops; for struct-field ops the
+        struct of the named column, or the element struct of an
+        ``array<struct>`` column — with its own add/rename/widen history,
+        and each verb has ONE rule at every depth:
+
+        - add: a no-op when the add history records it (a replay) or the
+          field exists with the wanted type or a valid widening of it; any
+          other existing type hard-fails;
+        - rename: a no-op when the rename history records it or its effect
+          is present; a target naming another field hard-fails;
+        - widen: along the promotion lattice only; a no-op at the target
+          type or when the widen history records the step;
+        - drop: top-level columns only; merge key / LWW order columns
+          refuse.
+
+        IDEMPOTENT per op: evolution commits its own manifest BEFORE the
+        epoch's data commit advances EPOCH_PROP; a crash in that window
+        replays the same epoch's ops, which must re-apply cleanly instead
+        of wedging every retry with 'already exists'. Ops and history
+        entries name columns and fields as of their own epoch, and are
+        matched after both are chased to current names. Returns the current
+        version unchanged when every op was a no-op."""
         m = self._next_manifest()
-        cur = _schema_from_json(json.dumps(m["schemas"][str(m["schema_version"])]))
-        fields = list(cur.fields)
-        names = [f.name for f in fields]
-        new_sv = m["schema_version"] + 1
-
-        # ops and history entries name columns as of their own epoch:
-        # chasing them to the CURRENT name keeps a replayed op from before a
-        # later rename epoch from wedging ('cannot widen missing x') or
-        # re-adding a spurious column (review-caught). The list is live:
-        # renames this call applies join it.
+        sv = m["schema_version"]
+        fields = list(_schema_from_json(json.dumps(m["schemas"][str(sv)])).fields)
+        new_sv = sv + 1
+        # the list is live: renames this call applies join it
         renames = m["renames"]
-
-        widens = m.setdefault("widens", [])
-        adds = m.setdefault("adds", [])
-        drops = m.setdefault("drops", [])
-        widen_ok = {
-            ("int", "bigint"),
-            ("smallint", "int"),
-            ("smallint", "bigint"),
-            ("tinyint", "smallint"),
-            ("tinyint", "int"),
-            ("tinyint", "bigint"),
-            ("float", "double"),
-            ("int", "double"),
-            ("bigint", "double"),
-        }
         changed = False
         for op in ops:
-            if isinstance(op, AddColumn):
+            col = getattr(op, "column", None)
+            if col is None:
+                path, box, kind, where = (), fields, "column", ""
+            else:
+                col = _chase(renames, col)
+                i = next((k for k, f in enumerate(fields) if f.name == col), None)
+                if i is None:
+                    raise ValueError(
+                        f"cannot evolve fields of missing column {op.column}"
+                    )
+                dt = fields[i].dataType
+                is_array = isinstance(dt, T.ArrayType)
+                st = dt.elementType if is_array else dt
+                if not isinstance(st, T.StructType):
+                    raise ValueError(
+                        f"cannot evolve fields of non-struct column {col} "
+                        f"({dt.simpleString()})"
+                    )
+                path, box, kind, where = (col,), list(st.fields), "field", f"{col}."
+            names = [f.name for f in box]
+            crenames = _history(m, "renames", path)
+            if isinstance(op, (AddColumn, AddStructField)):
                 want = T._parse_datatype_string(op.type)
-                # the ADD HISTORY distinguishes a replay (this exact add was
-                # applied before — possibly renamed/widened since) from a
-                # genuine re-add of a retired name (review-caught: a pure
-                # name-chase skipped legitimate re-adds; a pure name check
-                # wedged replays that straddle a rename epoch).
-                # DOCUMENTED LIMITATION: re-adding a name that was itself
-                # ADDED by evolution and later renamed away matches its own
-                # history entry and no-ops — by state alone that case is
-                # indistinguishable from a crash-replay of the original
-                # epoch, and wedging every replay is the worse failure.
-                # Re-adds with a different type still hard-fail below.
-                # An add entry is SUPERSEDED (no longer evidence of a
-                # replay) once a later DROP retired that incarnation — a
-                # genuine re-add after a drop must apply, not no-op.
+                ws = want.simpleString()
+                # an add entry no longer marks a replay once a later DROP
+                # retired that incarnation. DOCUMENTED LIMITATION: re-adding
+                # a name that evolution added and a later rename retired
+                # matches its own entry and no-ops — by state alone that is
+                # a crash-replay, and wedging every replay is the worse
+                # failure
                 if any(
                     a["name"] == op.name
-                    and a["type"] == want.simpleString()
+                    and a["type"] == ws
                     and not any(
                         d["name"]
-                        == _chase(renames, a["name"], a["at_schema_version"])
+                        == _chase(crenames, a["name"], a["at_schema_version"])
                         and d["at_schema_version"] > a["at_schema_version"]
-                        for d in drops
+                        for d in _history(m, "drops", path)
                     )
-                    for a in adds
+                    for a in _history(m, "adds", path)
                 ):
                     continue
                 if op.name in names:
-                    have = fields[names.index(op.name)].dataType
-                    # already applied if present with the wanted type OR a
-                    # valid widening of it (pre-history manifests)
-                    if have == want or (
-                        want.simpleString(),
-                        have.simpleString(),
-                    ) in widen_ok:
-                        continue
-                    raise ValueError(
-                        f"column {op.name} already exists with type "
-                        f"{have.simpleString()} (wanted {want.simpleString()})"
-                    )
-                fields.append(T.StructField(op.name, want, True))
-                names.append(op.name)
-                adds.append(
-                    {
-                        "name": op.name,
-                        "type": want.simpleString(),
-                        "at_schema_version": new_sv,
-                    }
-                )
-                changed = True
-            elif isinstance(op, RenameColumn):
-                # Replay detection uses the manifest's RENAME HISTORY, which
-                # distinguishes the two both-names-exist cases exactly: a
-                # replayed rename (old re-added by a later epoch) is in the
-                # history and must no-op; a GENUINE rename whose target name
-                # collides with a different existing column is not, and must
-                # hard-fail instead of silently stranding the old column
-                # (both review-caught, round 2).
-                replayed = any(
-                    r["old"] == op.old and r["new"] == op.new
-                    for r in m["renames"]
-                )
-                if replayed or (op.new in names and op.old not in names):
-                    continue  # already applied (history, or effect present)
-                if op.new in names:
-                    raise ValueError(
-                        f"cannot rename {op.old} -> {op.new}: target column "
-                        f"already exists"
-                    )
-                if op.old not in names:
-                    raise ValueError(f"cannot rename missing column {op.old}")
-                i = names.index(op.old)
-                fields[i] = T.StructField(op.new, fields[i].dataType, fields[i].nullable)
-                names[i] = op.new
-                m["renames"].append(
-                    {"old": op.old, "new": op.new, "at_schema_version": new_sv}
-                )
-                changed = True
-            elif isinstance(op, WidenColumn):
-                cur_name = _chase(renames, op.name)
-                if cur_name not in names:
-                    raise ValueError(f"cannot widen missing column {op.name}")
-                i = names.index(cur_name)
-                old_t = fields[i].dataType.simpleString()
-                new_t = T._parse_datatype_string(op.new_type)
-                replayed = any(
-                    _chase(renames, w["name"]) == cur_name
-                    and w["to"] == new_t.simpleString()
-                    for w in widens
-                )
-                if old_t == new_t.simpleString() or replayed:
-                    # replayed op — already at the target type, or the WIDEN
-                    # HISTORY records this exact step (a later epoch may have
-                    # widened further; history is what distinguishes a replay
-                    # from a genuinely incompatible narrowing request, which
-                    # must hard-fail — review-caught x2, round 2)
-                    continue
-                if (old_t, new_t.simpleString()) not in widen_ok:
-                    raise ValueError(
-                        f"incompatible widen {op.name}: {old_t} -> {new_t.simpleString()}"
-                    )
-                fields[i] = T.StructField(cur_name, new_t, True)
-                widens.append(
-                    {
-                        "name": cur_name,
-                        "from": old_t,
-                        "to": new_t.simpleString(),
-                        "at_schema_version": new_sv,
-                    }
-                )
-                changed = True
-            elif isinstance(op, AddStructField):
-                col = _chase(renames, op.column)
-                if col not in names:
-                    raise ValueError(
-                        f"cannot add field to missing column {op.column}"
-                    )
-                i = names.index(col)
-                dt = fields[i].dataType
-                # the op targets the element struct when the column is an
-                # array<struct<...>> (per-region/per-frame multimodal
-                # metadata — VERDICT r4 item #5)
-                is_array = isinstance(dt, T.ArrayType) and isinstance(
-                    dt.elementType, T.StructType
-                )
-                target = dt.elementType if is_array else dt
-                if not isinstance(target, T.StructType):
-                    raise ValueError(
-                        f"cannot add field to non-struct column {col} "
-                        f"({dt.simpleString()})"
-                    )
-                want = T._parse_datatype_string(op.type)
-                sadds = m.setdefault("struct_adds", [])
-                # replay detection mirrors top-level adds, including the
-                # documented limitation there: a same-type re-add of a field
-                # that evolution added and a later rename retired is
-                # state-indistinguishable from a crash-replay and no-ops
-                if any(
-                    a["column"] == col
-                    and a["name"] == op.name
-                    and a["type"] == want.simpleString()
-                    for a in sadds
-                ):
-                    continue
-                if op.name in target.fieldNames():
-                    have = target[op.name].dataType
-                    if have == want:
+                    have = box[names.index(op.name)].dataType
+                    if have == want or (ws, have.simpleString()) in _WIDEN_OK:
                         continue  # effect present (pre-history manifests)
                     raise ValueError(
-                        f"field {col}.{op.name} already exists with type "
-                        f"{have.simpleString()} (wanted {want.simpleString()})"
+                        f"{kind} {where}{op.name} already exists with type "
+                        f"{have.simpleString()} (wanted {ws})"
                     )
-                new_struct = T.StructType(
-                    list(target.fields) + [T.StructField(op.name, want, True)]
-                )
-                fields[i] = T.StructField(
-                    col,
-                    T.ArrayType(new_struct, dt.containsNull)
-                    if is_array
-                    else new_struct,
-                    fields[i].nullable,
-                )
-                sadds.append(
-                    {
-                        "column": col,
-                        "name": op.name,
-                        "type": want.simpleString(),
-                        "at_schema_version": new_sv,
-                    }
-                )
-                changed = True
-            elif isinstance(op, RenameStructField):
-                col = _chase(renames, op.column)
-                if col not in names:
+                box.append(T.StructField(op.name, want, True))
+                key, entry = "adds", {"name": op.name, "type": ws}
+            elif isinstance(op, (RenameColumn, RenameStructField)):
+                # the history tells a replay (old re-added by a later epoch)
+                # from a genuine rename onto another existing field, which
+                # must hard-fail rather than strand the old one
+                if any(
+                    r["old"] == op.old and r["new"] == op.new for r in crenames
+                ) or (op.new in names and op.old not in names):
+                    continue
+                if op.new in names:
                     raise ValueError(
-                        f"cannot rename field in missing column {op.column}"
+                        f"cannot rename {where}{op.old} -> {op.new}: target "
+                        f"{kind} already exists"
                     )
-                i = names.index(col)
-                dt = fields[i].dataType
-                is_array = isinstance(dt, T.ArrayType) and isinstance(
-                    dt.elementType, T.StructType
-                )
-                target = dt.elementType if is_array else dt
-                if not isinstance(target, T.StructType):
+                if op.old not in names:
+                    raise ValueError(f"cannot rename missing {kind} {where}{op.old}")
+                j = names.index(op.old)
+                box[j] = T.StructField(op.new, box[j].dataType, box[j].nullable)
+                key, entry = "renames", {"old": op.old, "new": op.new}
+            elif isinstance(op, (WidenColumn, WidenStructField)):
+                name = _chase(crenames, op.name)
+                if name not in names:
+                    raise ValueError(f"cannot widen missing {kind} {where}{op.name}")
+                j = names.index(name)
+                old_t = box[j].dataType.simpleString()
+                new_t = T._parse_datatype_string(op.new_type)
+                nt = new_t.simpleString()
+                # the history tells a replay (a later epoch may have widened
+                # further) from a genuinely incompatible narrowing request
+                if old_t == nt or any(
+                    _chase(crenames, w["name"]) == name and w["to"] == nt
+                    for w in _history(m, "widens", path)
+                ):
+                    continue
+                if (old_t, nt) not in _WIDEN_OK:
                     raise ValueError(
-                        f"cannot rename field in non-struct column {col}"
+                        f"incompatible widen {where}{op.name}: {old_t} -> {nt}"
                     )
-                srenames = m.setdefault("struct_renames", [])
-                replayed = any(
-                    r["column"] == col and r["old"] == op.old and r["new"] == op.new
-                    for r in srenames
-                )
-                fnames = target.fieldNames()
-                if replayed or (op.new in fnames and op.old not in fnames):
-                    continue  # already applied (history, or effect present)
-                if op.new in fnames:
-                    raise ValueError(
-                        f"cannot rename {col}.{op.old} -> {op.new}: target "
-                        f"field already exists"
-                    )
-                if op.old not in fnames:
-                    raise ValueError(
-                        f"cannot rename missing field {col}.{op.old}"
-                    )
-                renamed = T.StructType(
-                    [
-                        T.StructField(
-                            op.new if f.name == op.old else f.name,
-                            f.dataType,
-                            f.nullable,
-                        )
-                        for f in target.fields
-                    ]
-                )
-                fields[i] = T.StructField(
-                    col,
-                    T.ArrayType(renamed, dt.containsNull)
-                    if is_array
-                    else renamed,
-                    fields[i].nullable,
-                )
-                srenames.append(
-                    {
-                        "column": col,
-                        "old": op.old,
-                        "new": op.new,
-                        "at_schema_version": new_sv,
-                    }
-                )
-                changed = True
+                box[j] = T.StructField(name, new_t, True)
+                key, entry = "widens", {"name": name, "from": old_t, "to": nt}
             elif isinstance(op, DropColumn):
-                cur_name = _chase(renames, op.name)
-                if cur_name not in names:
-                    # replay iff the drop history records it; a drop of a
-                    # column re-added by a LATER epoch cannot replay (the
-                    # later epoch proves this one's EPOCH_PROP advanced),
-                    # so name-absent + history-present is exactly a replay
-                    if any(d["name"] == cur_name for d in drops):
+                name = _chase(renames, op.name)
+                if name not in names:
+                    # replay iff the drop history records it: a drop of a
+                    # column re-added by a LATER epoch cannot replay (that
+                    # epoch proves this one's EPOCH_PROP advanced)
+                    if any(d["name"] == name for d in m.get("drops", [])):
                         continue
                     raise ValueError(f"cannot drop missing column {op.name}")
-                protected = {m["key_col"], *m.get("lww_order", [])}
-                if cur_name in protected:
+                if name in {m["key_col"], *m.get("lww_order", [])}:
                     raise ValueError(
-                        f"cannot drop {cur_name}: merge key / LWW order "
+                        f"cannot drop {name}: merge key / LWW order "
                         f"columns are structural"
                     )
-                i = names.index(cur_name)
-                del fields[i]
-                del names[i]
-                drops.append(
-                    {"name": cur_name, "at_schema_version": new_sv}
-                )
-                # scrub zone-map / bloom declarations that chased to the
-                # dropped name — future commits must not look for it
-                for key in ("stats_cols", "bloom_cols"):
-                    kept = [
-                        c
-                        for c in m.get(key) or []
-                        if _chase(renames, c) != cur_name
-                    ]
-                    if m.get(key) and kept != m[key]:
-                        m[key] = kept
-                changed = True
-            elif isinstance(op, WidenStructField):
-                col = _chase(renames, op.column)
-                if col not in names:
-                    raise ValueError(
-                        f"cannot widen field in missing column {op.column}"
-                    )
-                i = names.index(col)
-                dt = fields[i].dataType
-                is_array = isinstance(dt, T.ArrayType) and isinstance(
-                    dt.elementType, T.StructType
-                )
-                target = dt.elementType if is_array else dt
-                if not isinstance(target, T.StructType):
-                    raise ValueError(
-                        f"cannot widen field in non-struct column {col}"
-                    )
-                srenames = m.get("struct_renames", [])
-
-                def fchase(fname: str) -> str:
-                    for r in srenames:
-                        if (
-                            _chase(renames, r["column"]) == col
-                            and r["old"] == fname
-                        ):
-                            fname = r["new"]
-                    return fname
-
-                fname = fchase(op.name)
-                if fname not in target.fieldNames():
-                    raise ValueError(
-                        f"cannot widen missing field {col}.{op.name}"
-                    )
-                old_t = target[fname].dataType.simpleString()
-                new_t = T._parse_datatype_string(op.new_type)
-                swidens = m.setdefault("struct_widens", [])
-                replayed = any(
-                    _chase(renames, w["column"]) == col
-                    and fchase(w["name"]) == fname
-                    and w["to"] == new_t.simpleString()
-                    for w in swidens
-                )
-                if old_t == new_t.simpleString() or replayed:
-                    continue  # replay, or already at the target type
-                if (old_t, new_t.simpleString()) not in widen_ok:
-                    raise ValueError(
-                        f"incompatible widen {col}.{op.name}: "
-                        f"{old_t} -> {new_t.simpleString()}"
-                    )
-                widened = T.StructType(
-                    [
-                        T.StructField(f.name, new_t, True)
-                        if f.name == fname
-                        else f
-                        for f in target.fields
-                    ]
-                )
-                fields[i] = T.StructField(
-                    col,
-                    T.ArrayType(widened, dt.containsNull)
-                    if is_array
-                    else widened,
-                    fields[i].nullable,
-                )
-                swidens.append(
-                    {
-                        "column": col,
-                        "name": fname,
-                        "from": old_t,
-                        "to": new_t.simpleString(),
-                        "at_schema_version": new_sv,
-                    }
-                )
-                changed = True
+                del box[names.index(name)]
+                # future commits must not look for the dropped column's
+                # zone maps / blooms
+                for k in ("stats_cols", "bloom_cols"):
+                    kept = [c for c in m.get(k) or [] if _chase(renames, c) != name]
+                    if m.get(k) and kept != m[k]:
+                        m[k] = kept
+                key, entry = "drops", {"name": name}
             else:  # pragma: no cover
                 raise TypeError(f"unknown evolution op {op!r}")
+            if path:
+                st = T.StructType(box)
+                fields[i] = T.StructField(
+                    col,
+                    T.ArrayType(st, dt.containsNull) if is_array else st,
+                    fields[i].nullable,
+                )
+                key, entry = "struct_" + key, {"column": col, **entry}
+            m.setdefault(key, []).append({**entry, "at_schema_version": new_sv})
+            changed = True
         if not changed:
             return self.version  # full replay — nothing to commit
         m["schema_version"] = new_sv

@@ -251,13 +251,26 @@ def test_nested_add_and_rename_reconcile_old_files(spark, tmp_path):
     assert rows["a"]["height"] is None
     assert rows["c"] == Row(width=9, video_codec="av1", height=5)
     assert rows["n"] is None  # null struct preserved through the rebuild
+    # re-adding the renamed-away name is a new field: files written before
+    # the rename keep their 'codec' under video_codec and read the new one
+    # as NULL
+    t.evolve_schema([AddStructField("meta", "codec", "string")])
+    rows = {r["url"]: r["meta"] for r in t.read().collect()}
+    assert rows["a"]["codec"] is None and rows["a"]["video_codec"] == "vp9"
+    assert rows["c"]["codec"] is None and rows["c"]["video_codec"] == "av1"
+    assert rows["n"] is None
 
 
 def test_nested_evolution_replay_straddling_restart(spark, tmp_path):
     """The crash-replay contract extends to nested ops: re-applying the same
     epoch's struct ops (including a replay that straddles the rename) must
     no-op; genuine conflicts still hard-fail."""
-    from migration_pair_spark.lakehouse.table import AddStructField, RenameStructField
+    from migration_pair_spark.lakehouse.table import (
+        AddStructField,
+        RenameColumn,
+        RenameStructField,
+        WidenStructField,
+    )
 
     t = _nested_table(spark, str(tmp_path / "t"))
     ops = [
@@ -281,6 +294,14 @@ def test_nested_evolution_replay_straddling_restart(spark, tmp_path):
         t.evolve_schema([RenameStructField("meta", "nope", "x")])
     with pytest.raises(ValueError, match="non-struct"):
         t.evolve_schema([AddStructField("url", "x", "int")])
+    # a replay straddling a later COLUMN rename and field widen no-ops: the
+    # add history's column chases to the current name, as top-level adds do
+    t.evolve_schema([RenameColumn("meta", "media_meta")])
+    v = t.evolve_schema([WidenStructField("media_meta", "height", "bigint")])
+    assert t.evolve_schema([AddStructField("meta", "height", "int")]) == v
+    # the top-level add rule holds for fields: an existing field whose type
+    # is a valid widening of the wanted one is an applied add
+    assert t.evolve_schema([AddStructField("media_meta", "width", "smallint")]) == v
 
 
 def test_nested_rename_chases_toplevel_rename(spark, tmp_path):
@@ -381,6 +402,14 @@ def test_array_of_struct_add_and_rename_reconcile_old_files(spark, tmp_path):
     assert all(e["score"] is None for e in rows["a"])
     assert rows["c"] == [Row(x=9, category="bird", score=0.5)]
     assert rows["n"] is None  # null array preserved through the transform
+    # re-adding the renamed-away name is a new element field: elements
+    # written before the rename keep their 'label' under category and read
+    # the new one as NULL
+    t.evolve_schema([AddStructField("regions", "label", "string")])
+    rows = {r["url"]: r["regions"] for r in t.read().collect()}
+    assert [(e["label"], e["category"]) for e in rows["a"]] == [(None, "dog")] * 2
+    assert [(e["label"], e["category"]) for e in rows["c"]] == [(None, "bird")]
+    assert rows["n"] is None
 
 
 def test_array_of_struct_evolution_replay_straddling_restart(spark, tmp_path):
@@ -388,7 +417,12 @@ def test_array_of_struct_evolution_replay_straddling_restart(spark, tmp_path):
     case: replays (including straddling the rename) no-op; genuine
     conflicts hard-fail; and the history replays cleanly on a RELOADED
     table (restart)."""
-    from migration_pair_spark.lakehouse.table import AddStructField, RenameStructField
+    from migration_pair_spark.lakehouse.table import (
+        AddStructField,
+        RenameColumn,
+        RenameStructField,
+        WidenStructField,
+    )
 
     path = str(tmp_path / "t")
     t = _regions_table(spark, path)
@@ -426,6 +460,12 @@ def test_array_of_struct_evolution_replay_straddling_restart(spark, tmp_path):
     rows = {r["url"]: r["regions"] for r in t2.read().collect()}
     assert [e["category"] for e in rows["a"]] == ["cat", "cat"]
     assert all(e["score"] is None for e in rows["a"])
+    # a replay straddling a later column rename and element-field widen
+    # no-ops, as in a plain struct
+    t2.evolve_schema([AddStructField("regions", "rank", "int")])
+    t2.evolve_schema([RenameColumn("regions", "boxes")])
+    v = t2.evolve_schema([WidenStructField("boxes", "rank", "bigint")])
+    assert t2.evolve_schema([AddStructField("regions", "rank", "int")]) == v
 
 
 # ------------------------------------------------------- drop / struct widen

@@ -23,6 +23,9 @@ compacted into bounded ``_lsn``-sorted runs, so the table holds both MOR and
 resolved buckets. Captured: ``lookup`` of a key in a MOR bucket, of a key in
 a resolved bucket and of an absent key, ``read``, ``read_range`` over an
 ``_lsn`` window, and ``read_buckets`` raw and resolved over MOR buckets.
+``read_evolved`` is ``read`` of a small table (``evolved_table``) holding
+files written before and after a column rename and widen, a struct-field
+add/rename/widen and an ``array<struct>`` element rename.
 
 Every plan is masked so two runs of the same code compare equal: the
 scratch directory, ``tx-*`` directories, part-file ids, expression ids,
@@ -48,6 +51,7 @@ READ_PATHS = (
     "read_range",
     "read_buckets_raw",
     "read_buckets_mor_resolved",
+    "read_evolved",
 )
 
 
@@ -107,6 +111,63 @@ def capture_cdc_writes(spark) -> dict[str, str]:
         return {k: _mask(v, tmp) for k, v in out.items()}
 
 
+def evolved_table(spark, path: str):
+    """A 4-bucket table with files written at each of four schema versions: a
+    column rename + widen, then a struct-field add/rename/widen, then an
+    ``array<struct>`` element rename."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from migration_pair_spark.lakehouse.table import (
+        AddStructField,
+        LakeTable,
+        RenameColumn,
+        RenameStructField,
+        WidenColumn,
+        WidenStructField,
+    )
+
+    t = LakeTable.create(
+        spark,
+        path,
+        T._parse_datatype_string(
+            "url string, lang string, status int, "
+            "meta struct<width:int, codec:string>, "
+            "regions array<struct<x:int, label:string>>"
+        ),
+        key_col="url",
+        n_buckets=4,
+        lww_order=("_lsn",),
+    )
+    epochs = [
+        [RenameColumn("lang", "language"), WidenColumn("status", "bigint")],
+        [
+            AddStructField("meta", "height", "int"),
+            RenameStructField("meta", "codec", "video_codec"),
+            WidenStructField("meta", "width", "bigint"),
+        ],
+        [RenameStructField("regions", "label", "category")],
+    ]
+    for v in range(len(epochs) + 1):
+        if v:
+            t.evolve_schema(epochs[v - 1])
+        width = len(t.schema["meta"].dataType.fields)
+        df = spark.createDataFrame(
+            [
+                (f"u{v}-{i}", f"l{i}", i, (i, f"c{i}", i)[:width],
+                 [(i, f"r{i}"), (i + 1, None)])
+                for i in range(4)
+            ],
+            t.schema,
+        )
+        t.append_buckets(
+            df.withColumn("_lsn", F.lit(v).cast("long"))
+            .withColumn("_deleted", F.lit(False))
+            .withColumn("_bucket", t.bucket_expr())
+        )
+    return t
+
+
 def capture_reads(spark) -> dict[str, str]:
     """{read-path name: plan} on a table holding both merge-on-read and
     resolved buckets."""
@@ -153,6 +214,7 @@ def capture_reads(spark) -> dict[str, str]:
             "read_range": t.read_range("_lsn", lo, hi),
             "read_buckets_raw": t.read_buckets(list(range(t.n_buckets))),
             "read_buckets_mor_resolved": t.read_buckets(mor[:4], resolve=True),
+            "read_evolved": evolved_table(spark, os.path.join(tmp, "evolved")).read(),
         }
         return {k: _mask(_explain(spark, df), tmp) for k, df in dfs.items()}
 
