@@ -15,7 +15,7 @@ to Spark-first subcommands:
     retention         expire old snapshots + vacuum orphan data files
     changelog         snapshot-diff change feed between two table versions
                       (--format debezium-json: replica-fan-out envelopes)
-    emit-changelog    deferred span emission (everything since last emit)
+    emit-changelog    span emission (everything since the last emitted span)
     curate            documents parquet -> deduped/filtered/split corpus
     package           build the --py-files zip for spark-submit
 

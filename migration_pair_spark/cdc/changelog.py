@@ -29,12 +29,17 @@ Scale shape:
   ``schema_from``), so before/after images always align by name; columns
   added between the versions read as null in the before-image.
 
-When to emit (measured, scripts/soak.py): per-batch emission is cheap under
-COW (the merge materializes both images anyway) but under MERGE-ON-READ the
-before-image read re-resolves the touched buckets' accumulated deltas —
-~2x total cost at 10 batches and growing with delta depth. For MOR
-steady-state, emit on compaction boundaries or on demand: the feed is a pure
-function of two immutable snapshots, so NOTHING is lost by deferring.
+One emission rule (:func:`emit_span`): every feed written for a
+subscription is a span from the feed's own durable high-water mark to the
+table's current version, so the spans chain with no gap whatever committed
+between two emissions — a purge, a compaction, another writer, a crash
+window. Only WHEN a span is cut varies (``CdcPipeline.changelog_emit``;
+measured, scripts/soak.py): after every batch is cheap under COW (the merge
+materializes both images anyway) but under MERGE-ON-READ the before-image
+read re-resolves the touched buckets' accumulated deltas — ~2x total cost at
+10 batches and growing with delta depth. For MOR steady-state, cut spans at
+compaction boundaries or on demand: the feed is a pure function of two
+immutable snapshots, so NOTHING is lost by deferring.
 """
 
 from __future__ import annotations
@@ -157,7 +162,7 @@ def apply_changes(state: DataFrame, feed: DataFrame, key: str) -> DataFrame:
 def last_emitted_version(out_dir: str) -> int | None:
     """Highest ``v_to`` among completed feed directories — the feed's own
     durable high-water mark (derived from the _DONE markers, never from
-    writer memory, so deferred emission has NO crash window: a death at any
+    writer memory, so span emission has NO crash window: a death at any
     point leaves the span open and the next emission re-covers it)."""
     import glob
 
@@ -172,31 +177,45 @@ _BASE_MARKER = "_BASE"
 
 
 def ensure_subscription_base(out_dir: str, version: int) -> int:
-    """Record (once) the table version at which this feed directory started
-    subscribing; returns the recorded base. Span emission diffs from
-    max(last emitted, base) so a feed attached to an existing table starts
-    at its attach point — the same semantics per-batch emission gets from
-    each batch's ``table_version_before``."""
-    os.makedirs(out_dir, exist_ok=True)
+    """The version the feed's next span starts at: its high-water mark
+    (:func:`last_emitted_version`) once a span exists, else the base
+    recorded by the first call (``version``, the table version at which
+    this feed directory started subscribing). Writers call it BEFORE their
+    first commit, so a feed attached to an existing table starts at its
+    attach point and a death between that commit and the first emission
+    loses nothing."""
+    last = last_emitted_version(out_dir)
+    if last is not None:
+        return last
     p = os.path.join(out_dir, _BASE_MARKER)
     if os.path.exists(p):
         with open(p) as f:
             return int(f.read().strip())
+    os.makedirs(out_dir, exist_ok=True)
     with open(p, "w") as f:
         f.write(str(version))
     return version
 
 
 def emit_span(table: LakeTable, out_dir: str) -> str | None:
-    """Deferred (compaction-aligned / on-demand) emission: materialize ONE
-    feed covering (last emitted | subscription base) -> current version.
+    """The one emission rule: materialize ONE feed covering the feed's
+    high-water mark (last emitted | subscription base) -> current version.
+    Every automatic emission (``CdcPipeline`` after a batch or a
+    compaction), ``emit_changelog`` and the CLI ``emit-changelog`` go
+    through it, so spans chain with no gap whatever committed in between
+    (a purge, a compaction, a rival writer, a crash window, a policy
+    switch). With no other commit between two batches, a per-batch span is
+    exactly that batch's version pair.
 
-    Cost shape vs per-batch emission under merge-on-read: the before-image
-    snapshot is the previous emission point — compacted, 1 resolved row per
-    key on disk — and the after-image resolves the accumulated deltas ONCE
-    per span instead of once per batch, so per-batch apply walls carry zero
-    changelog work (measured in scripts/soak.py; per-batch MOR emission
-    halved throughput, BENCH/BASELINE.md).
+    The base marker is spent once the first span lands: the spans' _DONE
+    markers carry the high-water mark from then on.
+
+    Cost shape under merge-on-read when spans cover several batches: the
+    before-image snapshot is the previous emission point — compacted, 1
+    resolved row per key on disk — and the after-image resolves the
+    accumulated deltas ONCE per span instead of once per batch (measured in
+    scripts/soak.py; per-batch MOR emission halved throughput,
+    BENCH/BASELINE.md).
 
     Feed semantics: a span feed collapses intermediate churn (an insert
     then delete of the same key inside one span emits nothing) — by design:
@@ -205,11 +224,14 @@ def emit_span(table: LakeTable, out_dir: str) -> str | None:
     the per-batch feeds (pinned in tests/test_changelog.py)."""
     table.refresh()
     v_to = table.version
-    last = last_emitted_version(out_dir)
-    v_from = last if last is not None else ensure_subscription_base(out_dir, v_to)
+    v_from = ensure_subscription_base(out_dir, v_to)
     if v_from >= v_to:
         return None
-    return materialize_changelog(table, out_dir, v_from, v_to)
+    d = materialize_changelog(table, out_dir, v_from, v_to)
+    base = os.path.join(out_dir, _BASE_MARKER)
+    if os.path.exists(base):
+        os.remove(base)
+    return d
 
 
 def materialize_changelog(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from migration_pair_spark.cdc.apply import EPOCH_PROP, apply_cdc_batch
+from migration_pair_spark.cdc.changelog import emit_span, ensure_subscription_base
 from migration_pair_spark.lakehouse.table import (
     AddColumn,
     LakeTable,
@@ -108,19 +109,24 @@ class CdcPipeline:
     # (insert/delete/update_before/update_after rows) under this directory
     # (cdc/changelog.py)
     changelog_dir: str | None = None
-    # WHEN to emit the feed (None resolves by write mode):
-    #   "per_batch"  — one feed per committed batch (finest granularity;
-    #                  cheap under COW, whose merge materializes both images
-    #                  anyway; idempotent by version pair, crash-healed)
-    #   "on_compact" — deferred span emission at compaction boundaries (the
-    #                  MOR default: per-batch emission re-resolves the
+    # WHEN to emit the feed (None resolves by write mode). Every emission is
+    # one span from the feed's own high-water mark (its last emitted
+    # version, else the base pinned before the first commit) to the current
+    # version, so it also covers commits that no batch of this pipeline
+    # made (purges, compactions, a rival writer) and a crash gap:
+    #   "per_batch"  — a span after every batch (finest granularity; cheap
+    #                  under COW, whose merge materializes both images
+    #                  anyway; with no other commit in between it is exactly
+    #                  the batch's version pair)
+    #   "on_compact" — a span after each automatic compaction (the MOR
+    #                  default: per-batch emission re-resolves the
     #                  accumulated deltas every batch — measured ~2x total
     #                  cost and growing with delta depth; a span resolves
     #                  them ONCE and its before-image is the previous
     #                  compacted emission point)
     #   "on_demand"  — never automatic; call emit_changelog() explicitly
-    # Span feeds collapse intra-span churn but FOLD to the identical state
-    # as per-batch feeds (tests/test_changelog.py).
+    # Longer spans collapse intra-span churn but FOLD to the identical state
+    # (tests/test_changelog.py).
     changelog_emit: str | None = None
     # Change-stream wire format: "parquet" (canonical columns, FIXTURES F2)
     # or "debezium-json" (JSONL envelope files, sources/debezium.py). Both
@@ -275,21 +281,16 @@ class CdcPipeline:
         never see a line whose LSN is null; an unsplit one leaves them to
         the apply gate."""
         table = self.ensure_table(spark)
-        # Deferred changelog: pin the subscription base BEFORE any commit it
-        # must cover. Pinning after the apply (the previous shape) left a
-        # first-batch crash window — die between the first table commit and
-        # the base write and the restart replays the batch as skipped with a
-        # POST-commit table_version_before, silently dropping the batch from
-        # the feed (review-caught, round 3).
-        if self.changelog_dir is not None and self.changelog_policy != "per_batch":
-            from migration_pair_spark.cdc.changelog import ensure_subscription_base
-
+        # Pin the feed's start BEFORE any commit it must cover: a death
+        # between a commit and its emission then leaves the span open, and
+        # the next emission (from the feed's own high-water mark) covers it.
+        if self.changelog_dir is not None:
             ensure_subscription_base(self.changelog_dir, table.version)
         events = self.normalize(events)
         suppress = self._suppression_keys(table)
 
         def _apply(df: DataFrame, bid: int) -> dict:
-            lineage = apply_cdc_batch(
+            return apply_cdc_batch(
                 table,
                 df,
                 batch_id=bid,
@@ -300,9 +301,8 @@ class CdcPipeline:
                 violations_dir=self.violations_dir,
                 suppress_keys=suppress,
             )
-            self._maybe_changelog(table, lineage)
-            return lineage
 
+        lineage = None
         limit = self.max_events_per_batch
         if limit and limit > 0:
             has_marks = dbz.CORRUPT_COL in events.columns
@@ -347,16 +347,7 @@ class CdcPipeline:
                     # input for the session lifetime (advisor-caught)
                     events.unpersist()
                 applied = [l for l in lineages if not l["skipped"]]
-                # MOR maintenance must run here too: the split path IS the
-                # large-batch path where delta-file accumulation matters most.
-                summary_for_compact = {"skipped": not applied}
-                self._maybe_auto_compact(table, summary_for_compact)
-                return {
-                    **{
-                        k: v
-                        for k, v in summary_for_compact.items()
-                        if k.startswith("auto_compact")
-                    },
+                lineage = {
                     "batch_id": batch_id,
                     "split_into": len(lineages),
                     "skipped": not applied,
@@ -369,69 +360,29 @@ class CdcPipeline:
                     "wall_ms": sum(l["wall_ms"] for l in lineages),
                     "sub_batches": lineages,
                 }
-        lineage = _apply(events, batch_id)
-        self._maybe_auto_compact(table, lineage)
+        if lineage is None:
+            lineage = _apply(events, batch_id)
+        self._after_commit(table, lineage)
         return lineage
 
-    def _maybe_changelog(self, table: LakeTable, lineage: dict) -> None:
-        if self.changelog_dir is None:
+    def _after_commit(self, table: LakeTable, lineage: dict) -> None:
+        """The one post-commit step of a batch (every split sub-commit
+        included): MOR maintenance, then the feed's span from its own
+        high-water mark when the policy emits now — every batch under
+        ``per_batch``, a committed compaction under ``on_compact``. The span
+        covers whatever committed since the last emission (a crash gap, a
+        policy switch, a purge or rival writer's commit), so nothing is
+        skipped between batches."""
+        self._maybe_auto_compact(table, lineage)
+        policy = self.changelog_policy
+        if self.changelog_dir is None or not (
+            policy == "per_batch"
+            or (policy == "on_compact" and "auto_compact_snapshot" in lineage)
+        ):
             return
-        from migration_pair_spark.cdc.changelog import materialize_changelog
-
-        if self.changelog_policy == "per_batch":
-            # A feed that previously ran a DEFERRED policy (e.g. the MOR
-            # default before auto-compaction was turned off, or an explicit
-            # changelog_emit switch) may hold an un-emitted span behind a
-            # _BASE marker; emitting only this batch's pair would strand
-            # that gap forever — last_emitted would jump past it and no
-            # later emission could cover it (review-caught, round 3). Heal
-            # by draining the pending span up to THIS batch's base first.
-            from migration_pair_spark.cdc.changelog import (
-                _BASE_MARKER,
-                last_emitted_version,
-            )
-            import os as _os
-
-            base_marker = _os.path.join(self.changelog_dir, _BASE_MARKER)
-            v_before = lineage.get("table_version_before")
-            if _os.path.exists(base_marker) and v_before is not None:
-                with open(base_marker) as f:
-                    sub_base = int(f.read().strip())
-                v_from = last_emitted_version(self.changelog_dir)
-                v_from = sub_base if v_from is None else max(v_from, sub_base)
-                if v_from < v_before:
-                    materialize_changelog(table, self.changelog_dir, v_from, v_before)
-
-        if self.changelog_policy != "per_batch":
-            # Deferred emission: the subscription base was pinned PRE-commit
-            # in apply_batch; emission happens on compaction
-            # (_maybe_auto_compact) or on demand (emit_changelog).
-            return
-
-        if lineage.get("skipped"):
-            # Crash-window heal: a death between the table commit and the
-            # feed write leaves exactly ONE pair unmaterialized (feeds are
-            # written synchronously after each commit), and the restart
-            # replays that batch as skipped. The CURRENT manifest's lineage
-            # names the missed pair; materialize is idempotent, so in the
-            # common case this is one _DONE stat (review-caught: without
-            # this, the documented 'rerun rebuilds the feed' claim was
-            # false — nothing ever reran it).
-            last = table.lineage
-            if last and last.get("table_version_before") is not None:
-                materialize_changelog(
-                    table,
-                    self.changelog_dir,
-                    last["table_version_before"],
-                    table.version,
-                )
-            return
-        materialize_changelog(
-            table,
-            self.changelog_dir,
-            lineage["table_version_before"],
-            lineage["snapshot_id"],
-        )
+        d = emit_span(table, self.changelog_dir)
+        if d:
+            lineage["changelog_emitted"] = d
 
     def _maybe_auto_compact(self, table: LakeTable, lineage: dict) -> None:
         """MOR maintenance: fold buckets whose delta-file count crossed the
@@ -444,51 +395,16 @@ class CdcPipeline:
             return
         over = [b for b, n in table.files_per_bucket().items() if n > limit]
         if over:
-            version = table.compact(over)
             lineage["auto_compacted_buckets"] = over
-            lineage["auto_compact_snapshot"] = version
-            if self.changelog_dir is not None and self.changelog_policy == "on_compact":
-                from migration_pair_spark.cdc.changelog import emit_span
-
-                d = emit_span(table, self.changelog_dir)
-                if d:
-                    lineage["changelog_emitted"] = d
+            lineage["auto_compact_snapshot"] = table.compact(over)
 
     def emit_changelog(self, spark: SparkSession) -> str | None:
-        """On-demand deferred emission: materialize one feed covering
+        """On-demand emission (:func:`emit_span`): materialize one feed covering
         everything committed since the last emission (or the subscription
         base). Idempotent — emitting twice in a row is a no-op."""
         if self.changelog_dir is None:
             raise ValueError("changelog_dir is not configured")
-        from migration_pair_spark.cdc.changelog import emit_span
-
         return emit_span(self.ensure_table(spark), self.changelog_dir)
-
-    def _handle_malformed(self, batch_df: DataFrame) -> tuple[DataFrame, int]:
-        """Apply the malformed-envelope policy to one debezium micro-batch
-        (the stream carries _corrupt/_raw markers — sources/debezium.py).
-        Returns (the rows to apply, n_malformed). "error" returns the batch
-        still marked: the apply counts the marks in an aggregate it runs
-        anyway (the gate, or a split batch's bounds) and fails before any
-        commit, so a clean batch pays no extra job or parse. "skip" drops
-        the marked rows at no extra job; "dead_letter" runs one bad-rows-only
-        count and write (the corrupt filter pushes to the text scan)."""
-        if self.on_malformed not in ("error", "skip", "dead_letter"):
-            raise ValueError(
-                f"on_malformed must be 'error', 'skip' or 'dead_letter', "
-                f"got {self.on_malformed!r}"
-            )
-        if self.on_malformed == "error":
-            return batch_df, 0
-        n_bad = 0
-        if self.on_malformed == "dead_letter":
-            if not self.dead_letter_dir:
-                raise ValueError("on_malformed='dead_letter' requires dead_letter_dir")
-            n_bad = dbz.dead_letter(batch_df, self.dead_letter_dir)
-        good = batch_df.filter(~F.col(dbz.CORRUPT_COL)).drop(
-            dbz.CORRUPT_COL, dbz.RAW_COL
-        )
-        return good, n_bad
 
     # ------------------------------------------------------------ streaming
 
@@ -507,7 +423,9 @@ class CdcPipeline:
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
             n_malformed = 0
             if self.source_format == "debezium-json":
-                batch_df, n_malformed = self._handle_malformed(batch_df)
+                batch_df, n_malformed = dbz.route_malformed(
+                    batch_df, self.on_malformed, self.dead_letter_dir
+                )
             lineage = self.apply_batch(spark, batch_df, batch_id=batch_id)
             if n_malformed:
                 lineage["rows_malformed"] = n_malformed

@@ -277,15 +277,27 @@ def _history(m: dict, kind: str, path: tuple[str, ...] = ()) -> list[dict]:
     struct column (or the element struct of an ``array<struct>`` column) is
     the container ``(current column name,)``, whose history is the
     ``struct_<kind>`` entries whose column, named as of the entry's own
-    epoch, chases to it. Ops address no deeper container."""
+    epoch, chases to it, from the root add that created the column's
+    current incarnation on (a dropped earlier incarnation's entries describe
+    another struct). Ops address no deeper container."""
     if not path:
         return m.get(kind, [])
     if len(path) > 1:
         return []
+    renames = m["renames"]
+    born = max(
+        (
+            a["at_schema_version"]
+            for a in m.get("adds", [])
+            if _chase(renames, a["name"], a["at_schema_version"]) == path[0]
+        ),
+        default=0,
+    )
     return [
         e
         for e in m.get("struct_" + kind, [])
-        if _chase(m["renames"], e["column"], e["at_schema_version"] - 1) == path[0]
+        if e["at_schema_version"] >= born
+        and _chase(renames, e["column"], e["at_schema_version"] - 1) == path[0]
     ]
 
 

@@ -233,20 +233,39 @@ def read_debezium_jsonl(
     change rows. ``on_malformed``: ``"error"`` raises with a count and a
     few sample lines; ``"skip"`` drops bad lines; ``"dead_letter"`` appends
     their raw text to ``dead_letter_dir`` (required) then drops them."""
+    parsed = parse_debezium(
+        spark.read.text(path), payload_schema, keep_corrupt=True
+    )
+    return route_malformed(parsed, on_malformed, dead_letter_dir, f"under {path}")[0]
+
+
+def route_malformed(
+    parsed: DataFrame,
+    on_malformed: str,
+    dead_letter_dir: str | None,
+    where: str | None = None,
+) -> tuple[DataFrame, int]:
+    """Apply a malformed-line policy to a keep_corrupt parse; returns (the
+    clean rows without the marker columns, n_dead_lettered). ``"error"``
+    raises (:func:`fail_on_malformed`, naming ``where``) when marked rows
+    exist; without ``where`` it returns ``parsed`` unchanged, still marked,
+    so a stream counts the marks in an aggregate it runs anyway instead of
+    paying a job here. ``"skip"`` drops the marked rows; ``"dead_letter"``
+    first appends their raw lines to ``dead_letter_dir`` (required)."""
     if on_malformed not in _MALFORMED_POLICIES:
         raise ValueError(
             f"on_malformed must be one of {_MALFORMED_POLICIES}, got {on_malformed!r}"
         )
-    if on_malformed == "dead_letter" and not dead_letter_dir:
-        raise ValueError("on_malformed='dead_letter' requires dead_letter_dir")
-    parsed = parse_debezium(
-        spark.read.text(path), payload_schema, keep_corrupt=True
-    )
+    n_bad = 0
     if on_malformed == "error":
-        fail_on_malformed(parsed, f"under {path}")
+        if where is None:
+            return parsed, 0
+        fail_on_malformed(parsed, where)
     elif on_malformed == "dead_letter":
-        dead_letter(parsed, dead_letter_dir)  # type: ignore[arg-type]
-    return parsed.filter(~F.col(CORRUPT_COL)).drop(CORRUPT_COL, RAW_COL)
+        if not dead_letter_dir:
+            raise ValueError("on_malformed='dead_letter' requires dead_letter_dir")
+        n_bad = dead_letter(parsed, dead_letter_dir)
+    return parsed.filter(~F.col(CORRUPT_COL)).drop(CORRUPT_COL, RAW_COL), n_bad
 
 
 def fail_on_malformed(parsed: DataFrame, where: str) -> None:
@@ -283,7 +302,7 @@ def stream_debezium_jsonl(
 ) -> DataFrame:
     """Streaming read: envelope JSONL directory -> canonical change rows
     WITH the ``_corrupt``/``_raw`` marker columns retained — the runner's
-    foreachBatch applies the malformed policy per micro-batch (under
+    foreachBatch applies :func:`route_malformed` per micro-batch (under
     ``"error"`` the apply gate's own aggregate counts the marks)."""
     raw = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -6,11 +6,13 @@ resolved-read and compaction walls, and the lineage/interval audit.
 
 Usage: python scripts/soak.py [n_events] [n_batches] [cores] [changelog]
 [changelog_per_batch]. The literal word 'changelog' enables the MOR-default
-compaction-aligned feed emission (changelog_emit='on_compact' — per-batch
-walls carry zero changelog work); 'changelog_per_batch' forces the old
-per-batch emission for contrast (the BENCH/BASELINE.md measured ~2x
-slowdown scenario). Writes everything under /dev/shm and prints one JSON
-line.
+compaction-aligned feed emission (changelog_emit='on_compact': one span per
+automatic compaction, so per-batch walls carry changelog work only when a
+compaction fires); 'changelog_per_batch' cuts a span after every batch
+instead, for contrast (the BENCH/BASELINE.md measured ~2x slowdown
+scenario). Either way each span starts at the feed's high-water mark, so
+``changelog_dirs`` counts the spans. Writes everything under /dev/shm and
+prints one JSON line.
 """
 
 from __future__ import annotations
@@ -89,7 +91,11 @@ def _run(spark, work, n_events, n_batches, with_changelog, per_batch=False):
     # jsonl record is appended before the maintenance pass runs)
     ranges = json.loads(table.properties[RANGES_PROP])
     feed = os.path.join(work, "feed")
-    feed_dirs = sorted(os.listdir(feed)) if os.path.isdir(feed) else []
+    feed_dirs = (
+        [d for d in os.listdir(feed) if d.startswith("v")]
+        if os.path.isdir(feed)
+        else []
+    )
     print(json.dumps({
         "n_events": n_events,
         "n_batches": len(files),

@@ -461,7 +461,7 @@ def test_policy_switch_drains_stranded_deferred_span(spark, tmp_path):
         spark, _events(spark, [(7, "delete", "u/c", 20, None)]), batch_id=2
     )
     dirs = sorted(d for d in os.listdir(out) if d.startswith("v"))
-    assert len(dirs) == 2  # the drained era-1 span + this batch's pair
+    assert len(dirs) == 1  # one span: the stranded era-1 span + this batch
     bounds = [(int(d.split("-v")[0][1:]), int(d.split("-v")[1])) for d in dirs]
     for (_, hi), (lo, _) in zip(bounds, bounds[1:]):
         assert lo == hi  # contiguous chain, no gap
@@ -471,3 +471,78 @@ def test_policy_switch_drains_stranded_deferred_span(spark, tmp_path):
     got = {tuple(r) for r in apply_changes(base, feed, key="url").collect()}
     want = {tuple(r) for r in table.read().collect()}
     assert got == want
+
+
+def _spans(out):
+    dirs = sorted(d for d in os.listdir(out) if d.startswith("v"))
+    return dirs, [(int(d.split("-v")[0][1:]), int(d.split("-v")[1])) for d in dirs]
+
+
+def _assert_feed_reaches_table(spark, table, out, base_version):
+    """The spans chain from ``base_version`` to the table's current version
+    with no gap, and folding them from the base state is the table."""
+    table.refresh()
+    dirs, bounds = _spans(out)
+    assert bounds[0][0] == base_version
+    for (_, hi), (lo, _) in zip(bounds, bounds[1:]):
+        assert lo == hi  # contiguous chain, no gap
+    assert bounds[-1][1] == table.version
+    feed = spark.read.parquet(*[os.path.join(out, d) for d in dirs])
+    base = table.at_version(base_version, schema_from=table.manifest).read()
+    got = {tuple(r) for r in apply_changes(base, feed, key="url").collect()}
+    assert got == {tuple(r) for r in table.read().collect()}
+    return bounds
+
+
+@pytest.mark.parametrize("rival", [False, True])
+def test_per_batch_feed_covers_commits_between_batches(spark, tmp_path, rival):
+    """A per-batch span starts at the feed's high-water mark, so a commit
+    no batch made (a purge, a rival writer's compaction and purge) lands
+    in the next span instead of falling out of the feed: a purged key must
+    not be resurrected downstream."""
+    out = str(tmp_path / "feed")
+    pipe = CdcPipeline(
+        table_path=str(tmp_path / "t"),
+        n_buckets=8,
+        salt_buckets=8,
+        write_mode="mor" if rival else "cow",
+        changelog_dir=out,
+        changelog_emit="per_batch",
+    )
+    l1 = pipe.apply_batch(spark, _events(spark, BATCH1), batch_id=0)
+    if rival:
+        other = LakeTable.load(spark, pipe.table_path)
+        other.compact()
+        other.purge_keys(["u/a"])
+    else:
+        pipe.purge(spark, ["u/a"])
+    l2 = pipe.apply_batch(
+        spark, _events(spark, [(7, "insert", "u/e", 20, "<p>e1</p>")]), batch_id=1
+    )
+    table = LakeTable.load(spark, pipe.table_path)
+    assert sorted(r.url for r in table.read().collect()) == ["u/b", "u/c", "u/e"]
+    bounds = _assert_feed_reaches_table(
+        spark, table, out, l1["table_version_before"]
+    )
+    assert len(bounds) == 2
+    assert l2["changelog_emitted"].endswith(_spans(out)[0][-1])
+
+
+def test_split_batch_emits_one_span_over_every_sub_commit(spark, tmp_path):
+    out = str(tmp_path / "feed")
+    pipe = CdcPipeline(
+        table_path=str(tmp_path / "t"),
+        n_buckets=8,
+        salt_buckets=8,
+        changelog_dir=out,
+        max_events_per_batch=2,
+    )
+    lin = pipe.apply_batch(spark, _events(spark, BATCH1), batch_id=0)
+    assert lin["split_into"] == 2
+    table = LakeTable.load(spark, pipe.table_path)
+    assert table.version - lin["sub_batches"][0]["table_version_before"] == 2
+    bounds = _assert_feed_reaches_table(
+        spark, table, out, lin["sub_batches"][0]["table_version_before"]
+    )
+    assert len(bounds) == 1
+    assert lin["changelog_emitted"].endswith(_spans(out)[0][0])

@@ -304,6 +304,27 @@ def test_nested_evolution_replay_straddling_restart(spark, tmp_path):
     assert t.evolve_schema([AddStructField("media_meta", "width", "smallint")]) == v
 
 
+def test_struct_field_add_after_column_drop_and_readd_applies(spark, tmp_path):
+    """A struct column's field history starts at the add that created its
+    current incarnation: after the column is dropped and re-added, a field
+    add that only the OLD incarnation recorded is genuine and must apply."""
+    from migration_pair_spark.lakehouse.table import (
+        AddColumn,
+        AddStructField,
+        DropColumn,
+    )
+
+    t = _nested_table(spark, str(tmp_path / "t"))
+    t.evolve_schema([AddStructField("meta", "height", "int")])
+    t.evolve_schema([DropColumn("meta")])
+    t.evolve_schema([AddColumn("meta", "struct<width:int>")])
+    v = t.version
+    assert t.evolve_schema([AddStructField("meta", "height", "int")]) == v + 1
+    assert t.schema["meta"].dataType.simpleString() == "struct<width:int,height:int>"
+    # and it replays as a no-op like any other add
+    assert t.evolve_schema([AddStructField("meta", "height", "int")]) == v + 1
+
+
 def test_nested_rename_chases_toplevel_rename(spark, tmp_path):
     """A struct rename recorded before the COLUMN itself was renamed must
     still reconcile old files onto the final name chain."""
